@@ -170,7 +170,7 @@ def concat_runs(runs: list[bytes], bases_first_docs: list[tuple[int, int]],
 
     ``weight_bits`` must match the encoding of the runs (32 = float32 weights,
     8 = block-quantized uint8 codes); the production phase-2 merge is the
-    inlined variant in index/build._merge_groups, which handles both.
+    inlined variant in index/build.py's posting writer, which handles both.
     """
     wwidth = {32: 4, 8: 1}[weight_bits]
     if len(runs) == 1:

@@ -51,7 +51,7 @@ from light_splade_spark.functions.vbyte import (
 )
 from light_splade_spark.index.manifest import IndexManifest, write_lineage
 from light_splade_spark.partitioning import spread_input
-from light_splade_spark.plans.bm25_sql import B, K1
+from light_splade_spark.plans.bm25_sql import B, K1, bm25_impact_col, idf_col
 from light_splade_spark.plans.stats import with_dense_id
 
 # bump when the on-disk posting blob layout changes (callers may key cache
@@ -336,17 +336,7 @@ def build_dims(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     'dense': df-descending consecutive ids via the scalable Arrow
     zipWithIndex in plans.stats (two extra lightweight jobs).
     """
-    import time as _time
-
     from pyspark.sql import Observation
-
-    _trace = os.environ.get("SPARK_GRAFT_BUILD_TRACE") == "1"
-    _t0 = _time.time()
-
-    def _tr(label: str) -> None:
-        if _trace:
-            print(f"[dims-trace] {label}: {_time.time() - _t0:.2f}s",
-                  flush=True)
 
     per_doc = per_doc_expansion(docs, id_col, text_col, analyzer)
     got = {"sum_dl": None}
@@ -364,21 +354,18 @@ def build_dims(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
             .write.mode("overwrite").parquet(expansion_path)
         got = obs.get
         r0 = {"n": got["n"], "max_doc": got["max_doc"]}
-        _tr("expansion_written")
         per_doc = docs.sparkSession.read.parquet(expansion_path)
     else:
         per_doc = per_doc.cache()
         # light scalars scan: column-pruned count + max id over ALL docs
         r0 = docs.agg(F.count(F.lit(1)).alias("n"),
                       F.max(F.col(id_col)).alias("max_doc")).collect()[0]
-        _tr("scalars")
     if int(r0["n"] or 0) == 0:
         raise ValueError("cannot build an index over an empty corpus")
     if doc_stats_path is not None:
         # thin projection of the materialized expansion — no join, no agg
         per_doc.select("doc_id", "dl").write.mode("overwrite") \
             .parquet(doc_stats_path)
-        _tr("doc_stats_written")
     if got["sum_dl"] is None and (doc_stats_path is not None or compute_avgdl):
         got = {"sum_dl": per_doc.agg(F.sum("dl")).collect()[0][0]}
     dt = _explode_expansion(per_doc)
@@ -396,11 +383,8 @@ def build_dims(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
         terms = with_dense_id(terms, [F.desc("df"), F.asc("term")], "term_id")
     else:
         terms = terms.withColumn("term_id", F.col("tid"))
-    terms = terms.select(
-        "term", "term_id", "tid", "df", "cf",
-        F.log(1.0 + (F.lit(float(scalars["n_docs"])) - F.col("df") + 0.5)
-              / (F.col("df") + 0.5)).alias("idf"),
-    )
+    terms = terms.select("term", "term_id", "tid", "df", "cf",
+                         idf_col(scalars["n_docs"]).alias("idf"))
     return dt, terms, scalars
 
 
@@ -437,11 +421,8 @@ def _impact_dims(weights_df: DataFrame, doc_stats_path: str | None = None):
         .withColumn("cf", F.lit(None).cast("bigint"))
         .withColumn("tid", F.xxhash64("term"))
         .withColumn("term_id", F.col("tid"))
-        .select(
-            "term", "term_id", "tid", "df", "cf",
-            F.log(1.0 + (F.lit(float(scalars["n_docs"])) - F.col("df") + 0.5)
-                  / (F.col("df") + 0.5)).alias("idf"),
-        )
+        .select("term", "term_id", "tid", "df", "cf",
+                idf_col(scalars["n_docs"]).alias("idf"))
     )
     return dt, terms, scalars
 
@@ -480,14 +461,6 @@ def build_index(
     salting, two-phase merge, block-max, resume) is identical; a resumed
     impact build must be given the same ``weights_df`` again.
     """
-    trace = os.environ.get("SPARK_GRAFT_BUILD_TRACE") == "1"
-    _t0 = time.time()
-
-    def _tr(label: str) -> None:
-        if trace:
-            print(f"[build-trace] {label}: {time.time() - _t0:.2f}s",
-                  flush=True)
-
     os.makedirs(index_dir, exist_ok=True)
     if resume and os.path.exists(os.path.join(index_dir, "manifest.json")):
         man = IndexManifest.load(index_dir)
@@ -503,7 +476,7 @@ def build_index(
     else:
         man = None
 
-    doc_stats_future = None
+    ds_pool = doc_stats_future = None
     if weights_df is None:
         expansion_path = os.path.join(index_dir, "_expansion")
         dt, terms, scalars = build_dims(
@@ -523,7 +496,8 @@ def build_index(
             # manifest commits "complete"
             from concurrent.futures import ThreadPoolExecutor
 
-            _ds_pool = ThreadPoolExecutor(max_workers=1)
+            ds_pool = ThreadPoolExecutor(max_workers=1,
+                                         thread_name_prefix="doc_stats")
             _spark_ref = docs.sparkSession
 
             def _write_doc_stats(path=os.path.join(index_dir, "doc_stats"),
@@ -531,133 +505,87 @@ def build_index(
                 (_spark_ref.read.parquet(src).select("doc_id", "dl")
                  .write.mode("overwrite").parquet(path))
 
-            doc_stats_future = _ds_pool.submit(_write_doc_stats)
-            _ds_pool.shutdown(wait=False)
+            doc_stats_future = ds_pool.submit(_write_doc_stats)
+            ds_pool.shutdown(wait=False)
     else:
         dt, terms, scalars = _impact_dims(
             weights_df,
             doc_stats_path=os.path.join(index_dir, "doc_stats") if man is None else None,
         )
         scoring = "impact"
-    if man is None:
-        if n_shards is None:
-            # target ~25k docs per shard: shard count grows with the corpus
-            # (constant per-shard memory), capped to keep tiny corpora sane
-            n_shards = max(4, min(scalars["n_docs"] // 25000, 4096))
-        man = IndexManifest(
-            analyzer_version=analyzer.version, k1=K1, b=B,
-            n_docs=scalars["n_docs"], avgdl=scalars["avgdl"],
-            n_shards=n_shards, n_buckets=n_buckets, run_size=run_size,
-            block_size=block_size, n_shard_groups=n_shard_groups,
-            n_salts=n_salts, weight_bits=weight_bits, scoring=scoring,
-        )
-        man.created_unix = time.time()
-        holder = getattr(analyzer.spark_tokens, "backend_holder", None)
-        if holder is not None:
-            # wp4 family only (the MeCab analyzer has no py/hf backend):
-            # record the backend the tokenizer UDF actually PINNED when its
-            # plan was built (functions/wordpiece.py ships the driver's
-            # decision in the closure); fall back to a fresh resolution
-            # only if no tokenization plan has been constructed yet
-            from light_splade_spark.functions.wordpiece import (
-                resolve_backend_name,
+    try:
+        if man is None:
+            if n_shards is None:
+                # target ~25k docs per shard: shard count grows with the
+                # corpus (constant per-shard memory), capped to keep tiny
+                # corpora sane
+                n_shards = max(4, min(scalars["n_docs"] // 25000, 4096))
+            man = IndexManifest(
+                analyzer_version=analyzer.version, k1=K1, b=B,
+                n_docs=scalars["n_docs"], avgdl=scalars["avgdl"],
+                n_shards=n_shards, n_buckets=n_buckets, run_size=run_size,
+                block_size=block_size, n_shard_groups=n_shard_groups,
+                n_salts=n_salts, weight_bits=weight_bits, scoring=scoring,
             )
-            man.wordpiece_backend = (holder.get("backend")
-                                     or resolve_backend_name())
-        _tr("dims")
-        terms.write.mode("overwrite").parquet(os.path.join(index_dir, "terms"))
-        _tr("terms_written")
-        man.save(index_dir)
-        if getattr(analyzer, "vocab", None):
-            # vocab-driven (wordpiece) analyzer: persist the vocab inside
-            # the index so any process can resolve the tokenizer from the
-            # index dir alone (functions/wordpiece.py)
-            from light_splade_spark.functions.wordpiece import save_vocab
-            save_vocab(index_dir, analyzer)
-    n_shards = man.n_shards
+            man.created_unix = time.time()
+            holder = getattr(analyzer.spark_tokens, "backend_holder", None)
+            if holder is not None:
+                # wp4 family only (the MeCab analyzer has no py/hf backend):
+                # record the backend the tokenizer UDF actually PINNED when
+                # its plan was built (functions/wordpiece.py ships the
+                # driver's decision in the closure); fall back to a fresh
+                # resolution only if no tokenization plan exists yet
+                from light_splade_spark.functions.wordpiece import (
+                    resolve_backend_name,
+                )
+                man.wordpiece_backend = (holder.get("backend")
+                                         or resolve_backend_name())
+            terms.write.mode("overwrite").parquet(
+                os.path.join(index_dir, "terms"))
+            man.save(index_dir)
+            if getattr(analyzer, "vocab", None):
+                # vocab-driven (wordpiece) analyzer: persist the vocab inside
+                # the index so any process can resolve the tokenizer from
+                # the index dir alone (functions/wordpiece.py)
+                from light_splade_spark.functions.wordpiece import save_vocab
+                save_vocab(index_dir, analyzer)
 
-    terms_b = F.broadcast(
-        spark.read.parquet(os.path.join(index_dir, "terms"))
-        .select("term", "term_id", "idf", "df")
-    )
-    avgdl = man.avgdl
-    max_doc = scalars["max_doc"]
-    # df-aware doc-id RANGE salt: only head terms fan out into multiple runs
-    # (ceil(df / run_size), capped at n_salts); tail terms stay single-run so
-    # the run-row count is ~vocab-sized, not vocab*salts. Runs within a
-    # (shard, term) stay disjoint + salt-ordered, so phase 2 merges by
-    # concatenation.
-    n_salts_t = F.least(
-        F.lit(n_salts),
-        F.ceil(F.col("df") / F.lit(float(run_size))).cast("int"),
-    )
-    if scoring == "impact":
-        # impact = the encoder weight, float32 verbatim
-        w_col = F.col("weight").cast("float").alias("w")
-    else:
-        # impact = idf * saturated tf (float32, reference index dtype)
-        w_col = (
-            F.col("idf") * (F.col("tf") * (K1 + 1.0))
-            / (F.col("tf") + K1 * (1.0 - B + B * F.col("dl") / F.lit(avgdl)))
-        ).cast("float").alias("w")
-    posts = (
-        dt.join(terms_b, "term")
-        .select(
-            F.pmod(F.xxhash64("doc_id"), F.lit(n_shards)).cast("int").alias("shard"),
-            F.pmod(F.col("term_id"), F.lit(n_buckets)).cast("int").alias("bucket"),
-            "term_id",
-            "doc_id",
-            w_col,
-            F.floor(F.col("doc_id") * n_salts_t / F.lit(max_doc + 1))
-            .cast("int").alias("salt"),
-        )
-    )
-
-    shards_per_group = (n_shards + n_shard_groups - 1) // n_shard_groups
-    wb = man.weight_bits
-
-    # named function, not functools.partial: applyInPandas warns ("cannot
-    # infer eval type") on partials, polluting every build log
-    def phase1(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _encode_groups(pdf, block_size=block_size, weight_bits=wb)
-    for group in range(n_shard_groups):
-        if group in man.completed_groups:
-            continue
-        lo, hi = group * shards_per_group, min((group + 1) * shards_per_group, n_shards)
-        if lo >= hi:
+        terms_b = F.broadcast(
+            spark.read.parquet(os.path.join(index_dir, "terms"))
+            .select("term", "term_id", "idf", "df"))
+        # impact: the encoder weight verbatim, or idf * saturated tf
+        # (float32, the reference index dtype)
+        w_col = (F.col("weight").cast("float") if scoring == "impact"
+                 else bm25_impact_col(man.avgdl))
+        posts = dt.join(terms_b, "term").select(
+            "doc_id", "term_id", w_col.alias("w"), "df")
+        n_shards = man.n_shards
+        shard = _shard_col(n_shards)
+        shards_per_group = (n_shards + n_shard_groups - 1) // n_shard_groups
+        for group in range(n_shard_groups):
+            if group in man.completed_groups:
+                continue
+            lo = group * shards_per_group
+            hi = min((group + 1) * shards_per_group, n_shards)
+            if lo < hi:
+                write_posting_group(
+                    posts.where((shard >= lo) & (shard < hi)),
+                    os.path.join(index_dir, "postings",
+                                 f"shard_group={group}"),
+                    man, n_docs=scalars["n_docs"],
+                    max_doc=scalars["max_doc"], t0=time.time())
             man.completed_groups.append(group)
             man.save(index_dir)
-            continue
-        t0 = time.time()
-        gposts = posts.where((F.col("shard") >= lo) & (F.col("shard") < hi))
-        runs = gposts.groupBy("shard", "bucket", "salt").applyInPandas(
-            phase1, RUN_SCHEMA)
-        final = runs.groupBy("shard", "bucket").applyInPandas(
-            _merge_groups, POSTING_SCHEMA)
-        out_dir = os.path.join(index_dir, "postings", f"shard_group={group}")
-        # coalesce to one writer task per bucket dir before the partitioned
-        # write: without this every shuffle task writes every bucket ->
-        # O(tasks * buckets) tiny files and a long driver-side commit
-        # sortWithinPartitions(term_id): clusters each bucket file's row
-        # groups by term id, so interactive queries' parquet min/max
-        # pruning skips most row groups (the isin route); negligible cost —
-        # the per-bucket rows are already in one task
-        (final.repartition(n_buckets, "bucket")
-         .sortWithinPartitions("term_id", "shard")  # total order: stable bytes
-         .write.mode("overwrite").partitionBy("bucket").parquet(out_dir))
-        _tr(f"group{group}_postings_written")
-        # lineage + metrics per (shard, bucket) partition of this group.
-        # Explicit schema: a shard group whose doc range holds no postings
-        # (tiny corpora, sparse tails) writes zero data files, and
-        # schema inference would fail on the empty directory
-        written = spark.read.schema(POSTING_SCHEMA).parquet(out_dir)
-        lineage = collect_partition_lineage(written, t0, analyzer.version)
-        write_lineage(index_dir, group, lineage)
-        _tr(f"group{group}_lineage_done")
-        man.completed_groups.append(group)
-        man.save(index_dir)
-        if fail_after_group is not None and group >= fail_after_group:
-            raise RuntimeError(f"simulated crash after shard group {group}")
+            if fail_after_group is not None and group >= fail_after_group:
+                raise RuntimeError(
+                    f"simulated crash after shard group {group}")
+    except BaseException:
+        if ds_pool is not None:
+            # no doc_stats writer may outlive a failed build: cancel it if
+            # it never started, else join it. Its own error stays on the
+            # future and never masks the exception re-raised here.
+            ds_pool.shutdown(wait=True, cancel_futures=True)
+        raise
     if doc_stats_future is not None:
         # doc_stats must be on disk before the manifest says "complete"
         # (target-restriction and compaction read it); propagate any write
@@ -677,6 +605,81 @@ def build_index(
     else:
         dt.unpersist()
     return man
+
+
+def _shard_col(n_shards: int):
+    """Document sharding: shard = pmod(xxhash64(doc_id), n_shards)."""
+    return F.pmod(F.xxhash64("doc_id"), F.lit(n_shards)).cast("int")
+
+
+def write_posting_group(posts: DataFrame, out_dir: str, man: IndexManifest,
+                        *, n_docs: int, max_doc: int, t0: float,
+                        **lineage_extra) -> None:
+    """Encode ``posts`` (doc_id, term_id, w, df) into the posting group at
+    ``out_dir`` (``<index>/postings/shard_group=<name>``) and record its
+    per-(shard, bucket) lineage — the one posting writer that build, append
+    and compact share, under the manifest's layout knobs.
+
+    ``df`` sizes the df-aware doc-id RANGE salt: a term fans out into
+    ceil(df / run_size) runs (capped at n_salts), so only head terms split
+    and the run-row count stays ~vocab-sized. Runs within a (shard, term)
+    are disjoint and salt-ordered, so phase 2 merges by concatenation.
+
+    Fused vs staged is decided here from ``n_docs`` (the docs behind
+    ``posts``, an upper bound on every df): at ``n_docs <= run_size`` every
+    term has ONE salt, so a (shard, bucket, salt) group is a whole
+    (shard, bucket) slice and phase 2 only wraps single runs. Then both
+    kernels run in one ``applyInPandas`` over one shuffle, producing the
+    same rows byte for byte. Larger inputs take the staged salted path —
+    the skew guard for head terms."""
+    n_salts_t = F.least(
+        F.lit(man.n_salts),
+        F.ceil(F.col("df") / F.lit(float(man.run_size))).cast("int"))
+    keyed = posts.select(
+        _shard_col(man.n_shards).alias("shard"),
+        F.pmod(F.col("term_id"), F.lit(man.n_buckets)).cast("int")
+        .alias("bucket"),
+        "term_id", "doc_id", "w",
+        F.floor(F.col("doc_id") * n_salts_t / F.lit(int(max_doc) + 1))
+        .cast("int").alias("salt"),
+    )
+    bs, wb = man.block_size, man.weight_bits
+
+    # named functions, not functools.partial: applyInPandas warns ("cannot
+    # infer eval type") on partials, polluting every build log
+    def encode(pdf: pd.DataFrame) -> pd.DataFrame:
+        return _encode_groups(pdf, block_size=bs, weight_bits=wb)
+
+    def encode_merge(pdf: pd.DataFrame) -> pd.DataFrame:
+        return _merge_groups(encode(pdf))
+
+    if n_docs <= man.run_size:  # every salt is 0
+        final = keyed.groupBy("shard", "bucket").applyInPandas(
+            encode_merge, POSTING_SCHEMA)
+    else:
+        final = keyed.groupBy("shard", "bucket", "salt").applyInPandas(
+            encode, RUN_SCHEMA,
+        ).groupBy("shard", "bucket").applyInPandas(_merge_groups,
+                                                    POSTING_SCHEMA)
+    # one writer task per bucket dir (without the repartition every shuffle
+    # task writes every bucket -> O(tasks * buckets) tiny files), rows
+    # sorted by term id so each bucket file's row groups cluster by term and
+    # parquet min/max pruning skips most of them on the isin query route;
+    # (term_id, shard) is a total order, so the bytes are stable. The sort
+    # must LEAD with the partitionBy column: the write requires an ordering
+    # on bucket, and a local sort that does not start with it is replaced
+    # by a plain sort on bucket, losing the term order
+    (final.repartition(man.n_buckets, "bucket")
+     .sortWithinPartitions("bucket", "term_id", "shard")
+     .write.mode("overwrite").partitionBy("bucket").parquet(out_dir))
+    # explicit schema: a group whose doc range holds no postings (tiny
+    # corpora, sparse tails, fully tombstoned compactions) writes zero data
+    # files, and schema inference would fail on the empty directory
+    written = posts.sparkSession.read.schema(POSTING_SCHEMA).parquet(out_dir)
+    lineage = collect_partition_lineage(written, t0, man.analyzer_version,
+                                        **lineage_extra)
+    write_lineage(os.path.dirname(os.path.dirname(out_dir)),
+                  os.path.basename(out_dir).split("=", 1)[1], lineage)
 
 
 def collect_partition_lineage(written: DataFrame, t0: float,

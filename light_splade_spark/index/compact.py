@@ -10,14 +10,14 @@ thousands of micro-batches the read amplification and file-count creep
 are the classic LSM problem, and this is the classic LSM answer: rewrite
 the live groups into a single new group and atomically swap liveness.
 
-Mechanism (no new encode machinery — the build's own kernels re-run over
+Mechanism (no new encode machinery — the build's own writer re-runs over
 decoded rows):
 
 1. ``decode_postings`` (join_scorer) explodes every LIVE posting row back
    to (term_id, doc_id, w) — distributed, Arrow-batched;
-2. the build's phase-1/phase-2 kernels (``_encode_groups`` /
-   ``_merge_groups``) re-encode them under the manifest's own
-   block_size/weight_bits into ``postings/shard_group=compact-<epoch>``;
+2. ``write_posting_group`` (index/build.py), the one posting writer build
+   and append also use, re-encodes them under the manifest's own layout
+   into ``postings/shard_group=compact-<epoch>`` and records its lineage;
 3. **commit = one atomic manifest write**: ``live_groups`` flips to the
    new group (IndexManifest.save is tmp+os.replace). Readers
    (read_postings and the wand local path) filter partitions to
@@ -44,18 +44,11 @@ import os
 import shutil
 import time
 
-import pandas as pd
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-from light_splade_spark.index.build import (
-    POSTING_SCHEMA,
-    RUN_SCHEMA,
-    _encode_groups,
-    _merge_groups,
-    collect_partition_lineage,
-)
-from light_splade_spark.index.manifest import IndexManifest, write_lineage
+from light_splade_spark.index.build import read_terms, write_posting_group
+from light_splade_spark.index.manifest import IndexManifest
 
 
 def live_group_names(index_dir: str, man: IndexManifest) -> list[str]:
@@ -115,50 +108,23 @@ def compact_index(spark: SparkSession, index_dir: str, gc: bool = True,
     from light_splade_spark.index.join_scorer import decode_postings
     decoded = decode_postings(spark, index_dir, live_groups=decoded_groups)
 
-    max_doc = spark.read.parquet(os.path.join(index_dir, "doc_stats")) \
-        .agg(F.max("doc_id")).collect()[0][0]
-    # df-aware salt count, same as the build: rare terms get ONE doc-range
-    # slice, only df > run_size terms split across salts — keeps phase-1
-    # run rows ~vocab-sized instead of vocab*n_salts. The terms dim's df is
-    # build-time (stale under appends/deletes) but salt assignment only
-    # partitions work — any value is CORRECT, phase 2 merges the runs;
-    # left join + coalesce(df, 1) so a term missing from the dim (cannot
-    # normally happen) still keeps its postings.
-    from light_splade_spark.index.build import read_terms
+    # doc count and max id in one aggregate: the count (appends included)
+    # bounds every df in the terms dim, which is what the writer's fuse
+    # rule needs; max(doc_id) spans the salt's doc-id range
+    n_docs, max_doc = spark.read.parquet(
+        os.path.join(index_dir, "doc_stats")
+    ).agg(F.count(F.lit(1)), F.max("doc_id")).collect()[0]
+    # the terms dim's df is build-time (stale under appends/deletes) but it
+    # only sizes the salt, and any salt is CORRECT — phase 2 merges the
+    # runs; left join + coalesce(df, 1) so a term missing from the dim
+    # (cannot normally happen) still keeps its postings
     tdf = F.broadcast(read_terms(spark, index_dir).select("term_id", "df"))
-    n_salts_t = F.least(
-        F.lit(man.n_salts),
-        F.ceil(F.coalesce(F.col("df"), F.lit(1))
-               / F.lit(float(man.run_size))).cast("int"))
     posts = decoded.join(tdf, "term_id", "left").select(
-        F.pmod(F.xxhash64("doc_id"), F.lit(man.n_shards)).cast("int")
-        .alias("shard"),
-        F.pmod(F.col("term_id"), F.lit(man.n_buckets)).cast("int")
-        .alias("bucket"),
-        "term_id", "doc_id", "w",
-        F.floor(F.col("doc_id") * n_salts_t / F.lit(int(max_doc) + 1))
-        .cast("int").alias("salt"),
-    )
-
-    bs, wb = man.block_size, man.weight_bits
-
-    def phase1(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _encode_groups(pdf, block_size=bs, weight_bits=wb)
-
-    runs = posts.groupBy("shard", "bucket", "salt").applyInPandas(
-        phase1, RUN_SCHEMA)
-    final = runs.groupBy("shard", "bucket").applyInPandas(
-        _merge_groups, POSTING_SCHEMA)
-    out_dir = os.path.join(index_dir, "postings", f"shard_group={group}")
-    (final.repartition(man.n_buckets, "bucket")
-     .sortWithinPartitions("term_id", "shard")
-     .write.mode("overwrite").partitionBy("bucket").parquet(out_dir))
-
-    written = spark.read.schema(POSTING_SCHEMA).parquet(out_dir)
-    lineage = collect_partition_lineage(
-        written, t0, man.analyzer_version,
-        compacted_from=live_group_names(index_dir, man))
-    write_lineage(index_dir, group, lineage)
+        "doc_id", "term_id", "w", F.coalesce("df", F.lit(1)).alias("df"))
+    write_posting_group(
+        posts, os.path.join(index_dir, "postings", f"shard_group={group}"),
+        man, n_docs=n_docs, max_doc=max_doc, t0=t0,
+        compacted_from=decoded_groups)
 
     # terms-dim rewrite: appends accumulate one small parquet file per
     # batch on the terms dir; fold them into one coalesced dir (content

@@ -35,11 +35,22 @@ def idf_col(n_docs: int):
     return F.log(1.0 + (F.lit(float(n_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5))
 
 
+def _saturation_denominator(avgdl: float):
+    return F.col("tf") + K1 * (1.0 - B + B * F.col("dl") / F.lit(float(avgdl)))
+
+
 def bm25_weight_col(avgdl: float):
     """tf * (k1+1) / (tf + k1 * (1 - b + b * dl/avgdl)) — term saturation."""
-    return (F.col("tf") * (K1 + 1.0)) / (
-        F.col("tf") + K1 * (1.0 - B + B * F.col("dl") / F.lit(float(avgdl)))
-    )
+    return (F.col("tf") * (K1 + 1.0)) / _saturation_denominator(avgdl)
+
+
+def bm25_impact_col(avgdl: float):
+    """float32 posting impact idf * tf*(k1+1) / (tf + k1*(1-b+b*dl/avgdl))
+    over (idf, tf, dl) columns — what build and append store per posting.
+    Evaluated as (idf * numerator) / denominator, NOT idf * weight: the
+    operation order fixes the float32 bits every index already holds."""
+    return (F.col("idf") * (F.col("tf") * (K1 + 1.0))
+            / _saturation_denominator(avgdl)).cast("float")
 
 
 def score_bm25(

@@ -7,7 +7,11 @@ contract exactly:
 
 * ``append_batch`` builds postings for the new docs only and writes them as a
   NEW ``shard_group=append-...`` directory — existing groups are immutable
-  (idempotent partition writes, the checkpoint-resume property holds).
+  (idempotent partition writes, the checkpoint-resume property holds). The
+  group goes through ``write_posting_group`` (index/build.py), the same
+  posting writer the build and compaction use, so appended groups share the
+  build's layout; a micro-batch of at most ``run_size`` docs takes its
+  fused single-shuffle path.
 * Corpus statistics are FROZEN at initial build time (N, avgdl, per-term
   idf), as in the reference where the encoder's weights don't change when
   docs are added. Terms unseen at build time get idf from the frozen N and
@@ -31,15 +35,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from light_splade_spark.functions.analyzers import doc_terms, get_analyzer
-from light_splade_spark.index.build import (
-    POSTING_SCHEMA,
-    RUN_SCHEMA,
-    _encode_groups,
-    _merge_groups,
-    collect_partition_lineage,
-)
-from light_splade_spark.index.manifest import IndexManifest, write_lineage
-from light_splade_spark.plans.bm25_sql import B, K1
+from light_splade_spark.index.build import write_posting_group
+from light_splade_spark.index.manifest import IndexManifest
+from light_splade_spark.plans.bm25_sql import bm25_impact_col, idf_col
 
 # Query batches above this size route to the distributed join scorer
 # instead of collecting to the driver for the WAND kernel (the join
@@ -108,14 +106,13 @@ def append_batch(spark: SparkSession, index_dir: str, docs: DataFrame,
         # reference likewise freezes encoder/stats at build time)
         return (
             batch_terms.join(known_terms.select("term"), "term", "left_anti")
+            .withColumnRenamed("bdf", "df")
             .select(
-                "term",
-                F.col("bdf").alias("df"),
+                "term", "df",
                 F.lit(None).cast("bigint").alias("cf"),
                 F.xxhash64("term").alias("term_id"),
                 F.xxhash64("term").alias("tid"),
-                F.log(1.0 + (F.lit(float(man.n_docs)) - F.col("bdf") + 0.5)
-                      / (F.col("bdf") + 0.5)).alias("idf"),
+                idf_col(man.n_docs).alias("idf"),
             )
         )
 
@@ -131,57 +128,19 @@ def append_batch(spark: SparkSession, index_dir: str, docs: DataFrame,
     # head term's corpus df (ceil(500k/run_size) ways) would shatter tiny
     # runs for nothing. The initial build's df IS its batch df (batch =
     # corpus), so this is the same rule at every lifecycle stage.
-    n_salts_t = F.least(
-        F.lit(man.n_salts),
-        F.ceil(F.col("bdf") / F.lit(float(man.run_size))).cast("int"))
     max_doc_b, batch_n = docs.agg(
         F.max(id_col), F.count(F.lit(1))).collect()[0]
     posts = (
         dt.join(terms_b, "term")
         .join(F.broadcast(batch_terms), "term")
-        .select(
-            F.pmod(F.xxhash64("doc_id"), F.lit(man.n_shards)).cast("int").alias("shard"),
-            F.pmod(F.col("term_id"), F.lit(man.n_buckets)).cast("int").alias("bucket"),
-            "term_id",
-            "doc_id",
-            (
-                F.col("idf") * (F.col("tf") * (K1 + 1.0))
-                / (F.col("tf") + K1 * (1.0 - B + B * F.col("dl") / F.lit(man.avgdl)))
-            ).cast("float").alias("w"),
-            F.floor(F.col("doc_id") * n_salts_t / F.lit(int(max_doc_b) + 1))
-            .cast("int").alias("salt"),
-        )
+        .select("doc_id", "term_id", bm25_impact_col(man.avgdl).alias("w"),
+                F.col("bdf").alias("df"))
     )
-    # a NAMED function (not functools.partial): applyInPandas infers the
-    # eval type from the callable and warns on partials — same pattern as
-    # index/wand.py's query kernel
-    def encode_kernel(pdf):
-        return _encode_groups(pdf, block_size=man.block_size,
-                              weight_bits=man.weight_bits)
-
-    if int(batch_n) <= man.run_size:
-        # every term's batch df <= run_size -> n_salts_t = 1 for all
-        # terms, so the salt groupBy would be a no-op partitioning and
-        # phase-2 would merge single-run terms. Fuse both kernels into
-        # ONE shuffle: encode the (shard,bucket) slice, then run the
-        # merge on its output in-process (identity for single runs, so
-        # output bytes are identical to the staged path — asserted in
-        # test_compact). Micro-batch appends pay 1 shuffle, not 2.
-        def fused_kernel(pdf):
-            return _merge_groups(encode_kernel(pdf))
-
-        final = posts.groupBy("shard", "bucket").applyInPandas(
-            fused_kernel, POSTING_SCHEMA)
-    else:
-        runs = posts.groupBy("shard", "bucket", "salt").applyInPandas(
-            encode_kernel, RUN_SCHEMA)
-        final = runs.groupBy("shard", "bucket").applyInPandas(
-            _merge_groups, POSTING_SCHEMA)
     out_dir = os.path.join(index_dir, "postings", f"shard_group=append-{batch_id}")
-    (final.repartition(man.n_buckets, "bucket")
-     .write.mode("overwrite").partitionBy("bucket").parquet(out_dir))
+    write_posting_group(posts, out_dir, man, n_docs=batch_n,
+                        max_doc=max_doc_b, t0=t0, append_batch=batch_id)
 
-    # doc_stats append + lineage — dl comes from the already-cached dt
+    # doc_stats append — dl comes from the already-cached dt
     # (re-running doc_tokens would tokenize the whole batch a second time,
     # the measured hot path); zero-token docs are absent from dt, so the
     # left join restores them with dl=0, one output row per input row
@@ -190,10 +149,6 @@ def append_batch(spark: SparkSession, index_dir: str, docs: DataFrame,
      .join(dls, "doc_id", "left")
      .select("doc_id", F.coalesce("dl", F.lit(0)).cast("int").alias("dl"))
      .write.mode("append").parquet(os.path.join(index_dir, "doc_stats")))
-    written = spark.read.schema(POSTING_SCHEMA).parquet(out_dir)
-    lineage = collect_partition_lineage(written, t0, analyzer.version,
-                                        append_batch=batch_id)
-    write_lineage(index_dir, f"append-{batch_id}", lineage)
     if _pre_register_hook is not None:
         # test seam: the group dir is fully written but not yet registered
         # as live — where a racing compaction's commit + GC would land

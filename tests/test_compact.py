@@ -137,41 +137,73 @@ def test_crash_after_commit_before_gc(spark, tmp_path):
     assert _results(spark, idx) == before
 
 
+def _set_run_size(idx, run_size):
+    man = IndexManifest.load(idx)
+    man.run_size = run_size
+    man.save(idx)
+
+
 def test_append_fused_path_byte_identical_to_staged(spark, tmp_path):
-    """Micro-batch appends (batch_n <= run_size) take a fused single-shuffle
-    encode+merge kernel; batches above run_size take the staged two-phase
-    salted path. Same batch through both must produce byte-identical
-    posting rows (blobs, block metadata, df, max_w)."""
-    import shutil
+    """Build, append and compact all write through write_posting_group,
+    which fuses encode+merge into ONE shuffle when the input holds at most
+    run_size docs, and takes the staged two-phase salted path otherwise.
+    The same input through both paths must produce byte-identical posting
+    rows (blobs, block metadata, df, max_w) for every writer. The staged
+    copy runs with run_size below the input's doc count (so it stages) but
+    not below any salt-sizing df that could split a term's doc range (so
+    the comparison is at the fuse rule's own premise: one salt per term).
+    Every written bucket file is term_id-sorted (row-group pruning)."""
+    import numpy as np
+    import pyarrow.parquet as pq
 
     docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet") \
         .where(F.col("doc_id") < 200)
-    idx_f = str(tmp_path / "fused")
-    build_index(spark, docs, idx_f, n_shards=2, n_buckets=4, n_salts=4,
-                n_shard_groups=1)
-    idx_s = str(tmp_path / "staged")
-    shutil.copytree(idx_f, idx_s)
-    # force the staged path on the copy: run_size=1 makes any batch "big"
-    # and salts every term ceil(bdf/1)-ways (capped at n_salts=4)
-    man = IndexManifest.load(idx_s)
-    man.run_size = 1
-    man.save(idx_s)
-
     app = spark.read.parquet("/root/testdata/sf0.01/documents.parquet") \
         .where((F.col("doc_id") >= 200) & (F.col("doc_id") < 240))
-    append_batch(spark, idx_f, app, "ab")
-    append_batch(spark, idx_s, app, "ab")
+    layout = dict(n_shards=2, n_buckets=4, n_salts=4, n_shard_groups=1)
+    idx_f, idx_s = str(tmp_path / "fused"), str(tmp_path / "staged")
+    build_index(spark, docs, idx_f, **layout)
+    max_df = spark.read.parquet(os.path.join(idx_f, "terms")) \
+        .agg(F.max("df")).first()[0]
+    assert max_df < 200  # run_size=max_df stages the 200-doc build
+    build_index(spark, docs, idx_s, run_size=max_df, **layout)
 
-    def _rows(idx):
+    def _rows(idx, group):
         df = spark.read.parquet(
-            os.path.join(idx, "postings", "shard_group=append-ab"))
+            os.path.join(idx, "postings", f"shard_group={group}"))
         return sorted(
             (r.shard, r.bucket, r.term_id, r.df, r.max_w,
              bytes(r.postings), tuple(r.bm_last), tuple(r.bm_max))
             for r in df.collect())
 
-    rf, rs = _rows(idx_f), _rows(idx_s)
-    assert rf == rs and len(rf) > 0
+    def _assert_identical_and_term_sorted(group):
+        rf, rs = _rows(idx_f, group), _rows(idx_s, group)
+        assert rf == rs and len(rf) > 0, group
+        for idx in (idx_f, idx_s):
+            gdir = os.path.join(idx, "postings", f"shard_group={group}")
+            files = [os.path.join(d, f) for d, _, fs in os.walk(gdir)
+                     for f in fs if f.endswith(".parquet")]
+            assert files, gdir
+            for f in files:
+                tids = pq.read_table(f, columns=["term_id"]) \
+                    .column("term_id").to_numpy()
+                assert (np.diff(tids) >= 0).all(), f
+
+    _assert_identical_and_term_sorted("0")
+
+    # append: run_size=1 stages the 40-doc batch and asks every term for
+    # up to n_salts runs, but the batch's ids fill the top doc-id range
+    # bin of [0, max_doc], so each term's runs still land in one salt
+    _set_run_size(idx_s, 1)
+    append_batch(spark, idx_f, app, "ab")
+    append_batch(spark, idx_s, app, "ab")
+    _assert_identical_and_term_sorted("append-ab")
+
+    # compact: 240 doc_stats rows > run_size=max_df >= every dim df
+    _set_run_size(idx_s, max_df)
+    compact_index(spark, idx_f)
+    compact_index(spark, idx_s)
+    _assert_identical_and_term_sorted("compact-1")
     # and the two indexes answer identically end-to-end
     assert _results(spark, idx_f) == _results(spark, idx_s)
 

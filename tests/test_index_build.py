@@ -51,6 +51,48 @@ def test_resume_after_crash_is_byte_identical(spark, docs, tmp_path):
     assert _index_fingerprint(spark, d1) == _index_fingerprint(spark, d2)
 
 
+def test_crash_leaves_no_doc_stats_writer_running(spark, docs, tmp_path,
+                                                  monkeypatch):
+    """The doc_stats projection is written from a driver thread overlapping
+    the posting jobs. A crash in the posting loop must return only once
+    that writer is joined or cancelled, and must surface the crash itself,
+    not the writer's own failure. The writer here outlives the crash (it
+    finishes only after shard group 0 commits) and then fails."""
+    import threading
+    import time
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    d = str(tmp_path / "c")
+    write_parquet = DataFrameWriter.parquet
+
+    def group0_committed():
+        try:
+            return 0 in IndexManifest.load(d).completed_groups
+        except FileNotFoundError:  # writer starts before the manifest
+            return False
+
+    def late_failing_doc_stats(self, path, *args, **kwargs):
+        if not path.endswith("doc_stats"):
+            return write_parquet(self, path, *args, **kwargs)
+        deadline = time.time() + 120
+        while not group0_committed() and time.time() < deadline:
+            time.sleep(0.05)
+        time.sleep(1.0)
+        raise OSError("doc_stats writer failed")
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", late_failing_doc_stats)
+    before = set(threading.enumerate())
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        build_index(spark, docs, d, n_shards=4,
+                    n_buckets=8, n_salts=4, n_shard_groups=4,
+                    fail_after_group=0)
+    leftover = [t.name for t in threading.enumerate()
+                if t not in before and t.is_alive()
+                and t.name.startswith(("doc_stats", "ThreadPoolExecutor"))]
+    assert leftover == []
+
+
 def test_build_deterministic_across_runs(spark, docs, tmp_path):
     d1, d2 = str(tmp_path / "r1"), str(tmp_path / "r2")
     for d in (d1, d2):
