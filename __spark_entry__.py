@@ -142,7 +142,7 @@ def q_wand_point(spark, sf_dir):
     """Interactive point-query route (VERDICT r4 item 6): <=4 queries take
     the driver-local fast path — same shard kernel over a pyarrow
     filtered read of exactly the query terms' posting rows, no Spark job
-    (index/wand.py:_wand_local). Hash-checked against the same
+    (index/wand.py:score_local). Hash-checked against the same
     float32-impact DuckDB oracle as the distributed plan, so both routes
     carry a CORRECTNESS row."""
     from light_splade_spark.index.wand import wand_topk

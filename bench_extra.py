@@ -4,7 +4,8 @@ A/B micro-benchmarks, and build-phase traces). Usage:
 
     python bench_extra.py suite          # per-op timings, current code
     python bench_extra.py ab             # input-spread A/B per operator
-    python bench_extra.py explain NAME   # print .explain('formatted')
+    python bench_extra.py serve          # multi-process point-query ladder
+    python bench_extra.py serve-worker IDX N  # one serving process
 
 Reads $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
 local[$SPARK_GRAFT_CPUS] like bench.py.
@@ -34,91 +35,70 @@ def _timed(fn):
     return time.time() - t0
 
 
-_SERVE_WORKER = r"""
-# One serving process: the _wand_local path MINUS the Spark result wrap —
-# term ids from the index's terms parquet (read once, pyarrow), posting
-# bytes via the same pyarrow dataset filter (hive bucket pruning + term_id
-# stats), the _score_shard kernel, pandas round/rank. No JVM at all: this
-# is what a serving layer runs per query against an immutable index.
-import json, os, sys, time
-from collections import Counter
-sys.path.insert(0, {root!r})
-import pandas as pd
-import pyarrow as pa
-import pyarrow.dataset as pds
-import pyarrow.parquet as pq
-from light_splade_spark.functions.analyzers import resolve_analyzer
-from light_splade_spark.index.manifest import IndexManifest
-from light_splade_spark.index.wand import _round_half_up, _score_shard
+def _serve_worker(idx: str, n_queries: int) -> None:
+    """One serving process: term ids from the index's terms parquet (read
+    once, pyarrow), then ``score_local`` per query — the tested point-query
+    path of ``wand_topk(local=...)`` with tombstones and the threshold
+    applied, minus the Spark result wrap. No JVM at all: this is what a
+    serving layer runs per query against an immutable index. Prints one
+    JSON line (n, wall, qps, p50, p95)."""
+    from collections import Counter
 
-idx = {idx!r}
-man = IndexManifest.load(idx)
-ana = resolve_analyzer(man.analyzer_version, idx)
-tdir = os.path.join(idx, getattr(man, "terms_dir", "terms"))
-tt = pq.read_table(tdir, columns=["term", "term_id"])
-tmap = dict(zip(tt["term"].to_pylist(), tt["term_id"].to_pylist()))
-part = pds.partitioning(pa.schema([("shard_group", pa.string()),
-                                   ("bucket", pa.int32())]), flavor="hive")
-data = pds.dataset(os.path.join(idx, "postings"), partitioning=part)
-qs = [(i, "t%05d t%05d t%05d" % ((7*i) % 30000, (13*i) % 30000,
-                                 (29*i) % 30000)) for i in range(200)]
+    import pyarrow.parquet as pq
 
-def run(qid, text):
-    counts = Counter(ana.py_tokenize(text))
-    qplan = {{qid: [(tmap[t], c) for t, c in sorted(counts.items())
-                    if t in tmap]}}
-    tids = sorted({{tid for tid, _ in qplan[qid]}})
-    buckets = sorted({{t % man.n_buckets for t in tids}})
-    flt = pds.field("bucket").isin(buckets) & pds.field("term_id").isin(tids)
-    if man.live_groups is not None:
-        flt = flt & pds.field("shard_group").isin(
-            [str(g) for g in man.live_groups])
-    pdf = data.to_table(filter=flt, columns=[
-        "shard", "term_id", "postings", "bm_last", "bm_max"]).to_pandas()
-    parts = [_score_shard(g, qplan=qplan, top_k=10, threshold=0.0,
-                          mode="bmw", target_docs=None,
-                          weight_bits=man.weight_bits,
-                          block_size=man.block_size)
-             for _, g in pdf.groupby("shard", sort=False)]
-    hits = pd.concat(parts, ignore_index=True) if parts else None
-    if hits is None or not len(hits):
-        return 0
-    hits["score"] = hits["score"].map(_round_half_up)
-    hits = hits.sort_values(["qid", "score", "doc_id"],
-                            ascending=[True, False, True], kind="mergesort")
-    return len(hits.head(10))
+    from light_splade_spark.functions.analyzers import resolve_analyzer
+    from light_splade_spark.index.manifest import IndexManifest
+    from light_splade_spark.index.tombstones import load_tombstone_ids
+    from light_splade_spark.index.wand import score_local
 
-run(*qs[0]); run(*qs[1])  # warm: page cache, numpy, dataset machinery
-lat = []
-t_all = time.time()
-for q in qs[2:{n_queries}+2]:
-    t0 = time.time(); run(*q); lat.append(time.time() - t0)
-wall = time.time() - t_all
-lat.sort()
-print(json.dumps({{"n": len(lat), "wall": round(wall, 3),
-                   "qps": round(len(lat) / wall, 2),
-                   "p50": round(lat[len(lat)//2], 4),
-                   "p95": round(lat[min(len(lat)-1, int(len(lat)*0.95))], 4)}}))
-"""
+    man = IndexManifest.load(idx)
+    ana = resolve_analyzer(man.analyzer_version, idx)
+    tt = pq.read_table(os.path.join(idx, getattr(man, "terms_dir", "terms")),
+                       columns=["term", "term_id"])
+    tmap = dict(zip(tt["term"].to_pylist(), tt["term_id"].to_pylist()))
+    excluded = load_tombstone_ids(idx)
+    qs = [(i, "t%05d t%05d t%05d" % ((7 * i) % 30000, (13 * i) % 30000,
+                                     (29 * i) % 30000)) for i in range(200)]
+
+    def run(qid, text):
+        counts = Counter(ana.py_tokenize(text))
+        lst = [(tmap[t], c) for t, c in sorted(counts.items()) if t in tmap]
+        return score_local(idx, {qid: lst}, man, top_k=10, threshold=0.0,
+                           excluded_docs=excluded)
+
+    for q in qs[:2]:  # warm: page cache, numpy, dataset machinery
+        run(*q)
+    lat = []
+    t_all = time.time()
+    for q in qs[2:n_queries + 2]:
+        t0 = time.time()
+        run(*q)
+        lat.append(time.time() - t0)
+    wall = time.time() - t_all
+    lat.sort()
+    print(json.dumps({"n": len(lat), "wall": round(wall, 3),
+                      "qps": round(len(lat) / wall, 2),
+                      "p50": round(lat[len(lat) // 2], 4),
+                      "p95": round(lat[min(len(lat) - 1,
+                                           int(len(lat) * 0.95))], 4)}))
 
 
 def _serve_mode() -> None:
     """VERDICT r6 #3: MULTI-PROCESS point-query serving over one immutable
     index — the r6 thread ladder found the GIL ceiling (2 threads 20.4 qps,
     8 threads 9.2) and asserted (did not measure) that separate processes
-    are the production shape. Spawn 1/2/4/8 serving processes, each running
-    the _wand_local serving path WITHOUT the Spark result wrap (terms
-    parquet -> pyarrow pruned posting read -> _score_shard -> pandas rank;
-    no JVM per query) against a shared 200k-doc wb=8 index; report
-    aggregate qps and per-process p50/p95."""
+    are the production shape. Spawn 1/2/4/8 ``serve-worker`` processes,
+    each running ``index/wand.score_local`` (terms parquet -> pyarrow
+    pruned posting read -> _score_shard -> pandas rank; no JVM per query)
+    against a shared 200k-doc wb=8 index; report aggregate qps and
+    per-process p50/p95."""
     import subprocess
 
     from light_splade_spark.fixtures import make_corpus_df
     from light_splade_spark.index.build import build_index
     from light_splade_spark.session import get_spark
 
-    root = os.path.dirname(os.path.abspath(__file__))
-    corpus = "/tmp/lss_corpus_200k"
+    corpus = os.path.join(tempfile.gettempdir(), "lss_corpus_200k")
     spark = get_spark(app_name="serve-build",
                       extra_conf={"spark.sql.shuffle.partitions": "64"})
     if not os.path.exists(corpus):
@@ -131,8 +111,9 @@ def _serve_mode() -> None:
     out = {"index_docs": 200_000, "weight_bits": 8, "levels": []}
     try:
         for n_proc in (1, 2, 4, 8):
-            code = _SERVE_WORKER.format(root=root, idx=idx, n_queries=150)
-            procs = [subprocess.Popen([sys.executable, "-c", code],
+            procs = [subprocess.Popen([sys.executable,
+                                       os.path.abspath(__file__),
+                                       "serve-worker", idx, "150"],
                                       stdout=subprocess.PIPE,
                                       stderr=subprocess.DEVNULL, text=True)
                      for _ in range(n_proc)]
@@ -158,6 +139,9 @@ def main() -> None:
     mode = sys.argv[1] if len(sys.argv) > 1 else "suite"
     if mode == "serve":
         _serve_mode()
+        return
+    if mode == "serve-worker":
+        _serve_worker(sys.argv[2], int(sys.argv[3]))
         return
     from pyspark.sql import functions as F
 

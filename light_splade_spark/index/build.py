@@ -47,6 +47,7 @@ from light_splade_spark.functions.analyzers import (
 )
 from light_splade_spark.functions.vbyte import (
     _write_varint_scalar,
+    decode_run,
     vbyte_encode_sized,
 )
 from light_splade_spark.index.manifest import IndexManifest, write_lineage
@@ -176,6 +177,23 @@ def _encode_groups(pdf: pd.DataFrame, block_size: int,
         "bm_max": [bm_max_all[a:b].tolist()
                    for a, b in zip(nb_off[:-1], nb_off[1:])],
     })
+
+
+def decode_posting_list(postings: bytes, bm_last, bm_max, weight_bits: int
+                        ) -> tuple[np.ndarray, np.ndarray]:
+    """Inverse of ``_encode_groups`` for one stored posting row -> (doc_ids
+    int64, weights float32). The single read-side decode site: the WAND
+    kernel and the join route both call it. ``weight_bits=8`` codes are
+    dequantized against the per-block maxima; block end positions are
+    recoverable from ``bm_last`` because doc ids are strictly ascending."""
+    docs, ws = decode_run(bytes(postings), weight_bits=weight_bits)
+    if weight_bits == 8:
+        ends = np.searchsorted(docs, np.asarray(bm_last, dtype=np.int64),
+                               side="right")
+        sizes = np.diff(np.concatenate(([0], ends)))
+        scale = np.repeat(np.asarray(bm_max, dtype=np.float32), sizes)
+        ws = (ws.astype(np.float32) / 255.0) * scale
+    return docs, ws
 
 
 def _merge_groups(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -730,6 +748,31 @@ def read_postings(spark: SparkSession, index_dir: str,
         df = df.where(F.col("shard_group").cast("string")
                       .isin([str(g) for g in live_groups]))
     return df
+
+
+def scan_term_postings(spark: SparkSession, index_dir: str,
+                       term_ids: list[int] | DataFrame | None,
+                       n_buckets: int,
+                       live_groups: list[str] | None = None) -> DataFrame:
+    """Posting rows of the given terms (every live row for None): the one
+    term-restricted scan of the WAND and join routes. A literal id list
+    prunes bucket partitions, then filters term_id with an ``isin`` literal
+    (<= 256 ids, keeps parquet min/max pushdown) or a broadcast semi-join
+    (a giant literal costs serial driver-side Catalyst/codegen work). A
+    DataFrame with a ``term_id`` column always takes the semi-join."""
+    posts = read_postings(spark, index_dir, live_groups=live_groups)
+    if term_ids is None:
+        return posts
+    if isinstance(term_ids, DataFrame):
+        tdf = term_ids.select("term_id").distinct()
+        return posts.join(F.broadcast(tdf), "term_id", "left_semi")
+    tids = sorted({int(t) for t in term_ids})
+    posts = posts.where(
+        F.col("bucket").isin(sorted({t % n_buckets for t in tids})))
+    if len(tids) > 256:
+        tdf = spark.createDataFrame([(t,) for t in tids], "term_id BIGINT")
+        return posts.join(F.broadcast(tdf), "term_id", "left_semi")
+    return posts.where(F.col("term_id").isin(tids))
 
 
 def terms_path(index_dir: str) -> str:

@@ -17,7 +17,8 @@ bandwidth-bound text pass that the index exists to avoid):
    top-k. Every stage is a plain shuffle that scales with the cluster; no
    driver-side state grows with the query count.
 
-Scores are Σ qtf * w with w the float32 impact stored at build time —
+Scores are Σ qtf * w with w the float32 impact stored at build time,
+decoded by the same index/build.decode_posting_list the WAND kernel uses —
 identical semantics to index/wand._score_shard (asserted rank-identical in
 tests/test_join_scorer.py), reference ``sparse_retriever.py:78-96``.
 """
@@ -31,8 +32,11 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from light_splade_spark.functions.vbyte import decode_run
-from light_splade_spark.index.build import read_postings, read_terms
+from light_splade_spark.index.build import (
+    decode_posting_list,
+    read_terms,
+    scan_term_postings,
+)
 from light_splade_spark.index.manifest import IndexManifest
 from light_splade_spark.plans.bm25_sql import SCORE_DECIMALS
 
@@ -48,10 +52,10 @@ def decode_postings(
 
     Decodes the compressed posting blobs back to exploded rows (the shape a
     shuffle join wants), restricted to ``term_ids`` when given: a literal
-    list (<=256 — keeps parquet min/max pushdown) or a DataFrame with a
-    ``term_id`` column (broadcast semi-join — the million-query case where
-    the distinct query-term set is itself large). Dequantization matches
-    the WAND kernel bit-for-bit (weight_bits=8 -> block-relative uint8).
+    list (bucket-pruned, see index/build.scan_term_postings) or a DataFrame
+    with a ``term_id`` column (broadcast semi-join — the million-query case
+    where the distinct query-term set is itself large). Dequantization
+    matches the WAND kernel bit-for-bit (same decode_posting_list).
     ``live_groups`` pins the exact shard-group set to read (compactor's
     decode snapshot) instead of re-loading the manifest.
     ``include_tombstoned=True`` skips the tombstone anti-join and returns
@@ -61,38 +65,19 @@ def decode_postings(
     """
     man = IndexManifest.load(index_dir)
     wb = man.weight_bits
-    posts = read_postings(spark, index_dir, live_groups=live_groups)
-    if term_ids is not None:
-        if isinstance(term_ids, DataFrame):
-            tdf = term_ids.select("term_id").distinct()
-            posts = posts.join(F.broadcast(tdf), "term_id", "left_semi")
-        elif len(term_ids) <= 256:
-            buckets = sorted({t % man.n_buckets for t in term_ids})
-            posts = posts.where(F.col("bucket").isin(buckets))
-            posts = posts.where(F.col("term_id").isin(list(term_ids)))
-        else:
-            tdf = spark.createDataFrame([(int(t),) for t in term_ids],
-                                        "term_id BIGINT")
-            posts = posts.join(F.broadcast(tdf), "term_id", "left_semi")
-    posts = posts.select("term_id", "postings", "bm_last", "bm_max")
+    posts = scan_term_postings(
+        spark, index_dir, term_ids, man.n_buckets, live_groups=live_groups,
+    ).select("term_id", "postings", "bm_last", "bm_max")
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             tids_out, docs_out, ws_out = [], [], []
             for r in pdf.itertuples(index=False):
-                docs, ws = decode_run(bytes(r.postings), weight_bits=wb)
-                if wb == 8:
-                    # same dequant as index/wand._score_shard: block end
-                    # positions recovered from bm_last (ids ascending)
-                    bm_last = np.asarray(r.bm_last, dtype=np.int64)
-                    bm_max = np.asarray(r.bm_max, dtype=np.float32)
-                    ends = np.searchsorted(docs, bm_last, side="right")
-                    sizes = np.diff(np.concatenate(([0], ends)))
-                    scale = np.repeat(bm_max, sizes)
-                    ws = (ws.astype(np.float32) / 255.0) * scale
+                docs, ws = decode_posting_list(r.postings, r.bm_last,
+                                               r.bm_max, wb)
                 tids_out.append(np.full(docs.size, r.term_id, dtype=np.int64))
                 docs_out.append(docs)
-                ws_out.append(ws.astype(np.float32, copy=False))
+                ws_out.append(ws)
             if not tids_out:
                 yield pd.DataFrame({"term_id": pd.Series(dtype="int64"),
                                     "doc_id": pd.Series(dtype="int64"),

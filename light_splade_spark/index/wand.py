@@ -39,8 +39,12 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from light_splade_spark.functions.analyzers import resolve_analyzer
-from light_splade_spark.functions.vbyte import decode_run
-from light_splade_spark.index.build import read_postings, read_terms
+from light_splade_spark.index.build import (
+    _block_meta,
+    decode_posting_list,
+    read_terms,
+    scan_term_postings,
+)
 from light_splade_spark.index.manifest import IndexManifest
 from light_splade_spark.plans.bm25_sql import SCORE_DECIMALS
 
@@ -64,97 +68,93 @@ def _score_shard(
     (sparse_indexer.py:163-168) pushed into the kernel instead of filtering
     a full-corpus result. ``excluded_docs`` (sorted int64) removes docs at
     decode time — the tombstone-delete read path (index/tombstones.py)."""
-    raw: dict[int, list] = {}
+    rows: dict[int, list] = {}
     for r in pdf.itertuples(index=False):
-        docs, ws = decode_run(bytes(r.postings), weight_bits=weight_bits)
-        if weight_bits == 8:
-            # dequantize against per-block maxima: block end positions are
-            # recoverable from bm_last (doc ids are strictly ascending)
-            bm_last = np.asarray(r.bm_last, dtype=np.int64)
-            bm_max = np.asarray(r.bm_max, dtype=np.float32)
-            ends = np.searchsorted(docs, bm_last, side="right")
-            sizes = np.diff(np.concatenate(([0], ends)))
-            scale = np.repeat(bm_max, sizes)
-            ws = (ws.astype(np.float32) / 255.0) * scale
+        rows.setdefault(int(r.term_id), []).append(r)
+    decoded: dict[int, tuple] = {}
+    for tid, rs in rows.items():
+        lists = [decode_posting_list(r.postings, r.bm_last, r.bm_max,
+                                     weight_bits) for r in rs]
+        docs, ws = lists[0]
+        if len(lists) > 1:
+            # appended shard groups (streaming/incremental) hold one row
+            # each for the term: merge-sort them by doc id
+            docs = np.concatenate([d for d, _ in lists])
+            ws = np.concatenate([w for _, w in lists])
+            order = np.argsort(docs, kind="mergesort")
+            docs, ws = docs[order], ws[order]
         keep = None
         if target_docs is not None:
-            keep = np.isin(docs, target_docs, assume_unique=False)
+            keep = np.isin(docs, target_docs)
         if excluded_docs is not None and excluded_docs.size:
-            drop = np.isin(docs, excluded_docs, assume_unique=False)
+            drop = np.isin(docs, excluded_docs)
             if drop.any():
                 keep = ~drop if keep is None else (keep & ~drop)
         if keep is not None:
             docs, ws = docs[keep], ws[keep]
-            if docs.size == 0:
-                continue
-            # block meta no longer matches the filtered list; rebuild
-            bs = block_size
-            bstart = np.arange(0, docs.size, bs)
-            bm_max = np.maximum.reduceat(ws, bstart).astype(np.float32)
-            bm_last = docs[np.minimum(bstart + bs - 1, docs.size - 1)]
-            raw.setdefault(int(r.term_id), []).append((docs, ws, bm_last, bm_max))
+        if docs.size == 0:
             continue
-        raw.setdefault(int(r.term_id), []).append(
-            (docs, ws, np.asarray(r.bm_last, dtype=np.int64),
-             np.asarray(r.bm_max, dtype=np.float32)))
-    decoded: dict[int, tuple[np.ndarray, np.ndarray, np.ndarray, np.ndarray]] = {}
-    for tid, rows in raw.items():
-        if len(rows) == 1:
-            decoded[tid] = rows[0]
-            continue
-        # multiple posting rows per (shard, term): appended shard groups
-        # (streaming/incremental) — merge-sort by doc id and rebuild block
-        # metadata over the merged list
-        docs = np.concatenate([r[0] for r in rows])
-        ws = np.concatenate([r[1] for r in rows])
-        order = np.argsort(docs, kind="mergesort")
-        docs, ws = docs[order], ws[order]
-        bs = block_size
-        bstart = np.arange(0, docs.size, bs)
-        bm_max = np.maximum.reduceat(ws, bstart).astype(np.float32)
-        bm_last = docs[np.minimum(bstart + bs - 1, docs.size - 1)]
+        if len(lists) > 1 or keep is not None:
+            # stored block meta no longer matches the list; rebuild
+            _, bm_last, bm_max, _, _ = _block_meta(
+                docs, ws, np.array([0]), np.array([docs.size]), block_size)
+        else:
+            bm_last = np.asarray(rs[0].bm_last, dtype=np.int64)
+            bm_max = np.asarray(rs[0].bm_max, dtype=np.float32)
         decoded[tid] = (docs, ws, bm_last, bm_max)
     if len(qplan) >= 64 and target_docs is None:
         # large batches: per-query block-max pruning stops paying (the
         # batch touches most postings anyway) while per-query concat+unique
         # dominates. Switch to the shared-structure exact scorer: one
         # local-index precompute per term, one scatter-add per (query,term).
-        return _taat_shared(decoded, qplan, top_k, threshold)
+        return _cut_rounded_topk(_taat_shared(decoded, qplan), top_k,
+                                 threshold)
+
+    def per_query():
+        for qid, tlist in qplan.items():
+            terms = [(qtf, *decoded[tid]) for tid, qtf in tlist
+                     if tid in decoded]
+            if not terms:
+                continue
+            if mode == "taat" or len(terms) == 1:
+                yield (qid, *_taat(terms))
+            else:
+                yield (qid, *_bmw(terms, top_k))
+
+    return _cut_rounded_topk(per_query(), top_k, threshold)
+
+
+def _cut_rounded_topk(scored, top_k: int, threshold: float) -> pd.DataFrame:
+    """(qid, docs, scores) per query -> one shard's (qid, doc_id, score)
+    candidates for the global merge.
+
+    Pre-filters with the rounding guard; the exact (rounded) threshold is
+    enforced after the global round. The per-shard cut must agree with the
+    GLOBAL order, which ranks on round(score, SCORE_DECIMALS) with doc_id
+    tie-break. Cutting on raw scores could drop a lower-doc_id doc whose
+    raw score is a hair below a same-rounded higher-id doc. So: keep every
+    doc whose ROUNDED score ties or beats the k-th largest rounded score
+    (ties kept; the global window resolves them by doc_id)."""
     out_q, out_d, out_s = [], [], []
-    for qid, tlist in qplan.items():
-        terms = [(qtf, *decoded[tid]) for tid, qtf in tlist if tid in decoded]
-        if not terms:
-            continue
-        if mode == "taat" or len(terms) == 1:
-            docs, scores = _taat(terms)
-        else:
-            docs, scores = _bmw(terms, top_k)
-        # pre-filter with the rounding guard; the exact (rounded) threshold
-        # semantics are enforced after the global round in wand_topk
+    for qid, docs, scores in scored:
         keep = scores >= threshold - _GUARD
         docs, scores = docs[keep], scores[keep]
         k = top_k if top_k and top_k > 0 else docs.size
         if docs.size > k:
-            # per-shard cut must agree with the GLOBAL order, which ranks on
-            # round(score, SCORE_DECIMALS) with doc_id tie-break. Cutting on
-            # raw scores could drop a lower-doc_id doc whose raw score is a
-            # hair below a same-rounded higher-id doc. So: keep every doc
-            # whose ROUNDED score ties or beats the k-th largest rounded
-            # score (ties kept; the global window resolves them by doc_id).
             r = np.round(scores, SCORE_DECIMALS)
             kth = np.partition(r, r.size - k)[r.size - k]
-            keep2 = r >= kth
-            docs, scores = docs[keep2], scores[keep2]
+            keep = r >= kth
+            docs, scores = docs[keep], scores[keep]
         out_q.extend([qid] * docs.size)
         out_d.extend(docs.tolist())
         out_s.extend(scores.tolist())
     return pd.DataFrame({"qid": out_q, "doc_id": out_d, "score": out_s})
 
 
-def _taat_shared(decoded, qplan, top_k: int, threshold: float) -> pd.DataFrame:
+def _taat_shared(decoded, qplan):
     """Exact batch scorer with shared per-term structure (semantics
     identical to _taat per query; exercised vs the per-query route in
-    tests/test_wand_kernel.py).
+    tests/test_wand_kernel.py). Yields (qid, docs, scores).
 
     Per shard: map every decoded posting's doc id to a local dense index
     ONCE per term (searchsorted against the union doc list), then each
@@ -163,14 +163,13 @@ def _taat_shared(decoded, qplan, top_k: int, threshold: float) -> pd.DataFrame:
     concat/unique over raw ids. This is what makes 10^3-10^4-query batches
     CPU-cheap; the per-query block-max path remains for interactive use."""
     if not decoded:
-        return pd.DataFrame({"qid": [], "doc_id": [], "score": []})
+        return
     all_docs = np.unique(np.concatenate([d[0] for d in decoded.values()]))
     local: dict[int, tuple[np.ndarray, np.ndarray]] = {}
     for tid, (docs, ws, _, _) in decoded.items():
         local[tid] = (np.searchsorted(all_docs, docs),
                       ws.astype(np.float64))
     acc = np.zeros(all_docs.size, dtype=np.float64)
-    out_q, out_d, out_s = [], [], []
     for qid, tlist in qplan.items():
         idxs = []
         for tid, qtf in tlist:
@@ -186,19 +185,7 @@ def _taat_shared(decoded, qplan, top_k: int, threshold: float) -> pd.DataFrame:
                    else idxs[0])
         scores = acc[touched].copy()
         acc[touched] = 0.0  # O(touched) reset, accumulator reused
-        docs_t = all_docs[touched]
-        keep = scores >= threshold - _GUARD
-        docs_t, scores = docs_t[keep], scores[keep]
-        k = top_k if top_k and top_k > 0 else docs_t.size
-        if docs_t.size > k:
-            r = np.round(scores, SCORE_DECIMALS)
-            kth = np.partition(r, r.size - k)[r.size - k]
-            keep2 = r >= kth
-            docs_t, scores = docs_t[keep2], scores[keep2]
-        out_q.extend([qid] * docs_t.size)
-        out_d.extend(docs_t.tolist())
-        out_s.extend(scores.tolist())
-    return pd.DataFrame({"qid": out_q, "doc_id": out_d, "score": out_s})
+        yield qid, all_docs[touched], scores
 
 
 def _taat(terms) -> tuple[np.ndarray, np.ndarray]:
@@ -293,8 +280,6 @@ def build_query_plan(
     a model (e.g. ``splade_expansion(encoder=...)`` on the query text) and
     are used verbatim, matching the reference's query-CSR dot product
     (``sparse_retriever.py:78``)."""
-    import os as _os
-
     if (queries is None) == (query_weights is None):
         raise ValueError("pass exactly one of queries / query_weights")
     man = IndexManifest.load(index_dir)
@@ -338,14 +323,12 @@ def resolve_term_ids(
     miss set; zero Spark jobs on a warm cache — shared by the WAND query
     planner and the conjunctive/NOT routes (index/phrase.py), which need
     literal ids to keep posting-scan pruning."""
-    import os as _os
-
     if man is None:
         man = IndexManifest.load(index_dir)
     # resolve the terms dir from the manifest directly (terms_path() would
     # re-read manifest.json on every call)
-    tdir = _os.path.join(index_dir, getattr(man, "terms_dir", "terms"))
-    key = (index_dir, _os.path.getmtime(tdir))
+    tdir = os.path.join(index_dir, getattr(man, "terms_dir", "terms"))
+    key = (index_dir, os.path.getmtime(tdir))
     # evict keys of superseded terms-dir versions for this index: each
     # append/compaction changes the key, and a long-running server would
     # otherwise strand one dead vocab dict per epoch
@@ -374,7 +357,7 @@ def resolve_term_ids(
 
 
 # interactive point queries skip Spark job scheduling entirely (see
-# _wand_local); batches above this go through the distributed plan
+# score_local); batches above this go through the distributed plan
 LOCAL_PATH_MAX_QUERIES = 4
 
 _RESULT_SCHEMA = "qid BIGINT, rank INT, doc_id BIGINT, score DOUBLE"
@@ -389,9 +372,19 @@ def _round_half_up(x: float, decimals: int = SCORE_DECIMALS) -> float:
         q, rounding=decimal.ROUND_HALF_UP))
 
 
-def _wand_local(spark, index_dir, qplan, tids, buckets, top_k, threshold,
-                mode, target, man, excluded=None) -> DataFrame:
-    """Driver-local execution of the SAME shard kernel for point queries.
+def score_local(
+    index_dir: str,
+    qplan: dict[int, list[tuple[int, float]]],
+    man: IndexManifest,
+    *,
+    top_k: int,
+    threshold: float,
+    mode: str = "bmw",
+    target_docs: np.ndarray | None = None,
+    excluded_docs: np.ndarray | None = None,
+) -> pd.DataFrame:
+    """Spark-free execution of the SAME shard kernel -> pandas
+    (qid, rank, doc_id, score): the point-query serving path.
 
     A 1-4 query lookup against a built index is dominated by Spark job
     scheduling (two stages + a Python-worker round trip ≈ 0.6 s at sf0.1),
@@ -404,10 +397,14 @@ def _wand_local(spark, index_dir, qplan, tids, buckets, top_k, threshold,
     the distributed plan is asserted in tests/test_wand_kernel.py and
     gate-checked by Q:wand_point. Scale story: cost ∝ query-term posting
     bytes, independent of corpus partitions — the same reason a serving
-    layer reads an index directly instead of launching a job."""
+    layer reads an index directly instead of launching a job. No
+    SparkSession is needed, so a serving process runs it without a JVM
+    (bench_extra.py serve)."""
     import pyarrow as pa
     import pyarrow.dataset as pds
 
+    tids = sorted({tid for lst in qplan.values() for tid, _ in lst})
+    buckets = sorted({tid % man.n_buckets for tid in tids})
     # explicit string-typed shard_group: hive inference would type an
     # all-numeric group set as int, breaking the liveness isin below
     part = pds.partitioning(
@@ -415,51 +412,43 @@ def _wand_local(spark, index_dir, qplan, tids, buckets, top_k, threshold,
         flavor="hive")
     data = pds.dataset(os.path.join(index_dir, "postings"),
                        partitioning=part)
-    if not data.files:
-        # fully-tombstoned index compacted to an empty group: no parquet
-        # fragments at all -> empty result, not a schema error
-        return spark.createDataFrame([], _RESULT_SCHEMA)
-    flt = pds.field("bucket").isin(buckets) & pds.field("term_id").isin(tids)
-    if man.live_groups is not None:
-        # LSM liveness (index/compact.py) — same allow-list the
-        # distributed read_postings applies
-        flt = flt & pds.field("shard_group").isin(
-            [str(g) for g in man.live_groups])
-    tab = data.to_table(
-        filter=flt,
-        columns=["shard", "term_id", "postings", "bm_last", "bm_max"])
-    pdf = tab.to_pandas()
     parts = []
-    for _, g in pdf.groupby("shard", sort=False):
-        parts.append(_score_shard(g, qplan=qplan, top_k=top_k,
-                                  threshold=threshold, mode=mode,
-                                  target_docs=target,
-                                  weight_bits=man.weight_bits,
-                                  block_size=man.block_size,
-                                  excluded_docs=excluded))
-    if parts:
-        hits = pd.concat(parts, ignore_index=True)
-    else:
-        hits = pd.DataFrame({"qid": [], "doc_id": [], "score": []})
-    if len(hits):
-        hits["score"] = hits["score"].map(_round_half_up)
-        hits = hits[hits["score"] >= threshold]
-        hits = hits.sort_values(["qid", "score", "doc_id"],
-                                ascending=[True, False, True],
-                                kind="mergesort")
-        hits["rank"] = hits.groupby("qid").cumcount() + 1
-        if top_k and top_k > 0:
-            hits = hits[hits["rank"] <= top_k]
-    else:
-        hits["rank"] = []
-    out = pd.DataFrame({
+    # a fully-tombstoned index compacted to an empty group has no parquet
+    # fragments at all -> empty result, not a schema error
+    if data.files:
+        flt = (pds.field("bucket").isin(buckets)
+               & pds.field("term_id").isin(tids))
+        if man.live_groups is not None:
+            # LSM liveness (index/compact.py) — same allow-list the
+            # distributed read_postings applies
+            flt = flt & pds.field("shard_group").isin(
+                [str(g) for g in man.live_groups])
+        pdf = data.to_table(
+            filter=flt,
+            columns=["shard", "term_id", "postings", "bm_last", "bm_max"],
+        ).to_pandas()
+        for _, g in pdf.groupby("shard", sort=False):
+            parts.append(_score_shard(g, qplan=qplan, top_k=top_k,
+                                      threshold=threshold, mode=mode,
+                                      target_docs=target_docs,
+                                      weight_bits=man.weight_bits,
+                                      block_size=man.block_size,
+                                      excluded_docs=excluded_docs))
+    hits = (pd.concat(parts, ignore_index=True) if parts
+            else pd.DataFrame({"qid": [], "doc_id": [], "score": []}))
+    hits["score"] = hits["score"].map(_round_half_up)
+    hits = hits[hits["score"] >= threshold].sort_values(
+        ["qid", "score", "doc_id"], ascending=[True, False, True],
+        kind="mergesort")
+    hits["rank"] = hits.groupby("qid").cumcount() + 1
+    if top_k and top_k > 0:
+        hits = hits[hits["rank"] <= top_k]
+    return pd.DataFrame({
         "qid": hits["qid"].astype("int64"),
-        "rank": hits["rank"].astype("int32") if len(hits)
-        else pd.Series([], dtype="int32"),
+        "rank": hits["rank"].astype("int32"),
         "doc_id": hits["doc_id"].astype("int64"),
         "score": hits["score"].astype("float64"),
     })
-    return spark.createDataFrame(out, schema=_RESULT_SCHEMA)
 
 
 def wand_topk(
@@ -489,8 +478,8 @@ def wand_topk(
     same kernel — no Spark job, ~10x lower latency; "never" forces the
     distributed plan; "force" demands the local path (raises if the index
     dir is not a local filesystem path)."""
-    qplan, tids, buckets = build_query_plan(spark, index_dir, queries,
-                                            query_weights)
+    qplan, tids, _ = build_query_plan(spark, index_dir, queries,
+                                      query_weights)
     target = (np.unique(np.asarray(target_doc_ids, dtype=np.int64))
               if target_doc_ids is not None else None)
     if not qplan:
@@ -510,20 +499,11 @@ def wand_topk(
             raise ValueError(
                 f"local='force' but {index_dir} is not a local filesystem "
                 "index")
-        return _wand_local(spark, index_dir, qplan, tids, buckets, top_k,
-                           threshold, mode, target, man_early,
-                           excluded=excluded)
-    posts = read_postings(spark, index_dir).where(
-        F.col("bucket").isin(buckets))  # partition pruning (<= n_buckets)
-    if len(tids) > 256:
-        # big batches: broadcast semi-join on term_id — same row set, but
-        # avoids an O(|tids|)-literal predicate whose codegen is serial
-        # driver work (the measured constant that killed query-batch scaling)
-        tdf = spark.createDataFrame([(t,) for t in tids], "term_id BIGINT")
-        posts = posts.join(F.broadcast(tdf), "term_id", "left_semi")
-    else:
-        # small batches: isin literal keeps parquet min/max pushdown
-        posts = posts.where(F.col("term_id").isin(tids))
+        return spark.createDataFrame(
+            score_local(index_dir, qplan, man_early, top_k=top_k,
+                        threshold=threshold, mode=mode, target_docs=target,
+                        excluded_docs=excluded), _RESULT_SCHEMA)
+    posts = scan_term_postings(spark, index_dir, tids, man_early.n_buckets)
     posts = posts.select("shard", "term_id", "postings", "bm_last", "bm_max")
     wb, bs = man_early.weight_bits, man_early.block_size
 

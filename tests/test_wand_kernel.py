@@ -75,7 +75,7 @@ def test_batch_shared_scorer_matches_per_query_route(spark, tmp_path):
 
 def test_local_point_path_identical_to_distributed(spark, tmp_path):
     """The driver-local point-query path (pyarrow filtered read + the same
-    shard kernel, index/wand.py:_wand_local) must return byte-identical
+    shard kernel, index/wand.py:score_local) must return byte-identical
     (qid, rank, doc_id, score) to the distributed plan — including the
     HALF_UP rounding F.round applies — across k, thresholds, modes, and an
     appended shard group (multi-row-per-term merge)."""
@@ -119,16 +119,14 @@ def test_local_path_matrix_weights_target_tombstones(spark, tmp_path):
     """Serving-layer completeness: the driver-local route must stay
     byte-identical to the distributed plan for every combination of
     impact-scored lookups (query_weights), target-doc restriction, and
-    tombstone exclusion — all three composed at once included."""
+    tombstone exclusion — all three composed at once included — on both
+    float32 and block-quantized (weight_bits=8) indexes."""
     from light_splade_spark.index.build import build_index
     from light_splade_spark.index.tombstones import delete_docs
     from light_splade_spark.index.wand import wand_topk
 
     docs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet") \
         .where("doc_id < 250")
-    idx = str(tmp_path / "midx")
-    build_index(spark, docs, idx, n_shards=4, n_buckets=4, n_salts=2,
-                n_shard_groups=1)
     qs = [(0, "data search quality"), (1, "the index model")]
     qw = [(0, {"data": 1.5, "search": 0.25, "quality": 1.0}),
           (1, {"the": 0.1, "index": 2.0, "model": 1.0})]
@@ -141,18 +139,23 @@ def test_local_path_matrix_weights_target_tombstones(spark, tmp_path):
                           target_doc_ids=target, local=local)
                 .orderBy("qid", "rank").collect()]
 
-    for tombstoned in (False, True):
-        if tombstoned:
-            # delete a doc every route would otherwise return
-            victim = run("never", queries=qs)[0][2]
-            delete_docs(spark, idx, [victim])
-        for target in targets:
-            for kw in ({"queries": qs}, {"query_weights": qw}):
-                loc = run("force", target=target, **kw)
-                dist = run("never", target=target, **kw)
-                assert loc == dist and loc, (tombstoned, target, kw.keys())
-                if tombstoned:
-                    assert victim not in {d for _, _, d, _ in loc}
+    for wb in (32, 8):
+        idx = str(tmp_path / f"midx{wb}")
+        build_index(spark, docs, idx, n_shards=4, n_buckets=4, n_salts=2,
+                    n_shard_groups=1, weight_bits=wb)
+        for tombstoned in (False, True):
+            if tombstoned:
+                # delete a doc every route would otherwise return
+                victim = run("never", queries=qs)[0][2]
+                delete_docs(spark, idx, [victim])
+            for target in targets:
+                for kw in ({"queries": qs}, {"query_weights": qw}):
+                    loc = run("force", target=target, **kw)
+                    dist = run("never", target=target, **kw)
+                    assert loc == dist and loc, (wb, tombstoned, target,
+                                                 kw.keys())
+                    if tombstoned:
+                        assert victim not in {d for _, _, d, _ in loc}
 
 
 def test_local_path_thread_safe_concurrent_queries(spark, tmp_path):
