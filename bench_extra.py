@@ -36,34 +36,24 @@ def _timed(fn):
 
 
 def _serve_worker(idx: str, n_queries: int) -> None:
-    """One serving process: term ids from the index's terms parquet (read
-    once, pyarrow), then ``score_local`` per query — the tested point-query
-    path of ``wand_topk(local=...)`` with tombstones and the threshold
-    applied, minus the Spark result wrap. No JVM at all: this is what a
-    serving layer runs per query against an immutable index. Prints one
-    JSON line (n, wall, qps, p50, p95)."""
-    from collections import Counter
-
-    import pyarrow.parquet as pq
-
-    from light_splade_spark.functions.analyzers import resolve_analyzer
+    """One serving process: ``build_query_plan`` (Spark-free term-id
+    resolve through the per-process term cache), then ``score_local`` per
+    query — the tested point-query path of ``wand_topk(local=...)`` with
+    tombstones and the threshold applied, minus the Spark result wrap. No
+    JVM at all: this is what a serving layer runs per query against an
+    immutable index. Prints one JSON line (n, wall, qps, p50, p95)."""
     from light_splade_spark.index.manifest import IndexManifest
     from light_splade_spark.index.tombstones import load_tombstone_ids
-    from light_splade_spark.index.wand import score_local
+    from light_splade_spark.index.wand import build_query_plan, score_local
 
     man = IndexManifest.load(idx)
-    ana = resolve_analyzer(man.analyzer_version, idx)
-    tt = pq.read_table(os.path.join(idx, getattr(man, "terms_dir", "terms")),
-                       columns=["term", "term_id"])
-    tmap = dict(zip(tt["term"].to_pylist(), tt["term_id"].to_pylist()))
     excluded = load_tombstone_ids(idx)
     qs = [(i, "t%05d t%05d t%05d" % ((7 * i) % 30000, (13 * i) % 30000,
                                      (29 * i) % 30000)) for i in range(200)]
 
     def run(qid, text):
-        counts = Counter(ana.py_tokenize(text))
-        lst = [(tmap[t], c) for t, c in sorted(counts.items()) if t in tmap]
-        return score_local(idx, {qid: lst}, man, top_k=10, threshold=0.0,
+        qplan, _, _ = build_query_plan(None, idx, [(qid, text)])
+        return score_local(idx, qplan, man, top_k=10, threshold=0.0,
                            excluded_docs=excluded)
 
     for q in qs[:2]:  # warm: page cache, numpy, dataset machinery
@@ -88,8 +78,9 @@ def _serve_mode() -> None:
     index — the r6 thread ladder found the GIL ceiling (2 threads 20.4 qps,
     8 threads 9.2) and asserted (did not measure) that separate processes
     are the production shape. Spawn 1/2/4/8 ``serve-worker`` processes,
-    each running ``index/wand.score_local`` (terms parquet -> pyarrow
-    pruned posting read -> _score_shard -> pandas rank; no JVM per query)
+    each running ``index/wand.build_query_plan`` + ``score_local`` (pyarrow
+    term resolve -> pyarrow pruned posting read -> _score_shard -> pandas
+    rank; no JVM at all)
     against a shared 200k-doc wb=8 index; report aggregate qps and
     per-process p50/p95."""
     import subprocess

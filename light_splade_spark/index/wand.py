@@ -3,7 +3,8 @@
 Query flow (SURVEY.md §3.3 performance path):
 
 1. Tokenize the query batch driver-side (a query batch is tiny by nature).
-2. Resolve term -> term_id from the `terms` dim with a pushed-down filter.
+2. Resolve term -> term_id from the `terms` dim with one driver-side
+   pyarrow read filtered to the query terms — never a Spark job.
 3. Scan `postings` with ``bucket IN (query buckets) AND term_id IN (query
    term ids)`` — bucket is a parquet partition column, so non-query buckets
    are pruned at the file-listing level; term_id hits parquet min/max.
@@ -42,7 +43,6 @@ from light_splade_spark.functions.analyzers import resolve_analyzer
 from light_splade_spark.index.build import (
     _block_meta,
     decode_posting_list,
-    read_terms,
     scan_term_postings,
 )
 from light_splade_spark.index.manifest import IndexManifest
@@ -268,11 +268,12 @@ _TERMS_CACHE: dict[tuple[str, float], dict[str, int | None]] = {}
 
 
 def build_query_plan(
-    spark: SparkSession, index_dir: str,
+    spark: SparkSession | None, index_dir: str,
     queries: list[tuple[int, str]] | None = None,
     query_weights: list[tuple[int, dict[str, float]]] | None = None,
 ) -> tuple[dict[int, list[tuple[int, float]]], list[int], list[int]]:
-    """-> (qid -> [(term_id, qweight)], term_ids, buckets).
+    """-> (qid -> [(term_id, qweight)], term_ids, buckets). Runs no Spark
+    job (``spark`` is unused, kept for API compatibility).
 
     ``queries`` = (qid, text) pairs tokenized with the index's pinned
     analyzer, weight = term frequency (BM25 scoring). ``query_weights`` =
@@ -314,15 +315,19 @@ def build_query_plan(
 
 
 def resolve_term_ids(
-    spark: SparkSession, index_dir: str, terms: list[str],
+    spark: SparkSession | None, index_dir: str, terms: list[str],
     man: IndexManifest | None = None,
 ) -> dict[str, int]:
     """term -> term_id for the given ALREADY-ANALYZED terms, through the
     per-process ``_TERMS_CACHE`` (absent terms are cached as absent and
-    omitted from the result). One pushed-down terms-dim lookup per cache
-    miss set; zero Spark jobs on a warm cache — shared by the WAND query
-    planner and the conjunctive/NOT routes (index/phrase.py), which need
-    literal ids to keep posting-scan pruning."""
+    omitted from the result). Each cache miss set is one driver-side
+    pyarrow read of the terms dim filtered to the missing terms — never a
+    Spark job (``spark`` is unused, kept for API compatibility). Shared by
+    the WAND query planner and the conjunctive/NOT routes
+    (index/phrase.py), which need literal ids to keep posting-scan
+    pruning."""
+    import pyarrow.dataset as pds
+
     if man is None:
         man = IndexManifest.load(index_dir)
     # resolve the terms dir from the manifest directly (terms_path() would
@@ -331,26 +336,20 @@ def resolve_term_ids(
     key = (index_dir, os.path.getmtime(tdir))
     # evict keys of superseded terms-dir versions for this index: each
     # append/compaction changes the key, and a long-running server would
-    # otherwise strand one dead vocab dict per epoch
+    # otherwise strand one dead vocab dict per epoch. pop, not del: two
+    # threads may see the new epoch at once and evict the same key
     for k in [k for k in _TERMS_CACHE if k[0] == index_dir and k != key]:
-        del _TERMS_CACHE[k]
+        _TERMS_CACHE.pop(k, None)
     cached = _TERMS_CACHE.setdefault(key, {})
     missing = [t for t in terms if t not in cached]
     if missing:
-        terms_df = read_terms(spark, index_dir)
-        if len(missing) > 256:
-            # a giant isin literal costs seconds of driver-side Catalyst/
-            # codegen work (serial!); for big query batches ship the term
-            # list as a broadcast semi-join instead
-            mdf = spark.createDataFrame([(t,) for t in missing],
-                                        "term STRING")
-            matched = terms_df.join(F.broadcast(mdf), "term", "left_semi")
-        else:
-            matched = terms_df.where(F.col("term").isin(missing))
-        found = {
-            r["term"]: int(r["term_id"])
-            for r in matched.select("term", "term_id").collect()
-        }
+        # pyarrow skips _SUCCESS/_temporary/.crc entries (default
+        # ignore_prefixes) like Spark's reader; isin is a hash set, so a
+        # big query batch costs no more than a small one per term
+        tab = pds.dataset(tdir, format="parquet").to_table(
+            columns=["term", "term_id"],
+            filter=pds.field("term").isin(missing)).to_pydict()
+        found = dict(zip(tab["term"], tab["term_id"]))
         for t in missing:
             cached[t] = found.get(t)  # None = known-absent, cached too
     return {t: cached[t] for t in terms if cached[t] is not None}
@@ -478,6 +477,8 @@ def wand_topk(
     same kernel — no Spark job, ~10x lower latency; "never" forces the
     distributed plan; "force" demands the local path (raises if the index
     dir is not a local filesystem path)."""
+    if local not in ("auto", "never", "force"):
+        raise ValueError(f"unknown local={local!r} (auto/never/force)")
     qplan, tids, _ = build_query_plan(spark, index_dir, queries,
                                       query_weights)
     target = (np.unique(np.asarray(target_doc_ids, dtype=np.int64))
@@ -487,8 +488,6 @@ def wand_topk(
     man_early = IndexManifest.load(index_dir)
     from light_splade_spark.index.tombstones import load_tombstone_ids
     excluded = load_tombstone_ids(index_dir)
-    if local not in ("auto", "never", "force"):
-        raise ValueError(f"unknown local={local!r} (auto/never/force)")
     want_local = (
         local == "force"
         or (local == "auto" and len(qplan) <= LOCAL_PATH_MAX_QUERIES

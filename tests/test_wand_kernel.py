@@ -1,11 +1,15 @@
 """Pure-numpy property tests: BMW interval pruning is EXACT — identical
 results to exhaustive TAAT on randomized posting structures (no Spark)."""
 
+import string
+import uuid
+
 import numpy as np
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from light_splade_spark.index.wand import _bmw, _taat
+from light_splade_spark.index.wand import _TERMS_CACHE, _bmw, _taat
 
 
 def _mk_term(rng, n_docs_universe: int, df: int, block: int = 16):
@@ -16,6 +20,19 @@ def _mk_term(rng, n_docs_universe: int, df: int, block: int = 16):
     bm_last = docs[np.minimum(bstart + block - 1, df - 1)]
     qtf = int(rng.integers(1, 3))
     return (qtf, docs, ws, bm_last, bm_max)
+
+
+def _spark_jobs(spark, fn):
+    """-> (fn(), ids of the Spark jobs fn ran), probed through a job group
+    unique to this call."""
+    sc = spark.sparkContext
+    group = f"probe-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, list(sc.statusTracker().getJobIdsForGroup(group))
 
 
 @given(st.integers(0, 10_000), st.integers(1, 6), st.integers(1, 20))
@@ -101,9 +118,11 @@ def test_local_point_path_identical_to_distributed(spark, tmp_path):
                wand_topk(spark, idx, qs, top_k=k, threshold=thr, mode=mode,
                          local="force").orderBy("qid", "rank").collect()]
         assert dist == loc and len(loc) > 0, (k, thr, mode)
-    # auto: 4 queries with finite k -> local; assert no Spark job ran by
-    # checking the plan is a LocalTableScan (createDataFrame of a local pdf)
-    df = wand_topk(spark, idx, qs, top_k=5)
+    # auto: 4 queries with finite k -> local, on a cold term cache: no
+    # Spark job runs (planning and scoring are both driver-side)
+    _TERMS_CACHE.clear()
+    df, jobs = _spark_jobs(spark, lambda: wand_topk(spark, idx, qs, top_k=5))
+    assert jobs == []
     assert "LocalTableScan" in df._jdf.queryExecution().executedPlan().toString()
     # target_doc_ids restriction agrees across routes too
     tgt = [r.doc_id for r in
@@ -186,3 +205,86 @@ def test_local_path_thread_safe_concurrent_queries(spark, tmp_path):
         futures = [(q[0], ex.submit(point, q)) for q in qs * 4]
         for qid, fut in futures:
             assert fut.result() == sequential[qid]
+
+
+def _spark_terms(spark, idx):
+    from light_splade_spark.index.build import read_terms
+    return {r.term: int(r.term_id)
+            for r in read_terms(spark, idx).select("term", "term_id").collect()}
+
+
+# 300 letters-only terms no corpus holds: with them a miss set exceeds the
+# 256 terms above which the old Spark lookup switched to a semi-join
+_ABSENT = [f"zzq{a}{b}" for a in string.ascii_lowercase
+           for b in string.ascii_lowercase][:300]
+
+
+def test_resolve_term_ids_matches_spark_read_across_epochs(spark, tmp_path, sf_dir):
+    """The driver-side pyarrow term resolve returns exactly what a Spark
+    read of the terms dim holds, on a built index, after an append that
+    adds a new term (new terms-dir mtime -> new cache key) and after a
+    compaction (terms_v<epoch> pointer) — for small and > 256-term miss
+    sets. Absent terms are omitted and cached as absent."""
+    from light_splade_spark.index.build import build_index
+    from light_splade_spark.index.compact import compact_index
+    from light_splade_spark.index.wand import resolve_term_ids
+    from light_splade_spark.streaming.incremental import append_batch
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    idx = str(tmp_path / "tidx")
+    build_index(spark, docs, idx, n_shards=2, n_buckets=4,
+                n_shard_groups=1)
+
+    def check(expect_new_term: bool):
+        ref = _spark_terms(spark, idx)
+        assert ref and ("qqqnewterm" in ref) == expect_new_term
+        small = sorted(ref)[:5] + ["qqqnewterm"] + _ABSENT[:2]
+        _TERMS_CACHE.clear()
+        assert resolve_term_ids(spark, idx, small) == {
+            t: ref[t] for t in small if t in ref}
+        # > 256 missing terms at once; the terms of `small` are warm hits
+        assert resolve_term_ids(spark, idx, sorted(ref) + _ABSENT) == ref
+        (key, cached), = [kv for kv in _TERMS_CACHE.items()
+                          if kv[0][0] == idx]
+        assert all(cached[t] is None for t in _ABSENT)
+        return key
+
+    key0 = check(False)
+    extra = spark.createDataFrame([(990001, "qqqnewterm data")],
+                                  "doc_id BIGINT, text STRING")
+    append_batch(spark, idx, extra, "p1")
+    # the stale epoch's entry is evicted by the next lookup
+    _TERMS_CACHE[key0] = {"data": -1}
+    assert resolve_term_ids(spark, idx, ["data"]) == {
+        "data": _spark_terms(spark, idx)["data"]}
+    assert key0 not in _TERMS_CACHE
+    check(True)
+    compact_index(spark, idx)
+    check(True)
+
+
+def test_build_query_plan_runs_no_spark_job(spark, tmp_path, sf_dir):
+    """With a cold term cache, planning a query batch whose miss set holds
+    present and absent terms (> 256 distinct) runs zero Spark jobs; the
+    job-group probe itself sees a job when one runs."""
+    from light_splade_spark.index.build import build_index
+    from light_splade_spark.index.wand import build_query_plan, wand_topk
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    idx = str(tmp_path / "pidx")
+    build_index(spark, docs, idx, n_shards=2, n_buckets=4,
+                n_shard_groups=1)
+    vocab = sorted(_spark_terms(spark, idx))
+    queries = [(i, " ".join([vocab[i % len(vocab)]] + _ABSENT[i::30]))
+               for i in range(30)]
+    _TERMS_CACHE.clear()
+    (qplan, tids, _), jobs = _spark_jobs(
+        spark, lambda: build_query_plan(spark, idx, queries))
+    assert jobs == []
+    assert len(qplan) == 30 and len(tids) == min(30, len(vocab))
+    assert sum(len(c) for c in _TERMS_CACHE.values()) > 256
+    _, jobs = _spark_jobs(spark, lambda: spark.range(3).collect())
+    assert jobs
+    # an unknown route is refused even when the plan is empty
+    with pytest.raises(ValueError, match="unknown local"):
+        wand_topk(spark, idx, [(0, _ABSENT[0])], local="bogus")
