@@ -30,7 +30,11 @@ def main() -> None:
     p.add_argument("--n-shards", type=int, default=None)
     p.add_argument("--n-buckets", type=int, default=16)
     p.add_argument("--n-salts", type=int, default=8)
-    p.add_argument("--n-shard-groups", type=int, default=4)
+    p.add_argument("--n-shard-groups", type=int, default=None,
+                   help="checkpoint groups the shards are written in "
+                        "(default: from the corpus size, 1 when the doc "
+                        "count is <= --run-size, else 4; a --resume uses "
+                        "the count recorded in the manifest)")
     p.add_argument("--run-size", type=int, default=1 << 16)
     p.add_argument("--weight-bits", type=int, default=32, choices=[8, 32])
     p.add_argument("--analyzer", default="ls-spark-1",

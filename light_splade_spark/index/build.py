@@ -27,7 +27,9 @@ Spark-first design (NOT a port of ``sparse_indexer.py``'s csr vstack):
   read.
 * **Checkpoint resume**: shards are processed in ``n_shard_groups`` batches;
   each batch commits postings parquet + a lineage JSON, then the manifest.
-  A restarted build skips completed groups (see manifest.py).
+  The default count follows the corpus: 1 group when N <= ``run_size`` (one
+  run, one fused posting job), else 4. A restarted build takes the count
+  from the manifest and skips completed groups (see manifest.py).
 """
 
 from __future__ import annotations
@@ -454,7 +456,7 @@ def build_index(
     n_shards: int | None = None,
     n_buckets: int = 16,
     n_salts: int = 8,
-    n_shard_groups: int = 4,
+    n_shard_groups: int | None = None,
     block_size: int = 128,
     run_size: int = 1 << 16,
     weight_bits: int = 32,
@@ -469,6 +471,13 @@ def build_index(
     Japanese/CJK corpora, matching the reference's Japanese-first data). Its
     version is pinned in the manifest; a resumed build re-resolves the
     analyzer from the manifest so a resume can never mix tokenizations.
+
+    ``n_shard_groups`` is the number of checkpoint groups the shards are
+    written in. ``None`` resolves from N on a fresh build: 1 when
+    ``n_docs <= run_size`` (the threshold at which ``write_posting_group``
+    fuses its phases), else 4. An explicit int is used as given. The
+    manifest records the resolved count, and a resume takes the count from
+    the manifest, ignoring the argument, like the other layout knobs.
 
     ``weights_df`` (doc_id, term, weight) switches the index to IMPACT
     scoring (manifest ``scoring="impact"``): the stored float32 impact is
@@ -538,6 +547,11 @@ def build_index(
                 # corpus (constant per-shard memory), capped to keep tiny
                 # corpora sane
                 n_shards = max(4, min(scalars["n_docs"] // 25000, 4096))
+            if n_shard_groups is None:
+                # a corpus that fits one run is one group: the posting
+                # write fuses its phases at the same threshold, so the
+                # build is one posting job; larger corpora keep 4 groups
+                n_shard_groups = 1 if scalars["n_docs"] <= run_size else 4
             man = IndexManifest(
                 analyzer_version=analyzer.version, k1=K1, b=B,
                 n_docs=scalars["n_docs"], avgdl=scalars["avgdl"],
@@ -577,10 +591,12 @@ def build_index(
                  else bm25_impact_col(man.avgdl))
         posts = dt.join(terms_b, "term").select(
             "doc_id", "term_id", w_col.alias("w"), "df")
-        n_shards = man.n_shards
+        # sized from the manifest, never the argument: a resume walks the
+        # groups the crashed build committed to
+        n_shards, n_groups = man.n_shards, man.n_shard_groups
         shard = _shard_col(n_shards)
-        shards_per_group = (n_shards + n_shard_groups - 1) // n_shard_groups
-        for group in range(n_shard_groups):
+        shards_per_group = (n_shards + n_groups - 1) // n_groups
+        for group in range(n_groups):
             if group in man.completed_groups:
                 continue
             lo = group * shards_per_group

@@ -37,6 +37,7 @@ import shutil
 import time
 
 import numpy as np
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 TOMBSTONE_DIR = "tombstones"
@@ -54,9 +55,12 @@ def delete_docs(spark: SparkSession, index_dir: str,
             F.col("doc_id").cast("bigint").alias("doc_id")).distinct()
         n = df.count()
     else:
-        df = spark.createDataFrame([(int(d),) for d in doc_ids],
-                                   "doc_id BIGINT").distinct()
-        n = len(set(doc_ids))
+        # deduplicated on the driver and shipped as one Arrow local
+        # relation: no pickled parallelize RDD, no Python worker, no shuffle
+        ids = np.unique(np.asarray([int(d) for d in doc_ids], dtype=np.int64))
+        df = spark.createDataFrame(pd.DataFrame({"doc_id": ids}),
+                                   "doc_id BIGINT")
+        n = int(ids.size)
     out = os.path.join(index_dir, TOMBSTONE_DIR, f"batch-{time.time_ns()}")
     df.write.mode("overwrite").parquet(out)
     return n

@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import sys
+import uuid
 
 import pytest
 
@@ -25,3 +26,21 @@ def sf_dir():
 @pytest.fixture(scope="session")
 def docs(spark, sf_dir):
     return spark.read.parquet(f"{sf_dir}/documents.parquet").cache()
+
+
+@pytest.fixture
+def spark_jobs(spark):
+    """probe(fn) -> (fn(), ids of the Spark jobs fn ran), probed through a
+    job group unique to each call."""
+    sc = spark.sparkContext
+
+    def probe(fn):
+        group = f"probe-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, list(sc.statusTracker().getJobIdsForGroup(group))
+
+    return probe

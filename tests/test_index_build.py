@@ -7,7 +7,11 @@ import pytest
 from pyspark.sql import functions as F
 
 from light_splade_spark.functions.vbyte import decode_run
-from light_splade_spark.index.build import build_index, read_postings
+from light_splade_spark.index.build import (
+    build_index,
+    read_postings,
+    scan_term_postings,
+)
 from light_splade_spark.index.manifest import IndexManifest, read_lineage
 
 
@@ -36,19 +40,77 @@ def test_build_completes_with_lineage(spark, docs, tmp_path):
 
 
 def test_resume_after_crash_is_byte_identical(spark, docs, tmp_path):
-    d1, d2 = str(tmp_path / "a"), str(tmp_path / "b")
-    build_index(spark, docs, d1, n_shards=4, n_buckets=8, n_salts=4,
-                n_shard_groups=4, run_size=100)
-    with pytest.raises(RuntimeError, match="simulated crash"):
-        build_index(spark, docs, d2, n_shards=4, n_buckets=8, n_salts=4,
-                    n_shard_groups=4, run_size=100, fail_after_group=1)
-    man = IndexManifest.load(d2)
-    assert man.status == "building"
-    assert sorted(man.completed_groups) == [0, 1]
-    man2 = build_index(spark, docs, d2, n_shards=4, n_buckets=8, n_salts=4,
-                       n_shard_groups=4, run_size=100, resume=True)
-    assert man2.status == "complete"
-    assert _index_fingerprint(spark, d1) == _index_fingerprint(spark, d2)
+    """A resume finishes the groups the crashed build committed to, whatever
+    ``n_shard_groups`` it is given: the count comes from the manifest. The
+    reference build leaves the count to the default, which is 4 for a
+    corpus larger than ``run_size``."""
+    d1 = str(tmp_path / "a")
+    man1 = build_index(spark, docs, d1, n_shards=4, n_buckets=8, n_salts=4,
+                       run_size=100)
+    assert man1.n_docs > man1.run_size and man1.n_shard_groups == 4
+    for resume_groups in (4, 2, None):
+        d2 = str(tmp_path / f"b{resume_groups}")
+        with pytest.raises(RuntimeError, match="simulated crash"):
+            build_index(spark, docs, d2, n_shards=4, n_buckets=8, n_salts=4,
+                        n_shard_groups=4, run_size=100, fail_after_group=1)
+        man = IndexManifest.load(d2)
+        assert man.status == "building"
+        assert sorted(man.completed_groups) == [0, 1]
+        man2 = build_index(spark, docs, d2, n_shards=4, n_buckets=8,
+                           n_salts=4, n_shard_groups=resume_groups,
+                           run_size=100, resume=True)
+        assert man2.status == "complete" and man2.n_shard_groups == 4
+        assert man2.live_groups == ["0", "1", "2", "3"], resume_groups
+        assert _index_fingerprint(spark, d1) == _index_fingerprint(spark, d2)
+
+
+def _posting_rows(spark, d):
+    """Every posting row's content, without the shard_group it sits in."""
+    rows = read_postings(spark, d).select(
+        "shard", "bucket", "term_id", "df", F.hex("postings"),
+        F.col("bm_last").cast("string"), F.col("bm_max").cast("string"))
+    return sorted(tuple(r) for r in rows.collect())
+
+
+@pytest.mark.parametrize("weight_bits", [32, 8])
+def test_default_group_count_follows_corpus(spark, docs, tmp_path,
+                                            weight_bits):
+    """With no ``n_shard_groups``, a corpus of at most ``run_size`` docs is
+    built as one group, holding the same posting rows as a 4-group build."""
+    d1, d4 = str(tmp_path / "g1"), str(tmp_path / "g4")
+    man = build_index(spark, docs, d1, n_buckets=8, weight_bits=weight_bits)
+    assert man.n_docs <= man.run_size
+    assert IndexManifest.load(d1).n_shard_groups == 1
+    assert [g["group"] for g in read_lineage(d1)] == ["0"]
+    build_index(spark, docs, d4, n_buckets=8, weight_bits=weight_bits,
+                n_shard_groups=4)
+    assert _posting_rows(spark, d1) == _posting_rows(spark, d4)
+
+
+def test_scan_term_postings_semi_join_matches_isin(spark, docs, tmp_path):
+    """More than 256 ids take the broadcast semi-join; it returns the rows the <= 256-id ``isin`` route returns over the same
+    ids, scanned in chunks."""
+    d = str(tmp_path / "scan")
+    build_index(spark, docs, d, n_shards=2, n_buckets=4, n_salts=2,
+                n_shard_groups=1)
+    present = {r.term_id for r in
+               read_postings(spark, d).select("term_id").distinct().collect()}
+    # the vocabulary is small: pad with random ids, nearly all absent, so
+    # the present ones spread over every chunk
+    rng = np.random.default_rng(0)
+    tids = sorted(present | set(rng.integers(-2**63, 2**63 - 1, size=400,
+                                             dtype=np.int64).tolist()))
+    assert len(tids) > 256
+    big = scan_term_postings(spark, d, tids, 4)
+    assert "BroadcastHashJoin" in big._jdf.queryExecution().executedPlan() \
+        .toString()
+    chunked = [r.asDict() for i in range(0, len(tids), 256)
+               for r in scan_term_postings(spark, d, tids[i:i + 256], 4)
+               .collect()]
+    assert len(chunked) == len(present) * 2  # every term in both shards
+    key = lambda r: (r["shard"], r["term_id"])  # noqa: E731
+    assert (sorted((r.asDict() for r in big.collect()), key=key)
+            == sorted(chunked, key=key))
 
 
 def test_crash_leaves_no_doc_stats_writer_running(spark, docs, tmp_path,

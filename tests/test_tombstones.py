@@ -6,11 +6,16 @@ from __future__ import annotations
 
 import os
 
+import pyarrow.dataset as pds
+
 from pyspark.sql import functions as F
 
 from light_splade_spark.engine import Engine
 from light_splade_spark.index.join_scorer import score_index_join
 from light_splade_spark.index.tombstones import (
+    TOMBSTONE_DIR,
+    delete_docs,
+    list_complete_tombstone_batches,
     load_tombstone_ids,
     tombstones_df,
 )
@@ -347,3 +352,23 @@ def test_terms_gc_grace_window(spark, tmp_path):
     os.utime(old_terms, (past, past))
     assert "terms" in gc_postings(idx)   # aged out
     assert not os.path.isdir(old_terms)
+
+
+def test_list_delete_runs_one_spark_job(spark, spark_jobs, tmp_path):
+    """A driver-side id list is deduplicated on the driver and written in
+    one Spark job (no parallelize RDD, no distinct shuffle). The batch
+    holds each id once as BIGINT, and an empty list still commits a
+    batch."""
+    idx = str(tmp_path / "ids")
+    n, jobs = spark_jobs(lambda: delete_docs(spark, idx, [5, 3, 3, 9, 1, 5]))
+    assert n == 4 and len(jobs) == 1
+    (batch,) = list_complete_tombstone_batches(idx)
+    tab = pds.dataset(os.path.join(idx, TOMBSTONE_DIR, batch),
+                      format="parquet").to_table()
+    assert str(tab.schema.field("doc_id").type) == "int64"
+    assert sorted(tab.column("doc_id").to_pylist()) == [1, 3, 5, 9]
+
+    n, jobs = spark_jobs(lambda: delete_docs(spark, idx, []))
+    assert n == 0 and len(jobs) == 1
+    assert len(list_complete_tombstone_batches(idx)) == 2
+    assert load_tombstone_ids(idx).tolist() == [1, 3, 5, 9]

@@ -2,7 +2,6 @@
 results to exhaustive TAAT on randomized posting structures (no Spark)."""
 
 import string
-import uuid
 
 import numpy as np
 import pytest
@@ -20,19 +19,6 @@ def _mk_term(rng, n_docs_universe: int, df: int, block: int = 16):
     bm_last = docs[np.minimum(bstart + block - 1, df - 1)]
     qtf = int(rng.integers(1, 3))
     return (qtf, docs, ws, bm_last, bm_max)
-
-
-def _spark_jobs(spark, fn):
-    """-> (fn(), ids of the Spark jobs fn ran), probed through a job group
-    unique to this call."""
-    sc = spark.sparkContext
-    group = f"probe-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    return out, list(sc.statusTracker().getJobIdsForGroup(group))
 
 
 @given(st.integers(0, 10_000), st.integers(1, 6), st.integers(1, 20))
@@ -90,7 +76,8 @@ def test_batch_shared_scorer_matches_per_query_route(spark, tmp_path):
     assert batch == single and len(batch) > 0
 
 
-def test_local_point_path_identical_to_distributed(spark, tmp_path):
+def test_local_point_path_identical_to_distributed(spark, spark_jobs,
+                                                  tmp_path):
     """The driver-local point-query path (pyarrow filtered read + the same
     shard kernel, index/wand.py:score_local) must return byte-identical
     (qid, rank, doc_id, score) to the distributed plan — including the
@@ -121,7 +108,7 @@ def test_local_point_path_identical_to_distributed(spark, tmp_path):
     # auto: 4 queries with finite k -> local, on a cold term cache: no
     # Spark job runs (planning and scoring are both driver-side)
     _TERMS_CACHE.clear()
-    df, jobs = _spark_jobs(spark, lambda: wand_topk(spark, idx, qs, top_k=5))
+    df, jobs = spark_jobs(lambda: wand_topk(spark, idx, qs, top_k=5))
     assert jobs == []
     assert "LocalTableScan" in df._jdf.queryExecution().executedPlan().toString()
     # target_doc_ids restriction agrees across routes too
@@ -263,7 +250,8 @@ def test_resolve_term_ids_matches_spark_read_across_epochs(spark, tmp_path, sf_d
     check(True)
 
 
-def test_build_query_plan_runs_no_spark_job(spark, tmp_path, sf_dir):
+def test_build_query_plan_runs_no_spark_job(spark, spark_jobs, tmp_path,
+                                           sf_dir):
     """With a cold term cache, planning a query batch whose miss set holds
     present and absent terms (> 256 distinct) runs zero Spark jobs; the
     job-group probe itself sees a job when one runs."""
@@ -278,12 +266,12 @@ def test_build_query_plan_runs_no_spark_job(spark, tmp_path, sf_dir):
     queries = [(i, " ".join([vocab[i % len(vocab)]] + _ABSENT[i::30]))
                for i in range(30)]
     _TERMS_CACHE.clear()
-    (qplan, tids, _), jobs = _spark_jobs(
-        spark, lambda: build_query_plan(spark, idx, queries))
+    (qplan, tids, _), jobs = spark_jobs(
+        lambda: build_query_plan(spark, idx, queries))
     assert jobs == []
     assert len(qplan) == 30 and len(tids) == min(30, len(vocab))
     assert sum(len(c) for c in _TERMS_CACHE.values()) > 256
-    _, jobs = _spark_jobs(spark, lambda: spark.range(3).collect())
+    _, jobs = spark_jobs(lambda: spark.range(3).collect())
     assert jobs
     # an unknown route is refused even when the plan is empty
     with pytest.raises(ValueError, match="unknown local"):
