@@ -394,10 +394,11 @@ def q_index_join_topk(spark, sf_dir):
     index (tests/test_join_scorer.py); oracle = float32-impact BM25 SQL.
 
     Folded in (50-row gate): route='phrase' rows from the SAME index via
-    index/phrase.phrase_topk — conjunctive candidates from the join route,
-    token-adjacency verified on candidates only; oracle = phrase_oracle_sql.
+    index/phrase.phrase_topk — conjunctive candidates from the per-shard
+    WAND kernel's AND mode (not the join route), token-adjacency verified
+    on candidates only; oracle = phrase_oracle_sql.
     route='and' rows via index/phrase.conjunctive_topk — boolean-AND
-    retrieval (full-match gate, no adjacency); oracle =
+    retrieval on the same kernel (full-match gate, no adjacency); oracle =
     conjunctive_oracle_sql. route='and_not' adds the NOT arm: the same
     AND batch with exclude="table" — docs containing the banned term
     drop before ranking; oracle = conjunctive_oracle_sql(exclude=...)

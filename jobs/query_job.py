@@ -44,7 +44,9 @@ def main() -> None:
     p.add_argument("--route", default=None,
                    choices=["auto", "wand", "join"])
     p.add_argument("--require-all-terms", action="store_true",
-                   help="conjunctive (boolean-AND) retrieval")
+                   help="conjunctive (boolean-AND) retrieval on the "
+                        "wand kernel: collects the batch to the driver "
+                        "(sized like --route wand, up to ~10^5 queries)")
     p.add_argument("--exclude", default=None, metavar="TEXT",
                    help="boolean NOT (with --require-all-terms): ban "
                         "documents containing ANY of this text's terms")

@@ -145,8 +145,9 @@ class Engine:
         """-> (pid, rank, doc_id, score): exact token-adjacent phrase
         search (index/phrase.py, beyond the reference — its sparse
         retriever scores bags of terms only). Conjunctive candidates come
-        from this index's postings; ``docs`` (the corpus the index was
-        built over) supplies text for the adjacency verify stage only."""
+        from this index's postings through the per-shard kernel's AND mode
+        (not the join route); ``docs`` (the corpus the index was built
+        over) supplies text for the adjacency verify stage only."""
         from light_splade_spark.index.phrase import phrase_topk
         return phrase_topk(self.spark, self.index_dir, docs, phrases,
                            top_k=top_k)
@@ -159,7 +160,8 @@ class Engine:
     ) -> DataFrame:
         """-> (qid, rank, doc_id, score): boolean-AND retrieval — BM25
         top-k among documents containing ALL the query's terms
-        (index/phrase.py conjunctive stage, no adjacency verify). Scores
+        (index/phrase.py conjunctive stage, no adjacency verify), scored
+        by the per-shard kernel's AND mode on retrieve()'s routes. Scores
         are identical to retrieve()'s for the same (query, doc) pairs.
         ``exclude`` adds the NOT arm: docs containing ANY of its analyzed
         terms are banned for every query in the batch."""

@@ -177,11 +177,6 @@ def make_queries(
     return queries
 
 
-def load_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Driver-provided corpus: documents(doc_id, text, lang, source, n_chars)."""
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
-
-
 def load_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/embeddings.parquet")
 

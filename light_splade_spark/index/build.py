@@ -14,7 +14,7 @@ Spark-first design (NOT a port of ``sparse_indexer.py``'s csr vstack):
       RANGE bin — each group sorts + delta-VByte-encodes per-term *runs*;
     - phase 2: group by (shard, bucket) — runs of a term are doc-range
       disjoint and ordered by salt, so the external multi-way merge is O(runs)
-      concatenation with one delta patch per boundary (vbyte.concat_runs).
+      concatenation with one delta patch per boundary (``_merge_groups``).
 * Posting payload carries the **precomputed float32 BM25 impact** w =
   idf(t) * tf*(k1+1)/(tf + k1*(1-b+b*dl/avgdl)) (reference index dtype is
   float32, ``sparse_indexer.py:47``), so query scoring is Σ qtf·w — exactly

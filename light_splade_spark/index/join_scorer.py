@@ -29,7 +29,7 @@ from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from light_splade_spark.index.build import (
@@ -38,6 +38,7 @@ from light_splade_spark.index.build import (
     scan_term_postings,
 )
 from light_splade_spark.index.manifest import IndexManifest
+from light_splade_spark.index.wand import rank_hits
 from light_splade_spark.plans.bm25_sql import SCORE_DECIMALS
 
 
@@ -147,8 +148,4 @@ def score_index_join(
     scored = (contrib.groupBy("qid", "doc_id")
               .agg(F.round(F.sum("c"), SCORE_DECIMALS).alias("score"))
               .where(F.col("score") >= F.lit(threshold)))
-    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("doc_id"))
-    ranked = scored.withColumn("rank", F.row_number().over(w))
-    if top_k and top_k > 0:
-        ranked = ranked.where(F.col("rank") <= top_k)
-    return ranked.select("qid", "rank", "doc_id", "score")
+    return rank_hits(scored, top_k)

@@ -6,11 +6,13 @@ impact postings (index/build.py), not positions. Rather than inflating
 every posting with positions (2-4x index bytes, paid by every non-phrase
 query), this module uses the standard two-stage serving shape:
 
-1. RETRIEVE — conjunctive candidate generation from the index via the
-   join route (index/join_scorer.decode_postings restricted to the
-   phrase's terms): only documents containing ALL distinct phrase terms
-   survive, already carrying their BM25 score (sum qtf * w over the
-   stored float32 impacts — identical semantics to score_index_join).
+1. RETRIEVE — conjunctive candidate generation on the per-shard kernel,
+   not the join route (index/wand._score_shard in its AND mode, run by
+   wand.shard_hits over the phrase terms' pruned posting rows): per
+   shard, the decoded lists of a phrase's distinct terms are intersected,
+   so only documents containing ALL of them survive, already carrying
+   their BM25 score (sum qtf * w over the stored float32 impacts — the
+   WAND routes' scores).
 2. VERIFY — token-adjacency checked ONLY on the candidates: the docs
    DataFrame is semi-joined down to the candidate ids FIRST, then the
    survivors (a tiny fraction of the corpus — the conjunction of several
@@ -20,8 +22,9 @@ query), this module uses the standard two-stage serving shape:
    (exists/sequence/slice), no Python.
 
 At 100 TB this is the right plan: stage 1 touches only the phrase terms'
-posting bytes (parquet bucket pruning + min/max pushdown); stage 2 scans
-text for candidate doc_ids only, pushed into the parquet scan as a
+posting bytes (parquet bucket pruning + min/max pushdown) and moves no
+per-posting row out of the kernel, only each shard's matches; stage 2
+scans text for candidate doc_ids only, pushed into the parquet scan as a
 broadcast semi-join when the candidate set is small (phrase conjunctions
 almost always are; a phrase of ONE term degenerates to term retrieval
 with verify = membership, still correct).
@@ -32,56 +35,41 @@ beyond-reference capability of the fulltext_index tier. Scores for the
 verified docs are byte-identical to the OR-route join scorer on the same
 phrase terms (same rounding, same tie-break) — asserted in
 tests/test_phrase.py and oracle-checked in Q:index_join_topk.
+
+``conjunctive_topk`` (boolean AND / NOT) is stage 1 alone, ranked, routed
+like ``wand_topk``: driver-local for a point batch, else distributed.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+import pandas as pd
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from light_splade_spark.functions.analyzers import resolve_analyzer
-from light_splade_spark.index.build import read_terms
-from light_splade_spark.index.join_scorer import decode_postings
+from light_splade_spark.functions.analyzers import Analyzer, resolve_analyzer
 from light_splade_spark.index.manifest import IndexManifest
-from light_splade_spark.plans.bm25_sql import SCORE_DECIMALS, query_term_rows
+from light_splade_spark.index.wand import (
+    build_query_plan,
+    rank_hits,
+    resolve_term_ids,
+    shard_hits,
+    shard_topk,
+)
+from light_splade_spark.session import local_frame
 
-# conjunctive batches at or below this many (query, term) plan entries
-# attach the plan as literal map expressions (zero joins); above it the
-# plan ships as broadcast-hinted DataFrames (literal maps would bloat
-# codegen). Tests patch this to exercise both routes on one batch.
-LITERAL_PLAN_MAX = 4096
 
-
-def _conjunctive_candidates(spark: SparkSession, index_dir: str,
-                            qt: DataFrame,
-                            terms: DataFrame | None = None) -> DataFrame:
-    """(pid, doc_id, score): documents containing ALL of each query's
-    distinct terms, scored sum(qtf * stored-impact) — identical semantics
-    to score_index_join restricted to full matches. ``qt`` = (pid, term,
-    qtf) rows. A term absent from the index makes its query's n_terms
-    unreachable, so that query yields zero candidates (correct: no doc
-    contains the term) rather than silently matching the remaining terms.
-    Scale: decode touches only the query terms' posting bytes (bucket
-    pruning + min/max pushdown inside decode_postings); the conjunction
-    is the same groupBy the OR route pays, plus one broadcast of per-query
-    term counts."""
-    n_terms = qt.groupBy("pid").agg(F.count(F.lit(1)).alias("n_terms"))
-    if terms is None:
-        terms = read_terms(spark, index_dir).select("term", "term_id")
-    qterm = qt.join(terms, "term").select("pid", "term_id", "qtf")
-    decoded = decode_postings(spark, index_dir, term_ids=qterm)
-    return (
-        qterm.join(decoded, "term_id")
-        .groupBy("pid", "doc_id")
-        .agg(
-            F.round(F.sum(F.col("qtf") * F.col("w").cast("double")),
-                    SCORE_DECIMALS).alias("score"),
-            F.count(F.lit(1)).alias("nm"),
-        )
-        .join(F.broadcast(n_terms), "pid")
-        .where(F.col("nm") == F.col("n_terms"))
-        .select("pid", "doc_id", "score")
-    )
+def _and_plan(spark: SparkSession, index_dir: str,
+              queries: list[tuple[int, str]], ana: Analyzer
+              ) -> dict[int, list[tuple[int, float]]]:
+    """The WAND query plan (qid -> [(term_id, qtf)]) restricted to queries
+    whose every distinct analyzed term is in the index: a term ABSENT from
+    the index makes a full match impossible, so its query has no
+    candidates (build_query_plan drops absent terms, so compare against
+    the analyzer's distinct-term count)."""
+    qplan, _, _ = build_query_plan(spark, index_dir, queries)
+    need = {qid: len(set(ana.py_tokenize(text))) for qid, text in queries}
+    return {qid: lst for qid, lst in qplan.items()
+            if len(lst) == need.get(qid)}
 
 
 def conjunctive_topk(
@@ -101,130 +89,28 @@ def conjunctive_topk(
     ``exclude`` completes the boolean algebra with NOT: a text whose
     analyzed terms BAN documents — any doc containing ANY excluded term
     is dropped (for every query in the batch) BEFORE ranking, so ranks
-    stay dense. Implementation is one anti-join against the decoded
-    postings of only the excluded terms (their posting bytes are all
-    that is read — bucket pruning + min/max pushdown apply as on the
-    scoring side); an excluded term absent from the index bans nothing.
-    Exclusion does not change surviving docs' scores (BM25 has no
-    negative-term contribution).
-    """
-    from light_splade_spark.index.wand import (
-        build_query_plan,
-        resolve_term_ids,
-    )
+    stay dense. The excluded terms' posting rows are read beside the
+    query terms' (same bucket pruning + min/max pushdown) and each shard
+    drops the docs they list before it cuts its top-k; an excluded term
+    absent from the index bans nothing. Exclusion does not change
+    surviving docs' scores (BM25 has no negative-term contribution).
 
+    Runs the shard kernel's AND mode through ``wand_topk``'s route rule
+    (index/wand.shard_topk): driver-local for a point batch with a
+    finite ``top_k``, else the distributed shard plan. A batch in which
+    no query can fully match runs no Spark job. Sized like ``wand_topk``
+    (the plan ships in the kernel closure: up to ~10^5 queries).
+    """
     man = IndexManifest.load(index_dir)
     ana = resolve_analyzer(man.analyzer_version, index_dir)
-    qt_rows = query_term_rows(queries, ana)
-    if not qt_rows:
-        return spark.createDataFrame(
-            [], "qid BIGINT, rank INT, doc_id BIGINT, score DOUBLE")
-    # resolve term -> term_id DRIVER-side through the shared per-process
-    # cache (index/wand.build_query_plan): this keeps decode_postings on
-    # its literal arm — bucket partition pruning + term_id min/max
-    # pushdown reach the parquet scan — instead of planning a terms-dim
-    # scan + broadcast-semi-join build inside the query (two extra jobs
-    # and an unpruned posting read per call). An interactive conjunctive
-    # batch is literal by nature; the DataFrame-sized workload shape
-    # remains available via _conjunctive_candidates.
-    qplan, _, _ = build_query_plan(spark, index_dir, queries)
-    # conjunction semantics: a query term ABSENT from the index makes a
-    # full match impossible, so the query contributes no candidates at
-    # all. build_query_plan drops absent terms from the plan, so compare
-    # against the analyzer's distinct-term count per query.
-    need = {qid: len(set(ana.py_tokenize(text))) for qid, text in queries}
-    qplan = {qid: lst for qid, lst in qplan.items()
-             if len(lst) == need.get(qid)}
-    if not qplan:
-        return spark.createDataFrame(
-            [], "qid BIGINT, rank INT, doc_id BIGINT, score DOUBLE")
-    tids = sorted({tid for lst in qplan.values() for tid, _ in lst})
-    decoded = decode_postings(spark, index_dir, term_ids=tids)
-    n_entries = sum(len(lst) for lst in qplan.values())
-    if n_entries <= LITERAL_PLAN_MAX:
-        # attach the query plan as LITERAL map expressions instead of
-        # joining two tiny python-list DataFrames: an RDD-backed local
-        # DataFrame has no size statistics, so the planner refused to
-        # broadcast it and built a 32-partition sort-merge join (plus a
-        # python scan of the list) around a handful of rows. Here the
-        # whole attach is term_id -> [(pid, qtf)] element_at + explode,
-        # and the full-match test reads n_terms from a pid-keyed literal
-        # map — zero joins before the one groupBy an AND-match needs.
-        inv: dict[int, list[tuple[int, int]]] = {}
-        for qid, lst in sorted(qplan.items()):
-            for tid, qtf in lst:
-                inv.setdefault(tid, []).append((qid, int(qtf)))
-        pq_map = F.create_map(*[
-            x for tid, pairs in sorted(inv.items())
-            for x in (F.lit(tid), F.array(*[
-                F.struct(F.lit(pid).cast("bigint").alias("pid"),
-                         F.lit(qtf).cast("bigint").alias("qtf"))
-                for pid, qtf in pairs]))])
-        nt_map = F.create_map(*[
-            x for qid, lst in sorted(qplan.items())
-            for x in (F.lit(qid).cast("bigint"),
-                      F.lit(len(lst)).cast("bigint"))])
-        cand = (
-            decoded
-            .select("doc_id", "w",
-                    F.explode(F.element_at(pq_map, F.col("term_id")))
-                    .alias("pq"))
-            .select(F.col("pq.pid").alias("pid"), "doc_id",
-                    F.col("pq.qtf").alias("qtf"), "w")
-            .groupBy("pid", "doc_id")
-            .agg(
-                F.round(F.sum(F.col("qtf") * F.col("w").cast("double")),
-                        SCORE_DECIMALS).alias("score"),
-                F.count(F.lit(1)).alias("nm"),
-            )
-            .where(F.col("nm") == F.element_at(nt_map, F.col("pid")))
-            .select("pid", "doc_id", "score")
-        )
-    else:
-        # corpus-scale batches: literal maps would blow up codegen; ship
-        # the plan as DataFrames and let the broadcast join do the attach
-        qterm = spark.createDataFrame(
-            [(qid, tid, int(qtf))
-             for qid, lst in sorted(qplan.items()) for tid, qtf in lst],
-            "pid BIGINT, term_id BIGINT, qtf BIGINT")
-        n_terms = spark.createDataFrame(
-            sorted((qid, len(lst)) for qid, lst in qplan.items()),
-            "pid BIGINT, n_terms BIGINT")
-        cand = (
-            F.broadcast(qterm).join(decoded, "term_id")
-            .groupBy("pid", "doc_id")
-            .agg(
-                F.round(F.sum(F.col("qtf") * F.col("w").cast("double")),
-                        SCORE_DECIMALS).alias("score"),
-                F.count(F.lit(1)).alias("nm"),
-            )
-            .join(F.broadcast(n_terms), "pid")
-            .where(F.col("nm") == F.col("n_terms"))
-            .select("pid", "doc_id", "score")
-        )
-    if exclude:
-        ex_terms = sorted(set(ana.py_tokenize(exclude)))
-        if ex_terms:
-            # resolve excluded term_ids to a LITERAL list (bounded by the
-            # exclude text's distinct terms — interactive-sized), through
-            # the same driver-side cache: the literal arm of
-            # decode_postings keeps bucket partition pruning + term_id
-            # min/max pushdown, so only the excluded terms' posting bytes
-            # are read; the DataFrame arm would scan every bucket and
-            # semi-join
-            ex_ids = sorted(resolve_term_ids(
-                spark, index_dir, ex_terms, man=man).values())
-            if ex_ids:
-                banned = (decode_postings(spark, index_dir,
-                                          term_ids=ex_ids)
-                          .select("doc_id").distinct())
-                cand = cand.join(banned, "doc_id", "left_anti")
-    w = Window.partitionBy("pid").orderBy(F.desc("score"), F.asc("doc_id"))
-    ranked = cand.withColumn("rank", F.row_number().over(w))
-    if top_k and top_k > 0:
-        ranked = ranked.where(F.col("rank") <= top_k)
-    return ranked.select(F.col("pid").alias("qid"), "rank", "doc_id",
-                         "score")
+    qplan = _and_plan(spark, index_dir, queries, ana)
+    banned = None
+    if qplan and exclude:
+        banned = sorted(resolve_term_ids(
+            spark, index_dir, sorted(set(ana.py_tokenize(exclude))),
+            man=man).values())
+    return shard_topk(spark, index_dir, qplan, top_k=top_k, mode="and",
+                      banned_tids=banned)
 
 
 def phrase_topk(
@@ -251,17 +137,17 @@ def phrase_topk(
     """
     man = IndexManifest.load(index_dir)
     ana = resolve_analyzer(man.analyzer_version, index_dir)
-
-    # driver-side tokenization shared with the oracle generator, so both
-    # sides see identical phrase terms by construction
-    qt_rows = query_term_rows(phrases, ana)
-    ptok_rows = [(pid, ana.py_tokenize(text)) for pid, text in phrases]
-    if not qt_rows:
-        return spark.createDataFrame(
-            [], "pid BIGINT, rank INT, doc_id BIGINT, score DOUBLE")
-    qt = spark.createDataFrame(qt_rows, "pid BIGINT, term STRING, qtf BIGINT")
-    ptoks = spark.createDataFrame(ptok_rows, "pid BIGINT, ptoks ARRAY<STRING>")
-    cand = _conjunctive_candidates(spark, index_dir, qt)
+    qplan = _and_plan(spark, index_dir, phrases, ana)
+    if not qplan:
+        return local_frame(
+            spark, None, "pid BIGINT, rank INT, doc_id BIGINT, score DOUBLE")
+    ptoks = local_frame(spark, pd.DataFrame(
+        [(pid, ana.py_tokenize(text)) for pid, text in phrases
+         if pid in qplan], columns=["qid", "ptoks"]),
+        "qid BIGINT, ptoks ARRAY<STRING>")
+    # RETRIEVE: every full match is a candidate (top_k=0), which the route
+    # rule never serves driver-side, so this is the distributed route
+    cand = shard_hits(spark, index_dir, qplan, top_k=0, mode="and")
 
     # VERIFY: shrink the corpus scan to candidate ids first (semi-join;
     # AQE broadcasts it when the candidate set is small — the common
@@ -280,7 +166,7 @@ def phrase_topk(
     )
     verified = (
         cand.join(dtoks, "doc_id")
-        .join(F.broadcast(ptoks), "pid")
+        .join(F.broadcast(ptoks), "qid")
         .where(
             (F.size("toks") >= F.size("ptoks"))
             & F.expr("exists(sequence(1, size(toks) - size(ptoks) + 1), "
@@ -288,8 +174,4 @@ def phrase_topk(
         )
     )
 
-    w = Window.partitionBy("pid").orderBy(F.desc("score"), F.asc("doc_id"))
-    ranked = verified.withColumn("rank", F.row_number().over(w))
-    if top_k and top_k > 0:
-        ranked = ranked.where(F.col("rank") <= top_k)
-    return ranked.select("pid", "rank", "doc_id", "score")
+    return rank_hits(verified, top_k).withColumnRenamed("qid", "pid")

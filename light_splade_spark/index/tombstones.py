@@ -40,6 +40,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
+from light_splade_spark.session import local_frame
+
 TOMBSTONE_DIR = "tombstones"
 
 
@@ -56,10 +58,11 @@ def delete_docs(spark: SparkSession, index_dir: str,
         n = df.count()
     else:
         # deduplicated on the driver and shipped as one Arrow local
-        # relation: no pickled parallelize RDD, no Python worker, no shuffle
+        # relation: no pickled parallelize RDD, no Python worker, no
+        # shuffle (an empty list too)
         ids = np.unique(np.asarray([int(d) for d in doc_ids], dtype=np.int64))
-        df = spark.createDataFrame(pd.DataFrame({"doc_id": ids}),
-                                   "doc_id BIGINT")
+        df = local_frame(spark, pd.DataFrame({"doc_id": ids}),
+                         "doc_id BIGINT")
         n = int(ids.size)
     out = os.path.join(index_dir, TOMBSTONE_DIR, f"batch-{time.time_ns()}")
     df.write.mode("overwrite").parquet(out)

@@ -23,6 +23,10 @@ bound falls below the running k-th best score minus the rounding guard —
 identical results to exhaustive scoring (reference semantics,
 ``sparse_retriever.py:78-96``), without decoding cold blocks.
 
+The same kernel serves boolean-AND retrieval (``mode="and"``,
+index/phrase.py): per shard it intersects the query terms' decoded lists
+instead of pruning, through the same routes (``shard_topk``).
+
 Scores: Σ qtf * w  with w the float32 impact stored at build time; rounded to
 SCORE_DECIMALS with deterministic (score DESC, doc_id ASC) tie-break, matching
 plans/bm25_sql.py.
@@ -46,7 +50,9 @@ from light_splade_spark.index.build import (
     scan_term_postings,
 )
 from light_splade_spark.index.manifest import IndexManifest
+from light_splade_spark.index.tombstones import load_tombstone_ids
 from light_splade_spark.plans.bm25_sql import SCORE_DECIMALS
+from light_splade_spark.session import local_frame
 
 _GUARD = 10.0 ** (-SCORE_DECIMALS)  # rounding guard for the prune bound
 
@@ -61,13 +67,18 @@ def _score_shard(
     weight_bits: int = 32,
     block_size: int = 128,
     excluded_docs: np.ndarray | None = None,
+    banned_tids: list[int] | None = None,
 ) -> pd.DataFrame:
     """Exact per-shard top-k for every query. pdf: posting rows of ONE shard
     restricted to query terms. ``target_docs`` (sorted int64) restricts
     scoring to a doc subset at decode time — the reference's row-gather
     (sparse_indexer.py:163-168) pushed into the kernel instead of filtering
     a full-corpus result. ``excluded_docs`` (sorted int64) removes docs at
-    decode time — the tombstone-delete read path (index/tombstones.py)."""
+    decode time — the tombstone-delete read path (index/tombstones.py).
+
+    ``mode="and"`` is boolean-AND retrieval (index/phrase.py): a query
+    matches only docs holding ALL its plan terms, minus docs holding any
+    ``banned_tids`` term (whose rows pdf must also carry)."""
     rows: dict[int, list] = {}
     for r in pdf.itertuples(index=False):
         rows.setdefault(int(r.term_id), []).append(r)
@@ -94,7 +105,15 @@ def _score_shard(
             docs, ws = docs[keep], ws[keep]
         if docs.size == 0:
             continue
-        if len(lists) > 1 or keep is not None:
+        # a re-appended (zombie) doc id is listed once per live copy: sum
+        # the copies so every scorer reads a sorted, unique list
+        folded = bool((docs[1:] == docs[:-1]).any())
+        if folded:
+            docs, inv = np.unique(docs, return_inverse=True)
+            ws = np.bincount(inv, weights=ws.astype(np.float64))
+        if mode == "and":
+            bm_last = bm_max = None  # the AND scorer reads no block maxima
+        elif len(lists) > 1 or keep is not None or folded:
             # stored block meta no longer matches the list; rebuild
             _, bm_last, bm_max, _, _ = _block_meta(
                 docs, ws, np.array([0]), np.array([docs.size]), block_size)
@@ -102,6 +121,9 @@ def _score_shard(
             bm_last = np.asarray(rs[0].bm_last, dtype=np.int64)
             bm_max = np.asarray(rs[0].bm_max, dtype=np.float32)
         decoded[tid] = (docs, ws, bm_last, bm_max)
+    if mode == "and":
+        return _cut_rounded_topk(_and_scores(decoded, qplan, banned_tids),
+                                 top_k, threshold)
     if len(qplan) >= 64 and target_docs is None:
         # large batches: per-query block-max pruning stops paying (the
         # batch touches most postings anyway) while per-query concat+unique
@@ -186,6 +208,35 @@ def _taat_shared(decoded, qplan):
         scores = acc[touched].copy()
         acc[touched] = 0.0  # O(touched) reset, accumulator reused
         yield qid, all_docs[touched], scores
+
+
+def _and_scores(decoded, qplan, banned_tids):
+    """Boolean-AND scorer. Yields (qid, docs, scores) for the docs of the
+    shard that hold every plan term of the query and no banned term.
+    Scores are Σ qtf * w summed in plan-term order from 0.0, the order
+    _taat's bincount adds in, so an AND score equals the disjunctive
+    routes' score for the same (query, doc) bit for bit."""
+    banned = [decoded[t][0] for t in banned_tids or () if t in decoded]
+    banned = np.concatenate(banned) if banned else None
+    for qid, tlist in qplan.items():
+        if any(tid not in decoded for tid, _ in tlist):
+            continue  # a term with no live posting here: no full match
+        # decoded doc lists are sorted and unique (_score_shard folds
+        # re-appended ids); intersect from the shortest one up
+        lists = sorted((decoded[tid][0] for tid, _ in tlist), key=len)
+        docs = lists[0]
+        for d in lists[1:]:
+            docs = np.intersect1d(docs, d, assume_unique=True)
+        if banned is not None:
+            docs = docs[~np.isin(docs, banned)]
+        if docs.size == 0:
+            continue
+        scores = np.zeros(docs.size, dtype=np.float64)
+        for tid, qtf in tlist:
+            d, w = decoded[tid][:2]
+            scores += (w[np.searchsorted(d, docs)].astype(np.float64)
+                       * float(qtf))
+        yield qid, docs, scores
 
 
 def _taat(terms) -> tuple[np.ndarray, np.ndarray]:
@@ -381,6 +432,7 @@ def score_local(
     mode: str = "bmw",
     target_docs: np.ndarray | None = None,
     excluded_docs: np.ndarray | None = None,
+    banned_tids: list[int] | None = None,
 ) -> pd.DataFrame:
     """Spark-free execution of the SAME shard kernel -> pandas
     (qid, rank, doc_id, score): the point-query serving path.
@@ -402,7 +454,7 @@ def score_local(
     import pyarrow as pa
     import pyarrow.dataset as pds
 
-    tids = sorted({tid for lst in qplan.values() for tid, _ in lst})
+    tids = _plan_term_ids(qplan, banned_tids)
     buckets = sorted({tid % man.n_buckets for tid in tids})
     # explicit string-typed shard_group: hive inference would type an
     # all-numeric group set as int, breaking the liveness isin below
@@ -432,7 +484,8 @@ def score_local(
                                       target_docs=target_docs,
                                       weight_bits=man.weight_bits,
                                       block_size=man.block_size,
-                                      excluded_docs=excluded_docs))
+                                      excluded_docs=excluded_docs,
+                                      banned_tids=banned_tids))
     hits = (pd.concat(parts, ignore_index=True) if parts
             else pd.DataFrame({"qid": [], "doc_id": [], "score": []}))
     hits["score"] = hits["score"].map(_round_half_up)
@@ -448,6 +501,103 @@ def score_local(
         "doc_id": hits["doc_id"].astype("int64"),
         "score": hits["score"].astype("float64"),
     })
+
+
+def _plan_term_ids(qplan, banned_tids=None) -> list[int]:
+    """Sorted term ids a kernel run reads: the plan's plus the banned."""
+    return sorted({tid for lst in qplan.values() for tid, _ in lst}
+                  | set(banned_tids or ()))
+
+
+def shard_topk(
+    spark: SparkSession,
+    index_dir: str,
+    qplan: dict[int, list[tuple[int, float]]],
+    *,
+    top_k: int,
+    threshold: float = 0.0,
+    mode: str = "bmw",
+    local: str = "auto",
+    target_docs: np.ndarray | None = None,
+    banned_tids: list[int] | None = None,
+) -> DataFrame:
+    """Route one planned batch through the shard kernel -> DataFrame
+    (qid, rank, doc_id, score); the one route rule of ``wand_topk`` and
+    ``phrase.conjunctive_topk`` (see ``wand_topk`` for ``local``). The
+    local route scores in-process (``score_local``); the distributed one
+    is ``shard_hits`` + ``rank_hits``. An empty plan, and the local
+    route's result, come back as Arrow local relations: no Spark job."""
+    if local not in ("auto", "never", "force"):
+        raise ValueError(f"unknown local={local!r} (auto/never/force)")
+    if not qplan:
+        return local_frame(spark, None, _RESULT_SCHEMA)
+    is_local = os.path.isdir(os.path.join(index_dir, "postings"))
+    if local == "force" and not is_local:
+        raise ValueError(
+            f"local='force' but {index_dir} is not a local filesystem index")
+    if local == "force" or (local == "auto" and is_local
+                            and len(qplan) <= LOCAL_PATH_MAX_QUERIES
+                            and top_k and top_k > 0):
+        return local_frame(spark, score_local(
+            index_dir, qplan, IndexManifest.load(index_dir), top_k=top_k,
+            threshold=threshold, mode=mode, target_docs=target_docs,
+            excluded_docs=load_tombstone_ids(index_dir),
+            banned_tids=banned_tids), _RESULT_SCHEMA)
+    return rank_hits(shard_hits(
+        spark, index_dir, qplan, top_k=top_k, threshold=threshold, mode=mode,
+        target_docs=target_docs, banned_tids=banned_tids), top_k)
+
+
+def shard_hits(
+    spark: SparkSession,
+    index_dir: str,
+    qplan: dict[int, list[tuple[int, float]]],
+    *,
+    top_k: int,
+    threshold: float = 0.0,
+    mode: str = "bmw",
+    target_docs: np.ndarray | None = None,
+    banned_tids: list[int] | None = None,
+) -> DataFrame:
+    """The distributed kernel route, unranked -> (qid, doc_id, score >=
+    ``threshold``, rounded like plans/bm25_sql): pruned scan of the plan's
+    and banned terms, ``groupBy(shard).applyInPandas(_score_shard)``. Keeps
+    each shard's rounded top-k ties (every hit for ``top_k=0``) minus
+    tombstoned docs; ``rank_hits`` makes the global cut."""
+    man = IndexManifest.load(index_dir)
+    excluded = load_tombstone_ids(index_dir)
+    posts = scan_term_postings(spark, index_dir,
+                               _plan_term_ids(qplan, banned_tids),
+                               man.n_buckets)
+    posts = posts.select("shard", "term_id", "postings", "bm_last", "bm_max")
+    wb, bs = man.weight_bits, man.block_size
+
+    # a NAMED function (not functools.partial): applyInPandas infers the
+    # eval type from the callable and warns on partials — noise in every
+    # driver log at scale
+    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
+        return _score_shard(pdf, qplan=qplan, top_k=top_k,
+                            threshold=threshold, mode=mode,
+                            target_docs=target_docs, weight_bits=wb,
+                            block_size=bs, excluded_docs=excluded,
+                            banned_tids=banned_tids)
+
+    hits = posts.groupBy("shard").applyInPandas(
+        kernel, "qid BIGINT, doc_id BIGINT, score DOUBLE"
+    )
+    return hits.select(
+        "qid", "doc_id", F.round("score", SCORE_DECIMALS).alias("score")
+    ).where(F.col("score") >= F.lit(threshold))
+
+
+def rank_hits(scored: DataFrame, top_k: int) -> DataFrame:
+    """(qid, doc_id, score) -> (qid, rank, doc_id, score): per-qid window
+    over (score DESC, doc_id ASC), cut at ``top_k`` (0 keeps every row)."""
+    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("doc_id"))
+    ranked = scored.withColumn("rank", F.row_number().over(w))
+    if top_k and top_k > 0:
+        ranked = ranked.where(F.col("rank") <= top_k)
+    return ranked.select("qid", "rank", "doc_id", "score")
 
 
 def wand_topk(
@@ -477,52 +627,9 @@ def wand_topk(
     same kernel — no Spark job, ~10x lower latency; "never" forces the
     distributed plan; "force" demands the local path (raises if the index
     dir is not a local filesystem path)."""
-    if local not in ("auto", "never", "force"):
-        raise ValueError(f"unknown local={local!r} (auto/never/force)")
-    qplan, tids, _ = build_query_plan(spark, index_dir, queries,
-                                      query_weights)
+    qplan, _, _ = build_query_plan(spark, index_dir, queries, query_weights)
     target = (np.unique(np.asarray(target_doc_ids, dtype=np.int64))
               if target_doc_ids is not None else None)
-    if not qplan:
-        return spark.createDataFrame([], _RESULT_SCHEMA)
-    man_early = IndexManifest.load(index_dir)
-    from light_splade_spark.index.tombstones import load_tombstone_ids
-    excluded = load_tombstone_ids(index_dir)
-    want_local = (
-        local == "force"
-        or (local == "auto" and len(qplan) <= LOCAL_PATH_MAX_QUERIES
-            and top_k and top_k > 0
-            and os.path.isdir(os.path.join(index_dir, "postings"))))
-    if want_local:
-        if not os.path.isdir(os.path.join(index_dir, "postings")):
-            raise ValueError(
-                f"local='force' but {index_dir} is not a local filesystem "
-                "index")
-        return spark.createDataFrame(
-            score_local(index_dir, qplan, man_early, top_k=top_k,
-                        threshold=threshold, mode=mode, target_docs=target,
-                        excluded_docs=excluded), _RESULT_SCHEMA)
-    posts = scan_term_postings(spark, index_dir, tids, man_early.n_buckets)
-    posts = posts.select("shard", "term_id", "postings", "bm_last", "bm_max")
-    wb, bs = man_early.weight_bits, man_early.block_size
-
-    # a NAMED function (not functools.partial): applyInPandas infers the
-    # eval type from the callable and warns on partials — noise in every
-    # driver log at scale
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        return _score_shard(pdf, qplan=qplan, top_k=top_k,
-                            threshold=threshold, mode=mode,
-                            target_docs=target, weight_bits=wb,
-                            block_size=bs, excluded_docs=excluded)
-
-    shard_hits = posts.groupBy("shard").applyInPandas(
-        kernel, "qid BIGINT, doc_id BIGINT, score DOUBLE"
-    )
-    scored = shard_hits.select(
-        "qid", "doc_id", F.round("score", SCORE_DECIMALS).alias("score")
-    ).where(F.col("score") >= F.lit(threshold))
-    w = Window.partitionBy("qid").orderBy(F.desc("score"), F.asc("doc_id"))
-    ranked = scored.withColumn("rank", F.row_number().over(w))
-    if top_k and top_k > 0:
-        ranked = ranked.where(F.col("rank") <= top_k)
-    return ranked.select("qid", "rank", "doc_id", "score")
+    return shard_topk(spark, index_dir, qplan, top_k=top_k,
+                      threshold=threshold, mode=mode, local=local,
+                      target_docs=target)

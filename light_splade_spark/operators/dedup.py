@@ -291,11 +291,6 @@ def ngram_jaccard_pairs(docs: DataFrame, id_col: str = "doc_id",
 SIMHASH_BITS = 60  # 15 hex chars of md5 -> fits a signed 64-bit int everywhere
 
 
-def _term_hash60():
-    """60-bit cross-engine term hash: conv(md5[0:15], 16, 10)."""
-    return F.conv(F.substring(F.md5(F.col("term")), 1, 15), 16, 10).cast("bigint")
-
-
 def simhash(docs: DataFrame, id_col: str = "doc_id",
             text_col: str = "text", bits: int = SIMHASH_BITS) -> DataFrame:
     """(doc_id, simhash BIGINT) — classic Charikar simhash over distinct terms.

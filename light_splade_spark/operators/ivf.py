@@ -39,6 +39,7 @@ from light_splade_spark.operators.similarity import (
     cosine_col,
     kmeans_centroids,
 )
+from light_splade_spark.session import local_frame
 
 IVF_FORMAT_VERSION = 1
 
@@ -154,8 +155,8 @@ def ivf_search(
     C, cids = read_ivf_centroids(spark, ivf_dir)
     qv = np.asarray([v for _, v in queries], dtype=np.float64)
     if qv.size == 0:
-        return spark.createDataFrame(
-            [], "qid BIGINT, rank INT, nid BIGINT, cos DOUBLE")
+        return local_frame(
+            spark, None, "qid BIGINT, rank INT, nid BIGINT, cos DOUBLE")
     probes = probe_lists(C, cids, qv, n_probe)
     q_rows = [(int(qid), list(map(float, vec)), [int(p) for p in ps])
               for (qid, vec), ps in zip(queries, probes)]

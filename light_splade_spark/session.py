@@ -9,7 +9,9 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+import pandas as pd
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 # Defaults chosen for the sandbox (single JVM, 32 threads, 128 GiB). On a real
 # cluster these come from spark-submit; nothing below hard-codes local paths.
@@ -64,3 +66,18 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def local_frame(spark: SparkSession, pdf: pd.DataFrame | None,
+                schema: str) -> DataFrame:
+    """Driver-side pandas frame (None: empty) -> DataFrame with DDL
+    ``schema`` (same column names) via Arrow: a ``LocalTableScan`` that runs
+    no Spark job, even when empty. ``createDataFrame`` on a list or an EMPTY
+    pandas frame runs a pickled Python-RDD job instead."""
+    import pyarrow as pa
+
+    struct = StructType.fromDDL(schema)
+    if pdf is None:
+        pdf = pd.DataFrame(columns=struct.fieldNames())
+    return spark.createDataFrame(
+        pa.Table.from_pandas(pdf, preserve_index=False), struct)

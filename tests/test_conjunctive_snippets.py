@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -186,3 +187,149 @@ def test_conjunctive_exclude_terms(eng):
     same = engine.conjunctive([(0, "hash join")], top_k=0,
                               exclude="zzzabsent").collect()
     assert {r["doc_id"] for r in same} == set(base)
+
+
+def test_absent_term_queries_run_no_spark_job(eng, spark, spark_jobs):
+    """A query whose plan is empty comes back as an Arrow local relation:
+    collecting it runs no Spark job (an empty list or pandas frame would
+    be a pickled Python RDD, one job per call)."""
+    from light_splade_spark.index.phrase import conjunctive_topk
+    from light_splade_spark.index.wand import wand_topk
+
+    engine, _ = eng
+    rows, jobs = spark_jobs(lambda: wand_topk(
+        spark, engine.index_dir, [(0, "zzzabsent")], top_k=10).collect())
+    assert rows == [] and jobs == []
+    rows, jobs = spark_jobs(lambda: conjunctive_topk(
+        spark, engine.index_dir, [(0, "spark zzzabsent")],
+        top_k=10).collect())
+    assert rows == [] and jobs == []
+
+
+_WORDS = ["alpha", "beta", "gamma", "delta", "epsilon", "zeta", "eta",
+          "theta", "iota", "kappa", "lambda", "mu", "nu", "xi", "omicron",
+          "pi", "rho", "sigma", "tau", "upsilon"]
+
+
+def _zipf_docs(rng, ids):
+    p = 1.0 / np.arange(1, len(_WORDS) + 1)
+    return [(int(i), " ".join(rng.choice(_WORDS, int(rng.integers(4, 11)),
+                                         p=p / p.sum())))
+            for i in ids]
+
+
+def _and_rows(spark, idx, queries, top_k, exclude, local):
+    """conjunctive_topk with its route pinned to ``local``."""
+    import light_splade_spark.index.phrase as phrase
+
+    real = phrase.shard_topk
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(phrase, "shard_topk",
+                   lambda *a, **kw: real(*a, local=local, **kw))
+        return sorted(tuple(r) for r in phrase.conjunctive_topk(
+            spark, idx, queries, top_k=top_k, exclude=exclude).collect())
+
+
+def test_and_routes_identical_matrix(spark, tmp_path):
+    """The driver-local and distributed AND routes return identical
+    (qid, rank, doc_id, score) rows on float32 and weight_bits=8 indexes
+    with an appended shard group, tombstones and re-appended doc ids,
+    with and without an excluded term, at top_k 0/2/10, for a 2-query
+    batch and a 70-query batch (past the kernel's 64-query shared-scorer
+    switch, which the AND mode must bypass). The full-match sets are
+    checked against the corpus text, with scores taken from the
+    disjunctive route.
+
+    A re-appended id keeps its old postings beside the new ones (the
+    zombie contract, streaming/incremental.append_batch), so its term
+    lists hold the id twice: it matches the union of both texts' terms,
+    and must not match a query only because one term lists it twice."""
+    from light_splade_spark.index.build import build_index
+    from light_splade_spark.index.tombstones import delete_docs
+    from light_splade_spark.index.wand import wand_topk
+    from light_splade_spark.streaming.incremental import append_batch
+
+    rng = np.random.default_rng(7)
+    base = _zipf_docs(rng, range(300))
+    extra = _zipf_docs(rng, range(5000, 5040))
+    top = _WORDS[:10]
+    big = [(q, " ".join(rng.choice(top, int(rng.integers(2, 4)),
+                                   replace=False)))
+           for q in range(70)]
+    small = big[:2]
+    for wb in (32, 8):
+        idx = str(tmp_path / f"and{wb}")
+        build_index(spark, spark.createDataFrame(
+            base, "doc_id BIGINT, text STRING"), idx, n_shards=4,
+            n_buckets=4, n_salts=2, n_shard_groups=1, block_size=16,
+            weight_bits=wb)
+        append_batch(spark, idx, spark.createDataFrame(
+            extra, "doc_id BIGINT, text STRING"), "p1")
+        # doc 1 re-appended as is, doc 4 deleted then re-appended, and
+        # 5039 (the highest id) re-appended holding two top terms only
+        delete_docs(spark, idx, [4])
+        zombies = [(1, base[1][1]), (4, " ".join(top[:3])),
+                   (5039, " ".join(top[:2]))]
+        append_batch(spark, idx, spark.createDataFrame(
+            zombies, "doc_id BIGINT, text STRING"), "z1")
+        victims = [r[2] for r in _and_rows(spark, idx, small, 3, None,
+                                           "never")
+                   if r[2] not in dict(zombies)]
+        delete_docs(spark, idx, victims + [5001])
+        dead = set(victims) | {5001}
+        terms = {d: set(t.split()) for d, t in base + extra if d not in dead}
+        for d, t in zombies:
+            terms[d] |= set(t.split())
+        score = {(r.qid, r.doc_id): r.score for r in wand_topk(
+            spark, idx, big, top_k=0, local="never").collect()}
+        for exclude in (None, "theta"):
+            full = sorted(
+                (q, d) for q, text in big for d, ts in terms.items()
+                if set(text.split()) <= ts
+                and not (exclude and exclude in ts))
+            for top_k in (0, 2, 10):
+                for batch in (small, big):
+                    loc = _and_rows(spark, idx, batch, top_k, exclude,
+                                    "force")
+                    dist = _and_rows(spark, idx, batch, top_k, exclude,
+                                     "never")
+                    assert loc == dist and loc, (wb, exclude, top_k,
+                                                 len(batch))
+                    assert not dead & {d for _, _, d, _ in loc}
+                if top_k == 0:  # loc: the 70-query batch's rows
+                    assert [(q, d) for q, _, d, _ in sorted(
+                        loc, key=lambda r: (r[0], r[2]))] == full
+                    assert all(score[q, d] == s for q, _, d, s in loc)
+
+
+def test_and_routes_after_compacting_reappended_ids(spark, tmp_path):
+    """Compaction folds a re-appended id's old and new postings into ONE
+    list that holds the id twice. Doc 3 re-appended with "spark" only:
+    "spark join" still matches it through its old text; doc 6 (past every
+    "join" posting) re-appended with "spark" only must not match "spark
+    join". Both AND routes agree, and scores equal the disjunctive
+    route's (both copies' impacts summed) on the per-query and the
+    64-query shared-scorer paths."""
+    from light_splade_spark.index.wand import wand_topk
+    from light_splade_spark.streaming.incremental import append_batch
+
+    corpus = CORPUS + [(6, "spark only here")]
+    idx = str(tmp_path / "zc")
+    eng = Engine.build(spark, spark.createDataFrame(
+        corpus, "doc_id BIGINT, text STRING"), idx, n_shards=1,
+        n_buckets=4, n_salts=2, n_shard_groups=1, block_size=2)
+    append_batch(spark, idx, spark.createDataFrame(
+        [(3, "spark"), (6, "spark")], "doc_id BIGINT, text STRING"), "z")
+    eng.compact()
+    qs = [(0, "spark join"), (1, "spark hash")]
+    want = {0: [0, 2, 3], 1: [0, 3]}
+    for batch in (qs, qs * 32):  # 64 queries: the shared-scorer switch
+        batch = [(i, t) for i, (_, t) in enumerate(batch)]
+        score = {(r.qid, r.doc_id): r.score for r in wand_topk(
+            spark, idx, batch, top_k=0, local="never").collect()}
+        for local in ("force", "never"):
+            rows = _and_rows(spark, idx, batch, 10, None, local)
+            for q, _ in batch:
+                assert sorted(d for qq, _, d, _ in rows if qq == q) \
+                    == want[q % 2], (local, len(batch), q)
+            assert all(score[q, d] == s for q, _, d, s in rows)

@@ -3,8 +3,8 @@
 * partitioning.spread_input — the guide-§2.5 input-skew guard must widen
   an under-partitioned scan, leave well-partitioned inputs untouched, and
   never change operator results.
-* index.phrase.conjunctive_topk — the literal-map attach (small batches)
-  and the broadcast-DataFrame attach (large batches) must produce
+* index.phrase.conjunctive_topk — the driver-local route (point batches)
+  and the distributed shard route (larger batches) must produce
   identical rows for the same queries.
 """
 
@@ -69,19 +69,20 @@ def tiny_index(spark):
     shutil.rmtree(idx, ignore_errors=True)
 
 
-def test_conjunctive_literal_and_dataframe_routes_agree(
+def test_conjunctive_local_and_distributed_routes_agree(
         spark, tiny_index, monkeypatch):
     import light_splade_spark.index.phrase as phrase
+    import light_splade_spark.index.wand as wand
 
     queries = [(1, "alpha beta"), (2, "beta gamma"), (3, "alpha missing"),
                (4, "delta")]
-    lit = sorted(tuple(r) for r in phrase.conjunctive_topk(
+    loc = sorted(tuple(r) for r in phrase.conjunctive_topk(
         spark, tiny_index, queries, top_k=10).collect())
-    assert lit, "literal route returned nothing"
-    # force every batch onto the broadcast-DataFrame route
-    monkeypatch.setattr(phrase, "LITERAL_PLAN_MAX", 0)
-    dfr = sorted(tuple(r) for r in phrase.conjunctive_topk(
+    assert loc, "local route returned nothing"
+    # force every batch onto the distributed shard route
+    monkeypatch.setattr(wand, "LOCAL_PATH_MAX_QUERIES", 0)
+    dist = sorted(tuple(r) for r in phrase.conjunctive_topk(
         spark, tiny_index, queries, top_k=10).collect())
-    assert lit == dfr
+    assert loc == dist
     # the all-terms-must-match semantics: qid 3 has an absent term
-    assert not any(r[0] == 3 for r in lit)
+    assert not any(r[0] == 3 for r in loc)
