@@ -87,15 +87,32 @@ def q_dot_topk(spark, sf_dir):
             .where(F.col("rank") <= TOP_K).select("qid", "rank", "doc_id", "score"))
 
 
+def _fixture_tag(sf_dir: str) -> str:
+    """Cache-key tag of the fixture indexes kept under /tmp: the sf path
+    plus an md5 of the library's sources, so a gate run never scores an
+    index that older code built."""
+    import glob
+    import hashlib
+
+    lib = os.path.join(os.path.dirname(os.path.abspath(__file__)),
+                       "light_splade_spark")
+    src = hashlib.md5()
+    for path in sorted(glob.glob(os.path.join(lib, "**", "*.py"),
+                                 recursive=True)):
+        src.update(os.path.relpath(path, lib).encode())
+        with open(path, "rb") as f:
+            src.update(f.read())
+    return (f"{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}_"
+            f"{src.hexdigest()[:8]}")
+
+
 def _cached_index(spark, sf_dir: str) -> str:
     """Build-once per-sf index cache shared by the WAND and join-scorer
     queries; returns the index dir (rebuilding once on corrupt cache)."""
-    import hashlib
-
     from light_splade_spark.index.build import INDEX_FORMAT_VERSION, build_index
     from light_splade_spark.index.manifest import CorruptIndexError, IndexManifest
 
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
+    tag = _fixture_tag(sf_dir)
     idx = f"/tmp/lss_index_v{INDEX_FORMAT_VERSION}_{tag}"
 
     def _build():
@@ -184,8 +201,6 @@ def _compact_docs(spark, sf_dir: str) -> DataFrame:
 
 
 def _compacted_index(spark, sf_dir: str) -> str:
-    import hashlib
-
     from light_splade_spark.index.build import (
         INDEX_FORMAT_VERSION,
         build_index,
@@ -199,7 +214,7 @@ def _compacted_index(spark, sf_dir: str) -> str:
 
     # f2 = fixture layout v2 (two append batches + injected novel terms);
     # keeps any pre-existing one-batch cache dir from validating
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
+    tag = _fixture_tag(sf_dir)
     idx = f"/tmp/lss_compact_idx_v{INDEX_FORMAT_VERSION}f2_{tag}"
 
     def _build():
@@ -325,8 +340,6 @@ TOMB_MOD = 7  # Q:tombstoned_topk deletes doc_id % TOMB_MOD == 3
 def _tombstoned_index(spark, sf_dir: str) -> str:
     """Cached index over base docs with doc_id % TOMB_MOD == 3 tombstoned
     (never compacted — the query exercises the tombstone READ path)."""
-    import hashlib
-
     from light_splade_spark.index.build import (
         INDEX_FORMAT_VERSION,
         build_index,
@@ -340,7 +353,7 @@ def _tombstoned_index(spark, sf_dir: str) -> str:
         load_tombstone_ids,
     )
 
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
+    tag = _fixture_tag(sf_dir)
     idx = f"/tmp/lss_tomb_idx_v{INDEX_FORMAT_VERSION}_{tag}"
 
     def _build():
@@ -529,8 +542,6 @@ def q_ivf_indexed_topk(spark, sf_dir):
     once at build; the query plan prunes to the probed list_id partitions
     and contains no corpus-wide UDF (asserted in tests/test_ivf_artifact).
     Head centroids so the ivf_topk DuckDB oracle mirrors it row-for-row."""
-    import hashlib
-
     from light_splade_spark.operators.ivf import (
         IVF_FORMAT_VERSION,
         build_ivf,
@@ -538,7 +549,7 @@ def q_ivf_indexed_topk(spark, sf_dir):
     )
 
     emb = _emb(spark, sf_dir)
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
+    tag = _fixture_tag(sf_dir)
     d = f"/tmp/lss_ivf_v{IVF_FORMAT_VERSION}_{tag}_c64"
     if not os.path.exists(os.path.join(d, "manifest.json")):
         build_ivf(emb, d, n_centroids=64, centroids="head")

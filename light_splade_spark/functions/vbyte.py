@@ -1,15 +1,17 @@
 """Delta-gap + VByte posting compression — vectorized numpy kernels.
 
 No Spark primitive compresses posting lists, so this is genuine custom code
-(SURVEY.md §4 item 2), run inside Arrow-batched pandas UDFs only. Layout of an
-encoded run (one per (term, salt-range) in phase 1; one per term after the
-phase-2 merge):
+(SURVEY.md §4 item 2), run inside Arrow-batched pandas UDFs only. Layout of
+one stored posting row (one per (shard, term) per posting group):
 
-    [n: varint] [delta varints x n] [weights: float32 x n little-endian]
+    [n: varint] [delta varints x n] [weights x n]
 
-deltas[0] = doc_ids[0] - base (base = -1 for a standalone run, or the previous
-run's last doc at merge time), deltas[i] = doc_ids[i] - doc_ids[i-1]; doc_ids
-strictly ascending and strictly > base, so every delta >= 1.
+deltas[0] = doc_ids[0] + 1, deltas[i] = doc_ids[i] - doc_ids[i-1]; doc_ids
+are non-negative and strictly ascending, so every delta >= 1. Weights are
+little-endian float32, or uint8 block-relative codes at weight_bits=8. The
+encoder (index/build._encode_groups) and the run merge
+(index/build._merge_groups) build this layout from ``vbyte_encode``;
+``decode_run`` reads it back.
 
 VByte: classic 7-bit groups, little-endian, high bit set on the LAST byte of
 each value (the scheme used by Lucene's VInt, public knowledge).
@@ -22,12 +24,14 @@ import numpy as np
 _MASK = np.uint64(0x7F)
 
 
-def vbyte_encode(values: np.ndarray) -> bytes:
-    """Vectorized VByte encode of a uint64 array."""
+def vbyte_encode(values: np.ndarray) -> tuple[bytes, np.ndarray]:
+    """Vectorized VByte encode of a uint64 array -> (buffer, per-value byte
+    counts); the counts let callers slice the buffer per logical segment
+    without re-parsing."""
     v = values.astype(np.uint64, copy=False)
     n = v.size
     if n == 0:
-        return b""
+        return b"", np.zeros(0, dtype=np.int64)
     # bytes needed per value: ceil(bit_length / 7), min 1
     nbits = np.zeros(n, dtype=np.int64)
     tmp = v.copy()
@@ -55,7 +59,7 @@ def vbyte_encode(values: np.ndarray) -> bytes:
         remaining[active] >>= np.uint64(7)
         idx[active] += 1
         left[active] -= 1
-    return out.tobytes()
+    return out.tobytes(), nbytes
 
 
 def vbyte_decode(buf: np.ndarray | bytes, n: int, offset: int = 0) -> tuple[np.ndarray, int]:
@@ -86,24 +90,6 @@ def vbyte_decode(buf: np.ndarray | bytes, n: int, offset: int = 0) -> tuple[np.n
     return values, offset + int(last) + 1
 
 
-def vbyte_encode_sized(values: np.ndarray) -> tuple[bytes, np.ndarray]:
-    """Like vbyte_encode but also returns per-value byte counts, so callers
-    can slice the buffer per logical segment without re-parsing."""
-    v = values.astype(np.uint64, copy=False)
-    n = v.size
-    if n == 0:
-        return b"", np.zeros(0, dtype=np.int64)
-    nbits = np.zeros(n, dtype=np.int64)
-    tmp = v.copy()
-    nz = tmp > 0
-    while nz.any():
-        nbits[nz] += 1
-        tmp >>= np.uint64(7)
-        nz = tmp > 0
-    nbytes = np.maximum(nbits, 1)
-    return vbyte_encode(v), nbytes
-
-
 def _write_varint_scalar(x: int) -> bytes:
     if x < 0:
         # Python's arithmetic right shift never zeroes a negative int, so a
@@ -120,30 +106,6 @@ def _write_varint_scalar(x: int) -> bytes:
         out.append(b)
 
 
-def encode_run(doc_ids: np.ndarray, weights: np.ndarray, base: int = -1) -> bytes:
-    """Encode one doc-id-ascending posting run.
-
-    doc_ids must be non-negative and strictly ascending, and all > ``base`` —
-    otherwise a delta would go negative and silently corrupt via the uint64
-    cast, so this raises instead."""
-    doc_ids = np.asarray(doc_ids, dtype=np.int64)
-    weights = np.asarray(weights, dtype=np.float32)
-    n = doc_ids.size
-    deltas = np.empty(n, dtype=np.uint64)
-    if n:
-        if int(doc_ids[0]) < 0 or int(doc_ids[0]) <= base:
-            raise ValueError(
-                f"doc ids must be non-negative and > base={base}; "
-                f"got first id {int(doc_ids[0])} (equality would decode a "
-                "duplicate doc id after run concatenation)")
-        d = np.diff(doc_ids)
-        if d.size and int(d.min()) <= 0:
-            raise ValueError("doc ids must be strictly ascending")
-        deltas[0] = np.uint64(doc_ids[0] - base)
-        deltas[1:] = d.astype(np.uint64)
-    return _write_varint_scalar(n) + vbyte_encode(deltas) + weights.tobytes()
-
-
 def decode_run(buf: bytes, base: int = -1,
                weight_bits: int = 32) -> tuple[np.ndarray, np.ndarray]:
     """-> (doc_ids int64, weights float32 or uint8 codes for weight_bits=8)."""
@@ -157,54 +119,3 @@ def decode_run(buf: bytes, base: int = -1,
     else:
         weights = np.frombuffer(buf, dtype=np.float32, count=n, offset=off)
     return doc_ids, weights
-
-
-def concat_runs(runs: list[bytes], bases_first_docs: list[tuple[int, int]],
-                weight_bits: int = 32) -> bytes:
-    """Phase-2 external merge: concatenate doc-range-disjoint sorted runs.
-
-    ``bases_first_docs[i] = (first_doc_i, last_doc_i)``; runs must be ordered
-    and non-overlapping (guaranteed by doc-id-range salting). Only the first
-    delta of each subsequent run needs patching, so the merge cost is O(runs),
-    not O(postings) — the point of the two-phase build.
-
-    ``weight_bits`` must match the encoding of the runs (32 = float32 weights,
-    8 = block-quantized uint8 codes); the production phase-2 merge is the
-    inlined variant in index/build.py's posting writer, which handles both.
-    """
-    wwidth = {32: 4, 8: 1}[weight_bits]
-    if len(runs) == 1:
-        return runs[0]
-    out = bytearray()
-    total_n = 0
-    payload = bytearray()
-    weights = bytearray()
-    prev_last = -1
-    for run, (first, last) in zip(runs, bases_first_docs):
-        arr = np.frombuffer(run, dtype=np.uint8)
-        (nv,), off = vbyte_decode(arr, 1, 0)
-        n = int(nv)
-        total_n += n
-        # patch first delta: stored as first - (-1); needs first - prev_last
-        d, off2 = vbyte_decode(arr, 1, off)
-        payload += _write_varint_scalar(first - prev_last)
-        payload += run[off2: off2 + _rest_delta_bytes(arr, off2, n - 1)]
-        woff = _weights_offset(arr, off, n)
-        weights += run[woff: woff + wwidth * n]
-        prev_last = last
-    out += _write_varint_scalar(total_n)
-    out += payload
-    out += weights
-    return bytes(out)
-
-
-def _rest_delta_bytes(arr: np.ndarray, off: int, n: int) -> int:
-    if n == 0:
-        return 0
-    _, end = vbyte_decode(arr, n, off)
-    return end - off
-
-
-def _weights_offset(arr: np.ndarray, delta_off: int, n: int) -> int:
-    _, end = vbyte_decode(arr, n, delta_off)
-    return end

@@ -30,6 +30,11 @@ Spark-first design (NOT a port of ``sparse_indexer.py``'s csr vstack):
   The default count follows the corpus: 1 group when N <= ``run_size`` (one
   run, one fused posting job), else 4. A restarted build takes the count
   from the manifest and skips completed groups (see manifest.py).
+* **One encode step, batch after batch** (as the reference's indexer,
+  ``sparse_indexer.py:91-125``): an append (streaming/incremental.py)
+  runs the build's own pieces on its batch — ``per_doc_expansion`` for
+  tokens and doc_stats, ``terms_dim`` for new terms-dim rows and
+  ``write_posting_group`` for the postings.
 """
 
 from __future__ import annotations
@@ -50,12 +55,11 @@ from light_splade_spark.functions.analyzers import (
 from light_splade_spark.functions.vbyte import (
     _write_varint_scalar,
     decode_run,
-    vbyte_encode_sized,
+    vbyte_encode,
 )
 from light_splade_spark.index.manifest import IndexManifest, write_lineage
 from light_splade_spark.partitioning import spread_input
 from light_splade_spark.plans.bm25_sql import B, K1, bm25_impact_col, idf_col
-from light_splade_spark.plans.stats import with_dense_id
 
 # bump when the on-disk posting blob layout changes (callers may key cache
 # directories on it)
@@ -131,7 +135,7 @@ def _encode_groups(pdf: pd.DataFrame, block_size: int,
     is_tail = np.ones(m, dtype=bool)
     is_tail[starts] = False
     tails = deltas[is_tail].astype(np.uint64)
-    buf_bytes, sizes = vbyte_encode_sized(tails)
+    buf_bytes, sizes = vbyte_encode(tails)
     buf = memoryview(buf_bytes)
     # per-value end offsets in the tail buffer
     offs = np.concatenate(([0], np.cumsum(sizes)))
@@ -331,81 +335,56 @@ def _explode_expansion(per_doc: DataFrame) -> DataFrame:
                     F.col("p.tf").alias("tf")))
 
 
+def terms_dim(counts: DataFrame, n_docs: int) -> DataFrame:
+    """(term, df, cf) counts -> terms-dim rows (term, term_id, tid, df, cf,
+    idf): the one row shape the build, the impact build and append write.
+
+    term_id = xxhash64(term) — deterministic and pass-free, so an append
+    assigns a new term the id any later build would; collision odds
+    ~V^2/2^65 (negligible below 10^8 distinct terms, detectable via
+    groupBy(term_id) where a deployment cares). ``tid`` repeats the hash:
+    it is part of the on-disk terms schema."""
+    tid = F.xxhash64("term")
+    return counts.select("term", tid.alias("term_id"), tid.alias("tid"),
+                         "df", "cf", idf_col(n_docs).alias("idf"))
+
+
 def build_dims(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-               doc_stats_path: str | None = None, term_id_mode: str = "hash",
-               analyzer: Analyzer = ANALYZER_V1,
-               expansion_path: str | None = None,
-               compute_avgdl: bool = True):
+               analyzer: Analyzer = ANALYZER_V1, *, expansion_path: str):
     """-> (doc_terms_df, terms_df, scalars dict).
 
     One tokenize pass, ZERO wide shuffles: the per-doc expansion is computed
     row-locally (per_doc_expansion — sorted run-length encode, no
     explode+groupBy exchange) and materialized nested as
-    (doc_id, dl, pairs) parquet, which is also ~30% smaller than the flat
-    (doc, term, tf, dl) rows (doc_id/dl not repeated per term). Σdl rides
-    the write via ``DataFrame.observe``; doc_stats is a column-pruned
-    projection of the same file (no join — zero-token docs already have
-    their dl=0 rows); N/max_doc come from a separate column-pruned count
-    scan. The only aggregation left is the vocab-sized terms dim (map-side
+    (doc_id, dl, pairs) parquet at ``expansion_path`` (SURVEY S11: the only
+    shape that exists at 10^12 docs — a corpus-sized expansion never fits
+    storage memory, while parquet spills to the scratch tier). It is also
+    ~30% smaller than the flat (doc, term, tf, dl) rows (doc_id/dl not
+    repeated per term). N, max_doc and Σdl all ride that write via
+    ``DataFrame.observe`` (the expansion keeps one row per doc, zero-token
+    docs included), so no separate corpus scan is needed for the scalars.
+    The only aggregation left is the vocab-sized terms dim (map-side
     combined to ~|V| rows). The build's one heavy shuffle is then the
     posting-phase (shard, bucket, salt) groupBy itself.
-
-    term_id_mode='hash' (default): term_id = xxhash64(term) — deterministic
-    and pass-free; collision odds ~V^2/2^65 (negligible below 10^8 distinct
-    terms, detectable via groupBy(term_id) where a deployment cares).
-    'dense': df-descending consecutive ids via the scalable Arrow
-    zipWithIndex in plans.stats (two extra lightweight jobs).
     """
     from pyspark.sql import Observation
 
-    per_doc = per_doc_expansion(docs, id_col, text_col, analyzer)
-    got = {"sum_dl": None}
-    if expansion_path is not None:
-        # materialize as a parquet intermediate (SURVEY S11), the only
-        # shape that exists at 10^12 docs — a corpus-sized expansion never
-        # fits storage memory, while parquet spills to the scratch tier.
-        # N / max_doc / Σdl ALL ride this write via Observation (the
-        # expansion keeps one row per doc, zero-token docs included), so
-        # no separate corpus scan is needed for the scalars.
-        obs = Observation("corpus_scalars")
-        per_doc.observe(obs, F.sum("dl").alias("sum_dl"),
-                        F.count(F.lit(1)).alias("n"),
-                        F.max("doc_id").alias("max_doc")) \
-            .write.mode("overwrite").parquet(expansion_path)
-        got = obs.get
-        r0 = {"n": got["n"], "max_doc": got["max_doc"]}
-        per_doc = docs.sparkSession.read.parquet(expansion_path)
-    else:
-        per_doc = per_doc.cache()
-        # light scalars scan: column-pruned count + max id over ALL docs
-        r0 = docs.agg(F.count(F.lit(1)).alias("n"),
-                      F.max(F.col(id_col)).alias("max_doc")).collect()[0]
-    if int(r0["n"] or 0) == 0:
+    obs = Observation("corpus_scalars")
+    per_doc_expansion(docs, id_col, text_col, analyzer) \
+        .observe(obs, F.sum("dl").alias("sum_dl"),
+                 F.count(F.lit(1)).alias("n"),
+                 F.max("doc_id").alias("max_doc")) \
+        .write.mode("overwrite").parquet(expansion_path)
+    got = obs.get
+    n_docs = int(got["n"] or 0)
+    if n_docs == 0:
         raise ValueError("cannot build an index over an empty corpus")
-    if doc_stats_path is not None:
-        # thin projection of the materialized expansion — no join, no agg
-        per_doc.select("doc_id", "dl").write.mode("overwrite") \
-            .parquet(doc_stats_path)
-    if got["sum_dl"] is None and (doc_stats_path is not None or compute_avgdl):
-        got = {"sum_dl": per_doc.agg(F.sum("dl")).collect()[0][0]}
-    dt = _explode_expansion(per_doc)
-    scalars = {"n_docs": int(r0["n"]),
-               # None (not 0) when not computed: a caller accidentally
-               # scoring with this placeholder fails loudly, not silently
-               "avgdl": (int(got["sum_dl"] or 0) / int(r0["n"])
-                         if (doc_stats_path is not None or compute_avgdl)
-                         else None),
-               "max_doc": int(r0["max_doc"])}
-    terms = (dt.groupBy("term")
-             .agg(F.count(F.lit(1)).alias("df"), F.sum("tf").alias("cf"))
-             .withColumn("tid", F.xxhash64("term")))
-    if term_id_mode == "dense":
-        terms = with_dense_id(terms, [F.desc("df"), F.asc("term")], "term_id")
-    else:
-        terms = terms.withColumn("term_id", F.col("tid"))
-    terms = terms.select("term", "term_id", "tid", "df", "cf",
-                         idf_col(scalars["n_docs"]).alias("idf"))
-    return dt, terms, scalars
+    dt = _explode_expansion(docs.sparkSession.read.parquet(expansion_path))
+    scalars = {"n_docs": n_docs, "avgdl": int(got["sum_dl"] or 0) / n_docs,
+               "max_doc": int(got["max_doc"])}
+    counts = dt.groupBy("term").agg(F.count(F.lit(1)).alias("df"),
+                                    F.sum("tf").alias("cf"))
+    return dt, terms_dim(counts, n_docs), scalars
 
 
 def _impact_dims(weights_df: DataFrame, doc_stats_path: str | None = None):
@@ -436,15 +415,9 @@ def _impact_dims(weights_df: DataFrame, doc_stats_path: str | None = None):
         raise ValueError("cannot build an index over empty weights")
     scalars = {"n_docs": int(got["n"]), "avgdl": float(got["avgdl"]),
                "max_doc": int(got["max_doc"])}
-    terms = (
-        dt.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
-        .withColumn("cf", F.lit(None).cast("bigint"))
-        .withColumn("tid", F.xxhash64("term"))
-        .withColumn("term_id", F.col("tid"))
-        .select("term", "term_id", "tid", "df", "cf",
-                idf_col(scalars["n_docs"]).alias("idf"))
-    )
-    return dt, terms, scalars
+    counts = dt.groupBy("term").agg(
+        F.count(F.lit(1)).alias("df"), F.lit(None).cast("bigint").alias("cf"))
+    return dt, terms_dim(counts, scalars["n_docs"]), scalars
 
 
 def build_index(
@@ -506,13 +479,8 @@ def build_index(
     ds_pool = doc_stats_future = None
     if weights_df is None:
         expansion_path = os.path.join(index_dir, "_expansion")
-        dt, terms, scalars = build_dims(
-            docs, id_col, text_col,
-            doc_stats_path=None,  # written below, overlapped (guide §2.6)
-            analyzer=analyzer,
-            expansion_path=expansion_path,
-            compute_avgdl=man is None,  # resume reads avgdl from manifest
-        )
+        dt, terms, scalars = build_dims(docs, id_col, text_col, analyzer,
+                                        expansion_path=expansion_path)
         scoring = "bm25"
         if man is None:
             # doc_stats is an independent column-pruned projection of the

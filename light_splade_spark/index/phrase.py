@@ -13,21 +13,22 @@ query), this module uses the standard two-stage serving shape:
    so only documents containing ALL of them survive, already carrying
    their BM25 score (sum qtf * w over the stored float32 impacts — the
    WAND routes' scores).
-2. VERIFY — token-adjacency checked ONLY on the candidates: the docs
-   DataFrame is semi-joined down to the candidate ids FIRST, then the
-   survivors (a tiny fraction of the corpus — the conjunction of several
-   terms) are re-tokenized with the index's pinned analyzer and kept iff
-   the phrase token array occurs as a contiguous subsequence. The
-   adjacency predicate is a pure JVM higher-order function
+2. VERIFY — token-adjacency checked ONLY on the candidates: the
+   candidate rows are joined to the docs DataFrame's text FIRST (one
+   join, so the stage-1 kernel runs once), then only the joined rows (a
+   tiny fraction of the corpus — the conjunction of several terms) are
+   re-tokenized with the index's pinned analyzer and kept iff the phrase
+   token array occurs as a contiguous subsequence. The adjacency
+   predicate is a pure JVM higher-order function
    (exists/sequence/slice), no Python.
 
 At 100 TB this is the right plan: stage 1 touches only the phrase terms'
 posting bytes (parquet bucket pruning + min/max pushdown) and moves no
 per-posting row out of the kernel, only each shard's matches; stage 2
-scans text for candidate doc_ids only, pushed into the parquet scan as a
-broadcast semi-join when the candidate set is small (phrase conjunctions
-almost always are; a phrase of ONE term degenerates to term retrieval
-with verify = membership, still correct).
+tokenizes text for candidate doc_ids only, joined by broadcast when the
+candidate set is small (phrase conjunctions almost always are; a phrase
+of ONE term degenerates to term retrieval with verify = membership,
+still correct).
 
 Reference parity: the reference engine has no phrase search (its sparse
 retriever scores bags of terms, sparse_retriever.py); this is a
@@ -149,23 +150,20 @@ def phrase_topk(
     # rule never serves driver-side, so this is the distributed route
     cand = shard_hits(spark, index_dir, qplan, top_k=0, mode="and")
 
-    # VERIFY: shrink the corpus scan to candidate ids first (semi-join;
-    # AQE broadcasts it when the candidate set is small — the common
-    # multi-term-phrase case — and falls back to a shuffled semi-join when
-    # a single-token or stop-word phrase makes candidates corpus-scale,
-    # where a forced broadcast would OOM the driver), then tokenize only
-    # the survivors and test contiguous-subsequence with a JVM
-    # higher-order function. size guard keeps sequence() well-formed for
-    # docs shorter than the phrase.
-    cand_ids = cand.select("doc_id").distinct()
-    dtoks = (
-        docs.join(cand_ids,
-                  docs[id_col] == cand_ids["doc_id"], "left_semi")
-        .select(F.col(id_col).alias("doc_id"),
-                ana.spark_tokens(text_col).alias("toks"))
-    )
+    # VERIFY: join the candidates to the corpus text (AQE broadcasts the
+    # candidate side when it is small — the common multi-term-phrase case
+    # — and falls back to a shuffled join when a single-token or
+    # stop-word phrase makes candidates corpus-scale, where a forced
+    # broadcast would OOM the driver), then tokenize only the joined rows
+    # and test contiguous-subsequence with a JVM higher-order function.
+    # One join consumes ``cand``, so the kernel runs once. The size guard
+    # keeps sequence() well-formed for docs shorter than the phrase.
+    text = docs.select(F.col(id_col).alias("doc_id"),
+                       F.col(text_col).alias("_text"))
     verified = (
-        cand.join(dtoks, "doc_id")
+        cand.join(text, "doc_id")
+        .select("qid", "doc_id", "score",
+                ana.spark_tokens("_text").alias("toks"))
         .join(F.broadcast(ptoks), "qid")
         .where(
             (F.size("toks") >= F.size("ptoks"))

@@ -7,11 +7,16 @@ contract exactly:
 
 * ``append_batch`` builds postings for the new docs only and writes them as a
   NEW ``shard_group=append-...`` directory — existing groups are immutable
-  (idempotent partition writes, the checkpoint-resume property holds). The
-  group goes through ``write_posting_group`` (index/build.py), the same
-  posting writer the build and compaction use, so appended groups share the
-  build's layout; a micro-batch of at most ``run_size`` docs takes its
-  fused single-shuffle path.
+  (idempotent partition writes, the checkpoint-resume property holds). It
+  runs the build's own steps (index/build.py) on the batch: the analyzer
+  comes from ``resolve_analyzer``, tokens from ``per_doc_expansion`` (whose
+  ``(doc_id, dl)`` projection is the doc_stats append), new terms-dim rows
+  from ``terms_dim``, and the group from ``write_posting_group``, the
+  posting writer the build and compaction use — so appended groups share
+  the build's layout; a micro-batch of at most ``run_size`` docs takes its
+  fused single-shuffle path. Only BM25 indexes accept appends: an
+  impact-scored index holds encoder weights that a text batch cannot
+  supply.
 * Corpus statistics are FROZEN at initial build time (N, avgdl, per-term
   idf), as in the reference where the encoder's weights don't change when
   docs are added. Terms unseen at build time get idf from the frozen N and
@@ -34,10 +39,15 @@ import time
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from light_splade_spark.functions.analyzers import doc_terms, get_analyzer
-from light_splade_spark.index.build import write_posting_group
+from light_splade_spark.functions.analyzers import resolve_analyzer
+from light_splade_spark.index.build import (
+    _explode_expansion,
+    per_doc_expansion,
+    terms_dim,
+    write_posting_group,
+)
 from light_splade_spark.index.manifest import IndexManifest
-from light_splade_spark.plans.bm25_sql import bm25_impact_col, idf_col
+from light_splade_spark.plans.bm25_sql import bm25_impact_col
 
 # Query batches above this size route to the distributed join scorer
 # instead of collecting to the driver for the WAND kernel (the join
@@ -75,6 +85,12 @@ def append_batch(spark: SparkSession, index_dir: str, docs: DataFrame,
     man = IndexManifest.load(index_dir)
     if man.status != "complete":
         raise ValueError("cannot append to an incomplete index")
+    if man.scoring == "impact":
+        # appended postings carry BM25 impacts; an impact index stores
+        # encoder weights, and mixing the two would silently corrupt scores
+        raise ValueError(
+            "cannot append text to an impact-scored index: rebuild it with "
+            "build_index(weights_df=...) over the full corpus")
     if f"append-{batch_id}" in getattr(man, "retired_groups", []):
         # this batch registered on a previous attempt and a compaction has
         # since folded it into the compact group — every doc is already
@@ -91,35 +107,32 @@ def append_batch(spark: SparkSession, index_dir: str, docs: DataFrame,
     if not docs.take(1):
         return  # empty micro-batch: no group dir, no manifest churn
     t0 = time.time()
-    # appended docs MUST be tokenized with the analyzer the index pins
-    analyzer = get_analyzer(man.analyzer_version)
-    dt = doc_terms(docs, id_col, text_col, analyzer=analyzer).cache()
+    # appended docs MUST be tokenized with the analyzer the index pins;
+    # resolve_analyzer also rebuilds a vocab (wordpiece) analyzer from the
+    # index dir in a process that never constructed it. The expansion is
+    # the build's own (per_doc_expansion): one row per doc, zero-token and
+    # NULL-text docs included with dl=0, so doc_stats is a projection of it
+    per_doc = per_doc_expansion(
+        docs, id_col, text_col,
+        resolve_analyzer(man.analyzer_version, index_dir)).cache()
+    dt = _explode_expansion(per_doc)
 
     start_terms_rel = getattr(man, "terms_dir", "terms")
     terms_path = os.path.join(index_dir, start_terms_rel)
-    known = spark.read.parquet(terms_path).select("term", "term_id", "idf", "df")
     batch_terms = dt.groupBy("term").agg(F.count(F.lit(1)).alias("bdf"))
 
     def _terms_missing_from(known_terms: DataFrame) -> DataFrame:
         # batch terms absent from the given dim, in the dim's row shape:
         # frozen-N idf with batch df (documented approximation: the
         # reference likewise freezes encoder/stats at build time)
-        return (
+        return terms_dim(
             batch_terms.join(known_terms.select("term"), "term", "left_anti")
-            .withColumnRenamed("bdf", "df")
-            .select(
-                "term", "df",
-                F.lit(None).cast("bigint").alias("cf"),
-                F.xxhash64("term").alias("term_id"),
-                F.xxhash64("term").alias("tid"),
-                idf_col(man.n_docs).alias("idf"),
-            )
-        )
+            .select("term", F.col("bdf").alias("df"),
+                    F.lit(None).cast("bigint").alias("cf")),
+            man.n_docs)
 
-    new_terms = _terms_missing_from(known)
-    # align to the existing terms schema before appending
-    existing_cols = spark.read.parquet(terms_path).columns
-    new_terms.select(*existing_cols).write.mode("append").parquet(terms_path)
+    _terms_missing_from(spark.read.parquet(terms_path)) \
+        .write.mode("append").parquet(terms_path)
 
     terms_b = F.broadcast(
         spark.read.parquet(terms_path).select("term", "term_id", "idf"))
@@ -128,8 +141,8 @@ def append_batch(spark: SparkSession, index_dir: str, docs: DataFrame,
     # head term's corpus df (ceil(500k/run_size) ways) would shatter tiny
     # runs for nothing. The initial build's df IS its batch df (batch =
     # corpus), so this is the same rule at every lifecycle stage.
-    max_doc_b, batch_n = docs.agg(
-        F.max(id_col), F.count(F.lit(1))).collect()[0]
+    max_doc_b, batch_n = per_doc.agg(
+        F.max("doc_id"), F.count(F.lit(1))).collect()[0]
     posts = (
         dt.join(terms_b, "term")
         .join(F.broadcast(batch_terms), "term")
@@ -139,16 +152,8 @@ def append_batch(spark: SparkSession, index_dir: str, docs: DataFrame,
     out_dir = os.path.join(index_dir, "postings", f"shard_group=append-{batch_id}")
     write_posting_group(posts, out_dir, man, n_docs=batch_n,
                         max_doc=max_doc_b, t0=t0, append_batch=batch_id)
-
-    # doc_stats append — dl comes from the already-cached dt
-    # (re-running doc_tokens would tokenize the whole batch a second time,
-    # the measured hot path); zero-token docs are absent from dt, so the
-    # left join restores them with dl=0, one output row per input row
-    dls = dt.groupBy("doc_id").agg(F.first("dl").alias("dl"))
-    (docs.select(F.col(id_col).alias("doc_id"))
-     .join(dls, "doc_id", "left")
-     .select("doc_id", F.coalesce("dl", F.lit(0)).cast("int").alias("dl"))
-     .write.mode("append").parquet(os.path.join(index_dir, "doc_stats")))
+    per_doc.select("doc_id", "dl").write.mode("append") \
+        .parquet(os.path.join(index_dir, "doc_stats"))
     if _pre_register_hook is not None:
         # test seam: the group dir is fully written but not yet registered
         # as live — where a racing compaction's commit + GC would land
@@ -183,15 +188,14 @@ def append_batch(spark: SparkSession, index_dir: str, docs: DataFrame,
         cur_path = os.path.join(index_dir, cur_terms_rel)
         missing = _terms_missing_from(spark.read.parquet(cur_path))
         if missing.take(1):
-            cols = spark.read.parquet(cur_path).columns
-            missing.select(*cols).write.mode("append").parquet(cur_path)
+            missing.write.mode("append").parquet(cur_path)
     # drop tombstones covering re-appended ids (zombie contract — see
     # docstring); after the group is live so a crash in between leaves the
     # doc hidden only until the idempotent retry completes the drop
     from light_splade_spark.index.tombstones import drop_tombstones_for
     drop_tombstones_for(spark, index_dir,
                         docs.select(F.col(id_col).alias("doc_id")))
-    dt.unpersist()
+    per_doc.unpersist()
 
 
 def stream_queries(spark: SparkSession, index_dir: str, stream: DataFrame,

@@ -89,6 +89,30 @@ def test_custom_encoder_weights_through_build_and_retrieve(spark, tmp_path):
         assert r2[d] == pytest.approx(r1[d] / 2.0, abs=1e-4)
 
 
+def test_append_to_impact_index_refused(spark, tmp_path):
+    """append_batch stores BM25 impacts; an impact index stores encoder
+    weights. It must refuse before writing anything, not register a group
+    of BM25 postings beside the encoder's."""
+    import os
+
+    from light_splade_spark.streaming.incremental import append_batch
+
+    docs = spark.createDataFrame(DOCS, "doc_id BIGINT, text STRING")
+    idx = str(tmp_path / "impact_append")
+    build_index(spark, docs, idx, n_shards=1, n_buckets=2, n_salts=1,
+                n_shard_groups=1,
+                weights_df=splade_expansion(docs, encoder=make_toy_encoder()))
+    before = sorted(os.listdir(idx)), sorted(
+        os.listdir(os.path.join(idx, "postings")))
+    batch = spark.createDataFrame([(100, "brown fox")],
+                                  "doc_id BIGINT, text STRING")
+    with pytest.raises(ValueError, match="impact"):
+        append_batch(spark, idx, batch, "b0")
+    assert IndexManifest.load(idx).live_groups == ["0"]
+    assert (sorted(os.listdir(idx)), sorted(
+        os.listdir(os.path.join(idx, "postings")))) == before
+
+
 def test_negative_weights_rejected(spark, tmp_path):
     """WAND's block-max bound assumes non-negative query weights; 8-bit
     quantization assumes non-negative impacts — both must refuse loudly."""

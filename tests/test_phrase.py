@@ -1,5 +1,5 @@
 """Phrase retrieval (index/phrase.py) — retrieve-then-verify over the
-compressed index: conjunctive candidates from the join route, token
+compressed index: conjunctive candidates from the per-shard kernel, token
 adjacency verified on candidates only, BM25 scores identical to the
 OR-route join scorer."""
 
@@ -98,6 +98,23 @@ def test_phrase_missing_term_and_single_token(spark, tmp_path):
     # single-token phrase degenerates to term retrieval
     res = phrase_topk(spark, idx, d, [(2, "alpha")], top_k=10)
     assert {r["doc_id"] for r in res.collect()} == {0, 2}
+
+
+def test_phrase_runs_the_and_kernel_once(spark, tmp_path):
+    """The candidate frame feeds a single join to the docs' text, so the
+    executed plan holds one shard-kernel node: a second consumer of the
+    candidates (a semi-join on their ids) would re-run the kernel."""
+    d = spark.createDataFrame(
+        [(0, "alpha beta gamma"), (1, "alpha gamma beta"), (2, "beta alpha")],
+        "doc_id BIGINT, text STRING")
+    idx = str(tmp_path / "idx")
+    build_index(spark, d, idx, n_shards=1, n_buckets=2, n_salts=1,
+                n_shard_groups=1)
+    res = phrase_topk(spark, idx, d, [(1, "alpha beta")], top_k=10)
+    assert [(r["pid"], r["doc_id"]) for r in res.collect()] == [(1, 0)]
+    plan = res._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    assert final.count("FlatMapGroupsInPandas") == 1, plan
 
 
 def test_phrase_top_k_truncates(spark, docs, idx):

@@ -187,6 +187,29 @@ def test_index_self_containment(spark, tmp_path, wp):
         ANALYZERS[wp.version] = wp
 
 
+def test_fresh_process_append_resolves_vocab_analyzer(spark, tmp_path, wp):
+    """An append in a process that never constructed the wordpiece
+    analyzer resolves it from the index dir's vocab file (simulated by
+    unregistering), and the appended doc is retrievable."""
+    from light_splade_spark.index.build import build_index
+    from light_splade_spark.index.wand import wand_topk
+    from light_splade_spark.streaming.incremental import append_batch
+
+    docs = spark.createDataFrame(
+        [(0, "spark data"), (1, "data shuffle")], "doc_id BIGINT, text STRING")
+    idx = str(tmp_path / "wp_append")
+    build_index(spark, docs, idx, n_shards=1, n_buckets=2, n_salts=1,
+                n_shard_groups=1, analyzer=wp)
+    ANALYZERS.pop(wp.version, None)
+    try:
+        append_batch(spark, idx, spark.createDataFrame(
+            [(7, "unaffable joiner")], "doc_id BIGINT, text STRING"), "b0")
+        res = wand_topk(spark, idx, [(0, "unaffable")], top_k=3).collect()
+        assert [r.doc_id for r in res] == [7]
+    finally:
+        ANALYZERS[wp.version] = wp
+
+
 # ---------------------------------------------------------------------------
 # v4 BasicTokenizer: HF-literal equivalence, DuckDB mirror, mixed-script flow
 # ---------------------------------------------------------------------------
