@@ -106,40 +106,55 @@ def _fixture_tag(sf_dir: str) -> str:
             f"{src.hexdigest()[:8]}")
 
 
-def _cached_index(spark, sf_dir: str) -> str:
-    """Build-once per-sf index cache shared by the WAND and join-scorer
-    queries; returns the index dir (rebuilding once on corrupt cache)."""
-    from light_splade_spark.index.build import INDEX_FORMAT_VERSION, build_index
-    from light_splade_spark.index.manifest import CorruptIndexError, IndexManifest
+def _fixture(prefix: str, sf_dir: str, build, is_valid) -> str:
+    """Build-once fixture dir ``/tmp/lss_<prefix>_<sf-hash>_<src-hash>``
+    (``_fixture_tag``) -> its path. ``is_valid(path)`` vets a cached dir;
+    False, or an OSError/CorruptIndexError while checking (missing or
+    partial files, a manifest this engine's schema can't parse), means
+    rebuild from scratch. Validation and kernel bugs raise other errors
+    and surface loudly instead of triggering a silent rebuild. A rebuild
+    also removes this fixture's dirs for the same sf that other library
+    sources built, so source edits do not pile up stale fixtures."""
+    import glob
+    import shutil
+
+    from light_splade_spark.index.manifest import CorruptIndexError
 
     tag = _fixture_tag(sf_dir)
-    idx = f"/tmp/lss_index_v{INDEX_FORMAT_VERSION}_{tag}"
+    path = f"/tmp/lss_{prefix}_{tag}"
+    try:
+        if is_valid(path):
+            return path
+    except (OSError, CorruptIndexError):
+        pass
+    sf_hash = tag.split("_", 1)[0]
+    for old in glob.glob(f"/tmp/lss_{prefix}_{sf_hash}_*"):
+        shutil.rmtree(old, ignore_errors=True)  # this path's remains too
+    build(path)
+    return path
 
-    def _build():
+
+def _complete(idx: str) -> bool:
+    """A cached index is usable only if its build finished: a crashed
+    prior build leaves a parseable manifest with status='building' and
+    partial/missing postings — serving it would silently return wrong
+    top-k."""
+    from light_splade_spark.index.manifest import IndexManifest
+
+    return IndexManifest.load(idx).status == "complete"
+
+
+def _cached_index(spark, sf_dir: str) -> str:
+    """Build-once per-sf index cache shared by the WAND and join-scorer
+    queries; returns the index dir."""
+    from light_splade_spark.index.build import INDEX_FORMAT_VERSION, build_index
+
+    def build(idx):
         build_index(spark, _docs(spark, sf_dir), idx, n_shards=8, n_buckets=16,
                     n_salts=4, n_shard_groups=2)
 
-    if not os.path.exists(os.path.join(idx, "manifest.json")):
-        _build()
-        return idx
-    try:
-        man = IndexManifest.load(idx)
-        if man.status != "complete":
-            # a crashed prior build leaves a parseable manifest with
-            # status='building' and partial/missing postings — serving it
-            # would silently return wrong top-k. Same treatment as corrupt.
-            raise CorruptIndexError(
-                f"cached index at {idx} has status={man.status!r}")
-    except (OSError, CorruptIndexError):
-        # corrupt-cache cases only (missing/partial files, a manifest this
-        # engine's schema can't parse, or an incomplete prior build):
-        # rebuild once. Validation and kernel bugs raise ValueError/
-        # TypeError/KeyError and surface loudly instead of triggering a
-        # silent multi-minute rebuild.
-        import shutil
-        shutil.rmtree(idx, ignore_errors=True)
-        _build()
-    return idx
+    return _fixture(f"index_v{INDEX_FORMAT_VERSION}", sf_dir, build,
+                    _complete)
 
 
 def q_wand_topk(spark, sf_dir):
@@ -152,7 +167,7 @@ def q_wand_topk(spark, sf_dir):
     from light_splade_spark.index.wand import wand_topk
 
     idx = _cached_index(spark, sf_dir)
-    return wand_topk(spark, idx, QUERIES, top_k=TOP_K, mode="bmw")
+    return wand_topk(spark, idx, QUERIES, top_k=TOP_K)
 
 
 def q_wand_point(spark, sf_dir):
@@ -206,18 +221,10 @@ def _compacted_index(spark, sf_dir: str) -> str:
         build_index,
     )
     from light_splade_spark.index.compact import compact_index
-    from light_splade_spark.index.manifest import (
-        CorruptIndexError,
-        IndexManifest,
-    )
+    from light_splade_spark.index.manifest import IndexManifest
     from light_splade_spark.streaming.incremental import append_batch
 
-    # f2 = fixture layout v2 (two append batches + injected novel terms);
-    # keeps any pre-existing one-batch cache dir from validating
-    tag = _fixture_tag(sf_dir)
-    idx = f"/tmp/lss_compact_idx_v{INDEX_FORMAT_VERSION}f2_{tag}"
-
-    def _build():
+    def build(idx):
         d = _compact_docs(spark, sf_dir)
         base = d.where(F.col("doc_id") < COMPACT_BASE)
         build_index(spark, base, idx, n_shards=4, n_buckets=8, n_salts=4,
@@ -230,15 +237,11 @@ def _compacted_index(spark, sf_dir: str) -> str:
             & (F.col("doc_id") < COMPACT_HI2)), "b2")
         compact_index(spark, idx)
 
-    try:
-        man = IndexManifest.load(idx)
-        if man.status != "complete" or man.compact_epoch < 1:
-            raise CorruptIndexError("cache not compacted")
-    except (OSError, CorruptIndexError):
-        import shutil
-        shutil.rmtree(idx, ignore_errors=True)
-        _build()
-    return idx
+    # f2 = fixture layout v2 (two append batches + injected novel terms);
+    # keeps any pre-existing one-batch cache dir from validating
+    return _fixture(f"compact_idx_v{INDEX_FORMAT_VERSION}f2", sf_dir, build,
+                    lambda idx: _complete(idx)
+                    and IndexManifest.load(idx).compact_epoch >= 1)
 
 
 STREAM_DEDUP_MOD = 40  # Q:stream_dedup: 200 docs -> 40 duplicate classes
@@ -344,34 +347,21 @@ def _tombstoned_index(spark, sf_dir: str) -> str:
         INDEX_FORMAT_VERSION,
         build_index,
     )
-    from light_splade_spark.index.manifest import (
-        CorruptIndexError,
-        IndexManifest,
-    )
     from light_splade_spark.index.tombstones import (
         delete_docs,
         load_tombstone_ids,
     )
 
-    tag = _fixture_tag(sf_dir)
-    idx = f"/tmp/lss_tomb_idx_v{INDEX_FORMAT_VERSION}_{tag}"
-
-    def _build():
+    def build(idx):
         base = _docs(spark, sf_dir).where(F.col("doc_id") < COMPACT_BASE)
         build_index(spark, base, idx, n_shards=4, n_buckets=8, n_salts=4,
                     n_shard_groups=1)
         delete_docs(spark, idx, [d for d in range(COMPACT_BASE)
                                  if d % TOMB_MOD == 3])
 
-    try:
-        man = IndexManifest.load(idx)
-        if man.status != "complete" or load_tombstone_ids(idx) is None:
-            raise CorruptIndexError("cache missing tombstones")
-    except (OSError, CorruptIndexError):
-        import shutil
-        shutil.rmtree(idx, ignore_errors=True)
-        _build()
-    return idx
+    return _fixture(f"tomb_idx_v{INDEX_FORMAT_VERSION}", sf_dir, build,
+                    lambda idx: _complete(idx)
+                    and load_tombstone_ids(idx) is not None)
 
 
 def q_tombstoned_topk(spark, sf_dir):
@@ -549,10 +539,10 @@ def q_ivf_indexed_topk(spark, sf_dir):
     )
 
     emb = _emb(spark, sf_dir)
-    tag = _fixture_tag(sf_dir)
-    d = f"/tmp/lss_ivf_v{IVF_FORMAT_VERSION}_{tag}_c64"
-    if not os.path.exists(os.path.join(d, "manifest.json")):
-        build_ivf(emb, d, n_centroids=64, centroids="head")
+    d = _fixture(f"ivf_v{IVF_FORMAT_VERSION}_c64", sf_dir,
+                 lambda d: build_ivf(emb, d, n_centroids=64,
+                                     centroids="head"),
+                 lambda d: os.path.exists(os.path.join(d, "manifest.json")))
     q = [(int(r.vec_id), list(r.embedding))
          for r in emb.where(F.col("vec_id") < 10).collect()]
     return ivf_search(spark, d, q, k=5, n_probe=2)

@@ -79,15 +79,14 @@ def run_suite(master: str, shuffle_partitions: int = 32) -> dict:
         # batch query: the reference query set, per-query latency measured as
         # one batch (amortized) + loop for p50/p95
         q["wand_batch"], _ = _timed(lambda: _noop(
-            wand_topk(spark, idx_dir, DOCUMENTS_QUERY_SET, top_k=10, mode="bmw")))
+            wand_topk(spark, idx_dir, DOCUMENTS_QUERY_SET, top_k=10)))
         # one warm-up single query before the latency loop: the batch above
         # warms the DISTRIBUTED path; single queries take the driver-local
         # path, whose one-time costs (pyarrow dataset machinery, pandas->
         # Spark conversion init) belong to service startup, not to p50/p95
         # — with only 7 samples the p95 IS the max, so an unwarmed first
         # call would report startup, not steady-state latency
-        _noop(wand_topk(spark, idx_dir, DOCUMENTS_QUERY_SET[:1], top_k=10,
-                        mode="bmw"))
+        _noop(wand_topk(spark, idx_dir, DOCUMENTS_QUERY_SET[:1], top_k=10))
         # 3 passes x 8 queries = 24 samples: with a single pass the p95 of
         # 7 samples IS the max, so any one-off (GC pause, episodic host
         # stall) reports as the tail; 24 samples put p95 at the 22nd
@@ -95,7 +94,7 @@ def run_suite(master: str, shuffle_partitions: int = 32) -> dict:
         for _ in range(3):
             for qid, text in DOCUMENTS_QUERY_SET:
                 t, _ = _timed(lambda qq=[(qid, text)]: _noop(
-                    wand_topk(spark, idx_dir, qq, top_k=10, mode="bmw")))
+                    wand_topk(spark, idx_dir, qq, top_k=10)))
                 lat.append(t)
         lat.sort()
         extras["query_p50_sec"] = round(lat[len(lat) // 2], 3)
@@ -257,16 +256,16 @@ def run_scaling(master: str, n_docs: int, shuffle_partitions: int = 64) -> dict:
             spark, docs, idx_dir, n_shards=None, n_buckets=16, n_salts=8,
             n_shard_groups=1, run_size=4096, weight_bits=wbits))
         t_query, _ = _timed(lambda: _noop(
-            wand_topk(spark, idx_dir, SCALING_QUERIES, top_k=10, mode="bmw")))
+            wand_topk(spark, idx_dir, SCALING_QUERIES, top_k=10)))
         t_query100, _ = _timed(lambda: _noop(wand_topk(
             spark, idx_dir,
             [(100 + i, f"t{(7 * i) % 30000:05d} t{(13 * i) % 30000:05d} "
                        f"t{(29 * i) % 30000:05d}") for i in range(100)],
-            top_k=10, mode="bmw")))
+            top_k=10)))
         # 1000-query batch: the CPU-bound regime of the query stage (kernel
         # scoring work dominates decode + scheduling overhead)
         t_query1000, _ = _timed(lambda: _noop(wand_topk(
-            spark, idx_dir, _query_batch(1000), top_k=10, mode="bmw")))
+            spark, idx_dir, _query_batch(1000), top_k=10)))
     finally:
         shutil.rmtree(idx_dir, ignore_errors=True)
     spark.stop()
@@ -325,10 +324,9 @@ def run_lifecycle(n_docs: int = 800_000, batch_docs: int = 1_000,
         # warm-up batch first: the state transition just ran a heavy job
         # (build / append / compact), and the FIRST query pays codegen +
         # Python-worker spin-up — not the read-amplification being measured
-        _noop(wand_topk(spark, idx, _query_batch(100), top_k=10,
-                        mode="bmw", local="never"))
+        _noop(wand_topk(spark, idx, _query_batch(100), top_k=10, local="never"))
         ts = sorted(_timed(lambda: _noop(wand_topk(
-            spark, idx, _query_batch(100), top_k=10, mode="bmw",
+            spark, idx, _query_batch(100), top_k=10,
             local="never")))[0] for _ in range(5))
         pts = sorted(_timed(lambda: _noop(wand_topk(
             spark, idx, [SCALING_QUERIES[1]], top_k=10,
@@ -418,11 +416,9 @@ def run_query_scaling_one(master: str, idx_dir: str, n_queries: int,
     # warm-up: same batch once — fills the per-process term->id cache and
     # spawns JVM codegen + Python workers, i.e. the steady state of a
     # long-running query service; identical at every parallelism level
-    _noop(wand_topk(spark, idx_dir, _query_batch(n_queries), top_k=10,
-                    mode="bmw"))
+    _noop(wand_topk(spark, idx_dir, _query_batch(n_queries), top_k=10))
     t, _ = _timed(lambda: _noop(
-        wand_topk(spark, idx_dir, _query_batch(n_queries), top_k=10,
-                  mode="bmw")))
+        wand_topk(spark, idx_dir, _query_batch(n_queries), top_k=10)))
     spark.stop()
     return {"query_batch_sec": round(t, 2),
             "qps": round(n_queries / t, 1)}
@@ -534,7 +530,7 @@ def main() -> None:
                 score_index_join(spark, idx_dir, qdf, top_k=10)))
         else:
             t, _ = _timed(lambda: _noop(wand_topk(
-                spark, idx_dir, _query_batch(nq), top_k=10, mode="bmw")))
+                spark, idx_dir, _query_batch(nq), top_k=10)))
         rss = round(
             resource.getrusage(resource.RUSAGE_SELF).ru_maxrss / 1024, 1)
         print(json.dumps({"route": route, "n_queries": nq,

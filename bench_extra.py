@@ -202,7 +202,7 @@ def main() -> None:
                 n_salts=8, n_shard_groups=1, run_size=4096))
             spark.sparkContext.setJobDescription("bx: wand_batch")
             q["wand_batch"] = _timed(lambda: _noop(wand_topk(
-                spark, idx_dir, DOCUMENTS_QUERY_SET, top_k=10, mode="bmw")))
+                spark, idx_dir, DOCUMENTS_QUERY_SET, top_k=10)))
             spark.sparkContext.setJobDescription("bx: conjunctive")
             q["conjunctive"] = _timed(lambda: _noop(conjunctive_topk(
                 spark, idx_dir, DOCUMENTS_QUERY_SET, top_k=10)))

@@ -4,7 +4,7 @@
         --index-dir /path/to/index \
         --queries /path/to/queries.ndjson   # {"qid": 1, "text": "..."} lines
         --output /path/to/results.parquet \
-        [--top-k 10 --threshold 0.0 --mode bmw] \
+        [--top-k 10 --threshold 0.0] \
         [--route auto|wand|join] \
         [--require-all-terms [--exclude "banned terms"]]
 
@@ -12,15 +12,14 @@ Routes: ``wand`` collects the query batch to the driver and runs the
 block-max WAND kernel (fastest; driver memory grows with batch size);
 ``join`` streams the query DataFrame UNCOLLECTED into the distributed
 index-join scorer (flat driver memory — the 10^6-query shape);
-``auto`` (default) picks join when the batch exceeds 50k queries, the
-same guard the streaming path applies. ``--require-all-terms`` switches
-to conjunctive (boolean-AND) retrieval; ``--exclude`` adds the boolean
-NOT arm there (documents containing ANY of its terms are banned). Flag
-combinations that a route would silently ignore are REJECTED up front:
-``--mode`` is wand-only (explicit ``--mode`` with a resolved join route
-errors), ``--require-all-terms`` composes with neither ``--route`` nor
-``--threshold`` nor ``--mode``, and ``--exclude`` requires
-``--require-all-terms``.
+``auto`` (default) is ``join_scorer.score_query_frame``, the rule the
+streaming path applies too: join when the batch exceeds
+``JOIN_ROUTE_THRESHOLD`` (50k) queries, else wand. ``--require-all-terms``
+switches to conjunctive (boolean-AND) retrieval; ``--exclude`` adds the
+boolean NOT arm there (documents containing ANY of its terms are banned).
+Flag combinations that a route would silently ignore are REJECTED up
+front: ``--require-all-terms`` composes with neither ``--route`` nor
+``--threshold``, and ``--exclude`` requires ``--require-all-terms``.
 """
 
 from __future__ import annotations
@@ -28,8 +27,6 @@ from __future__ import annotations
 import argparse
 
 from pyspark.sql import SparkSession
-
-from light_splade_spark.streaming.incremental import JOIN_ROUTE_THRESHOLD
 
 
 def main() -> None:
@@ -39,8 +36,6 @@ def main() -> None:
     p.add_argument("--output", required=True)
     p.add_argument("--top-k", type=int, default=10)
     p.add_argument("--threshold", type=float, default=0.0)
-    p.add_argument("--mode", default=None, choices=["bmw", "taat"],
-                   help="WAND kernel variant (wand route only)")
     p.add_argument("--route", default=None,
                    choices=["auto", "wand", "join"])
     p.add_argument("--require-all-terms", action="store_true",
@@ -52,55 +47,39 @@ def main() -> None:
                         "documents containing ANY of this text's terms")
     args = p.parse_args()
 
-    if args.require_all_terms and (args.route or args.mode
-                                   or args.threshold != 0.0):
+    if args.require_all_terms and (args.route or args.threshold != 0.0):
         p.error("--require-all-terms is its own route: it composes with "
-                "none of --route/--mode/--threshold")
+                "neither --route nor --threshold")
     if args.exclude and not args.require_all_terms:
         p.error("--exclude requires --require-all-terms (the boolean "
                 "route); the scoring routes have no NOT arm")
     route = args.route or "auto"
-    if args.mode and route == "join":
-        p.error("--mode applies to the wand kernel only; --route join "
-                "ignores it")
 
     spark = SparkSession.builder.appName("lss-query").getOrCreate()
     from light_splade_spark.sources.ndjson import read_query_master
 
     qdf = read_query_master(spark, args.queries)
-    head = None
     if args.require_all_terms:
         from light_splade_spark.index.phrase import conjunctive_topk
         qs = [(int(r["qid"]), r["text"]) for r in qdf.collect()]
         out = conjunctive_topk(spark, args.index_dir, qs, top_k=args.top_k,
                                exclude=args.exclude)
         route = "conjunctive"
+    elif route == "auto":
+        from light_splade_spark.index.join_scorer import score_query_frame
+        route, out = score_query_frame(spark, args.index_dir, qdf,
+                                       top_k=args.top_k,
+                                       threshold=args.threshold)
+    elif route == "join":
+        from light_splade_spark.index.join_scorer import score_index_join
+        out = score_index_join(spark, args.index_dir,
+                               qdf.select("qid", "text"), top_k=args.top_k,
+                               threshold=args.threshold)
     else:
-        if route == "auto":
-            # bounded take: never counts (or collects) a 10^6-row file
-            # just to decide the route; the head is REUSED as the wand
-            # batch so the small-batch case reads the file once
-            head = qdf.take(JOIN_ROUTE_THRESHOLD + 1)
-            route = "join" if len(head) > JOIN_ROUTE_THRESHOLD else "wand"
-            if args.mode and route == "join":
-                raise SystemExit("--mode applies to the wand kernel only, "
-                                 "but --route auto resolved to join for "
-                                 "this batch size; pass --route wand to "
-                                 "force the kernel (driver memory grows "
-                                 "with batch size)")
-        if route == "join":
-            from light_splade_spark.index.join_scorer import score_index_join
-            out = score_index_join(spark, args.index_dir,
-                                   qdf.select("qid", "text"),
-                                   top_k=args.top_k,
-                                   threshold=args.threshold)
-        else:
-            from light_splade_spark.index.wand import wand_topk
-            rows = head if head is not None else qdf.collect()
-            qs = [(int(r["qid"]), r["text"]) for r in rows]
-            out = wand_topk(spark, args.index_dir, qs, top_k=args.top_k,
-                            threshold=args.threshold,
-                            mode=args.mode or "bmw")
+        from light_splade_spark.index.wand import wand_topk
+        qs = [(int(r["qid"]), r["text"]) for r in qdf.collect()]
+        out = wand_topk(spark, args.index_dir, qs, top_k=args.top_k,
+                        threshold=args.threshold)
     out.write.mode("overwrite").parquet(args.output)
     # count what was WRITTEN — re-counting `out` would re-execute the
     # whole scoring pipeline (the join route exists for 10^6-query

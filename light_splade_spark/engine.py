@@ -80,8 +80,8 @@ class Engine:
             "scoring": man.scoring, "weight_bits": man.weight_bits,
             "live_groups": list(live),
             "orphan_groups": [g for g in on_disk if g not in set(live)],
-            "terms_dir": getattr(man, "terms_dir", "terms"),
-            "compact_epoch": getattr(man, "compact_epoch", 0),
+            "terms_dir": man.terms_dir,
+            "compact_epoch": man.compact_epoch,
             "pending_tombstones": int(tombs.size) if tombs is not None else 0,
         }
 
@@ -111,7 +111,6 @@ class Engine:
         top_k: int = 10,
         threshold: float = 0.0,
         return_score: bool = True,
-        mode: str = "bmw",
         query_weights: list[tuple[int, dict[str, float]]] | None = None,
     ) -> DataFrame:
         """-> (qid, rank, doc_id[, score]).
@@ -121,7 +120,8 @@ class Engine:
         scoring to a doc subset and is only legal with a single query.
         ``query_weights`` = (qid, {term: weight}) pairs for impact-scored
         retrieval (the encoder seam's query side — the reference's
-        query-CSR dot product with model weights).
+        query-CSR dot product with model weights). Like the reference it
+        has no algorithm option: the kernel chooses (``wand_topk``).
         """
         n_queries = len(queries if queries is not None else query_weights or [])
         if target_doc_ids is not None and n_queries > 1:
@@ -129,8 +129,7 @@ class Engine:
             raise AssertionError(
                 "multi-queries with target_doc_ids is not supported")
         out = wand_topk(self.spark, self.index_dir, queries, top_k=top_k,
-                        threshold=threshold, mode=mode,
-                        target_doc_ids=target_doc_ids,
+                        threshold=threshold, target_doc_ids=target_doc_ids,
                         query_weights=query_weights)
         if not return_score:
             out = out.drop("score")
@@ -257,12 +256,11 @@ class Engine:
         queries: list[tuple[int, str]],
         qrels: DataFrame,  # (qid, doc_id)
         k_values: list[int] = (10,),
-        mode: str = "bmw",
     ) -> dict:
-        """Reference ``Evaluator.evaluate``: retrieve at max(k), compute
+        """Reference ``Evaluator.evaluate``: ``retrieve`` at max(k), compute
         MRR/NDCG/MAP/recall/precision per cutoff, merge index stats."""
         max_k = max(k_values)
-        res = self.retrieve(queries, top_k=max_k, threshold=0.0, mode=mode)
+        res = self.retrieve(queries, top_k=max_k, threshold=0.0)
         m = ranking_metrics(res.select("qid", "rank", "doc_id"), qrels,
                             k_values=list(k_values))
         out: dict = {}

@@ -387,30 +387,25 @@ def build_dims(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
     return dt, terms_dim(counts, n_docs), scalars
 
 
-def _impact_dims(weights_df: DataFrame, doc_stats_path: str | None = None):
+def _impact_dims(weights_df: DataFrame, doc_stats_path: str):
     """Dims for an impact (encoder-weight) index: -> (dt, terms, scalars).
 
     dt = (doc_id, term, weight float32); dl here = nonzero terms per doc
     (recorded for stats/lineage — impact scoring never reads dl/avgdl).
-    Mirrors build_dims' one-job Observation trick for the scalars."""
+    The scalars ride the ``doc_stats_path`` write through an Observation,
+    like build_dims' one-job trick."""
     from pyspark.sql import Observation
 
     dt = weights_df.select(
         "doc_id", "term", F.col("weight").cast("float").alias("weight")
     ).cache()
-    doc_stats = dt.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl"))
     obs = Observation("impact_scalars")
-    doc_stats = doc_stats.observe(
-        obs, F.count(F.lit(1)).alias("n"), F.avg("dl").alias("avgdl"),
-        F.max("doc_id").alias("max_doc"))
-    if doc_stats_path is not None:
-        doc_stats.write.mode("overwrite").parquet(doc_stats_path)
-        got = obs.get
-    else:
-        r = doc_stats.agg(F.count(F.lit(1)).alias("n"),
-                          F.avg("dl").alias("avgdl"),
-                          F.max("doc_id").alias("max_doc")).collect()[0]
-        got = {"n": r["n"], "avgdl": r["avgdl"], "max_doc": r["max_doc"]}
+    dt.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl")) \
+        .observe(obs, F.count(F.lit(1)).alias("n"),
+                 F.avg("dl").alias("avgdl"),
+                 F.max("doc_id").alias("max_doc")) \
+        .write.mode("overwrite").parquet(doc_stats_path)
+    got = obs.get
     if got["n"] is None or int(got["n"]) == 0:
         raise ValueError("cannot build an index over empty weights")
     scalars = {"n_docs": int(got["n"]), "avgdl": float(got["avgdl"]),
@@ -482,31 +477,29 @@ def build_index(
         dt, terms, scalars = build_dims(docs, id_col, text_col, analyzer,
                                         expansion_path=expansion_path)
         scoring = "bm25"
-        if man is None:
-            # doc_stats is an independent column-pruned projection of the
-            # materialized expansion with its own output dir — submit it
-            # from a driver thread so it back-fills executors behind the
-            # terms and posting jobs instead of serializing before them
-            # (guide §2.6, overlap independent jobs); joined before the
-            # manifest commits "complete"
-            from concurrent.futures import ThreadPoolExecutor
+        # doc_stats is an independent column-pruned projection of the
+        # materialized expansion with its own output dir — submit it from a
+        # driver thread so it back-fills executors behind the terms and
+        # posting jobs instead of serializing before them (guide §2.6,
+        # overlap independent jobs); joined before the manifest commits
+        # "complete". A resume rewrites it too: build_dims just rebuilt the
+        # expansion, and a killed run may have left doc_stats partial
+        from concurrent.futures import ThreadPoolExecutor
 
-            ds_pool = ThreadPoolExecutor(max_workers=1,
-                                         thread_name_prefix="doc_stats")
-            _spark_ref = docs.sparkSession
+        ds_pool = ThreadPoolExecutor(max_workers=1,
+                                     thread_name_prefix="doc_stats")
+        _spark_ref = docs.sparkSession
 
-            def _write_doc_stats(path=os.path.join(index_dir, "doc_stats"),
-                                 src=expansion_path):
-                (_spark_ref.read.parquet(src).select("doc_id", "dl")
-                 .write.mode("overwrite").parquet(path))
+        def _write_doc_stats(path=os.path.join(index_dir, "doc_stats"),
+                             src=expansion_path):
+            (_spark_ref.read.parquet(src).select("doc_id", "dl")
+             .write.mode("overwrite").parquet(path))
 
-            doc_stats_future = ds_pool.submit(_write_doc_stats)
-            ds_pool.shutdown(wait=False)
+        doc_stats_future = ds_pool.submit(_write_doc_stats)
+        ds_pool.shutdown(wait=False)
     else:
         dt, terms, scalars = _impact_dims(
-            weights_df,
-            doc_stats_path=os.path.join(index_dir, "doc_stats") if man is None else None,
-        )
+            weights_df, os.path.join(index_dir, "doc_stats"))
         scoring = "impact"
     try:
         if man is None:
@@ -763,7 +756,7 @@ def terms_path(index_dir: str) -> str:
     """Current terms-dim directory — the manifest's pointer (compaction
     rewrites terms into terms_v<epoch> and flips it atomically)."""
     man = IndexManifest.load(index_dir)
-    return os.path.join(index_dir, getattr(man, "terms_dir", "terms"))
+    return os.path.join(index_dir, man.terms_dir)
 
 
 def read_terms(spark: SparkSession, index_dir: str) -> DataFrame:

@@ -97,7 +97,7 @@ def compact_index(spark: SparkSession, index_dir: str, gc: bool = True,
         list_complete_tombstone_batches,
     )
     tombstone_snapshot = list_complete_tombstone_batches(index_dir)
-    epoch = int(getattr(man, "compact_epoch", 0)) + 1
+    epoch = man.compact_epoch + 1
     group = f"compact-{epoch}"
 
     # the decode snapshot: the EXACT group list the decode reads (passed
@@ -130,7 +130,7 @@ def compact_index(spark: SparkSession, index_dir: str, gc: bool = True,
     # batch on the terms dir; fold them into one coalesced dir (content
     # IDENTICAL — frozen-stats contract — only file count changes) and
     # flip the manifest pointer in the same commit as liveness
-    old_terms = getattr(man, "terms_dir", "terms")
+    old_terms = man.terms_dir
     new_terms = f"terms_v{epoch}"
     (spark.read.parquet(os.path.join(index_dir, old_terms))
      .coalesce(1).write.mode("overwrite")
@@ -164,7 +164,7 @@ def compact_index(spark: SparkSession, index_dir: str, gc: bool = True,
     # double-count the batch's postings). Cumulative, capped — a genuine
     # retry can only concern a recent batch.
     man.retired_groups = [
-        *[g for g in getattr(man, "retired_groups", [])
+        *[g for g in man.retired_groups
           if g not in decoded_set],
         *sorted(decoded_set)][-10000:]
     man.save(index_dir)
@@ -225,7 +225,7 @@ def gc_postings(index_dir: str, man: IndexManifest | None = None,
     # manifest, and an immediate sweep here would delete that dir out from
     # under its lazy reads (the exact write-gap race the posting grace
     # closes). Superseded dirs are small; they age out on a later sweep.
-    cur_terms = getattr(man, "terms_dir", "terms")
+    cur_terms = man.terms_dir
     for d in sorted(os.listdir(index_dir)):
         if (d == "terms" or d.startswith("terms_v")) and d != cur_terms:
             path = os.path.join(index_dir, d)

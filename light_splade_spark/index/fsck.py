@@ -34,9 +34,11 @@ Checks (each a finding with severity ``error`` | ``warn`` and a stable
   corruption, and compaction folds it rather than deduping it.
   A decode-stage CRASH (truncated/corrupt blob) is caught and reported
   as an error finding rather than propagating a Spark job failure;
-* doc_stats — readable; duplicate doc_id rows are ``warn`` (the
-  documented harmless residue of a crashed-then-retried append —
-  compaction reads doc_stats only for max(doc_id));
+* doc_stats — present (a ``complete`` manifest without it is an
+  ``error``: every build writes it before committing) and readable;
+  duplicate doc_id rows are ``warn`` (the documented harmless residue of
+  a crashed-then-retried append — compaction reads doc_stats only for
+  max(doc_id));
 * tombstones — readable when present; an unreadable/malformed tombstone
   dir is an error finding, not an exception.
 
@@ -110,7 +112,7 @@ def fsck_index(spark: SparkSession, index_dir: str,
             f"invisible to readers): {backlog[:8]}"))
 
     # -- terms dim (pinned to THIS manifest's pointer) ------------------------
-    tpath = os.path.join(index_dir, getattr(man, "terms_dir", "terms"))
+    tpath = os.path.join(index_dir, man.terms_dir)
     if not os.path.isdir(tpath):
         findings.append(_finding(
             "error", "terms",
@@ -233,8 +235,9 @@ def fsck_index(spark: SparkSession, index_dir: str,
                 "duplicate doc_id rows in doc_stats (crashed-append "
                 "audit residue)"))
     else:
+        # every build writes doc_stats before it commits "complete"
         findings.append(_finding(
-            "warn", "doc_stats",
+            "error" if man.status == "complete" else "warn", "doc_stats",
             "no doc_stats dir (target-restriction and compaction need it)"))
 
     # -- tombstones ----------------------------------------------------------

@@ -16,6 +16,10 @@ bandwidth-bound text pass that the index exists to avoid):
    term_id -> partial+final hash agg per (qid, doc_id) -> per-query window
    top-k. Every stage is a plain shuffle that scales with the cluster; no
    driver-side state grows with the query count.
+3. ``score_query_frame`` — the one wand-or-join rule for a query DataFrame
+   of unknown size (streaming micro-batches, ``jobs/query_job.py --route
+   auto``): up to ``JOIN_ROUTE_THRESHOLD`` queries take ``wand_topk``,
+   larger frames take ``score_index_join``.
 
 Scores are Σ qtf * w with w the float32 impact stored at build time,
 decoded by the same index/build.decode_posting_list the WAND kernel uses —
@@ -40,6 +44,11 @@ from light_splade_spark.index.build import (
 from light_splade_spark.index.manifest import IndexManifest
 from light_splade_spark.index.wand import rank_hits
 from light_splade_spark.plans.bm25_sql import SCORE_DECIMALS
+
+# Query frames above this size route to the distributed join scorer instead
+# of collecting to the driver for the WAND kernel (the join route's
+# advantage is flat driver memory — BENCH/BASELINE.md §0-r5).
+JOIN_ROUTE_THRESHOLD = 50_000
 
 
 def decode_postings(
@@ -149,3 +158,30 @@ def score_index_join(
               .agg(F.round(F.sum("c"), SCORE_DECIMALS).alias("score"))
               .where(F.col("score") >= F.lit(threshold)))
     return rank_hits(scored, top_k)
+
+
+def score_query_frame(
+    spark: SparkSession,
+    index_dir: str,
+    queries: DataFrame,
+    *,
+    top_k: int,
+    threshold: float,
+) -> tuple[str, DataFrame]:
+    """(qid, text) DataFrame of any size -> (route, (qid, rank, doc_id,
+    score)). One bounded action decides the route: ``take`` of
+    ``JOIN_ROUTE_THRESHOLD + 1`` rows either proves the frame is big, and
+    it then flows UNCOLLECTED into ``score_index_join`` ("join"), or it IS
+    the whole batch, which ``wand_topk`` scores ("wand"). The frame is
+    never counted, and a small one is read once. Both routes return the
+    same ranks (tests/test_join_scorer.py)."""
+    from light_splade_spark.index.wand import wand_topk
+
+    head = queries.take(JOIN_ROUTE_THRESHOLD + 1)
+    if len(head) > JOIN_ROUTE_THRESHOLD:
+        return "join", score_index_join(spark, index_dir,
+                                        queries.select("qid", "text"),
+                                        top_k=top_k, threshold=threshold)
+    return "wand", wand_topk(spark, index_dir,
+                             [(int(r["qid"]), r["text"]) for r in head],
+                             top_k=top_k, threshold=threshold)

@@ -23,6 +23,10 @@ bound falls below the running k-th best score minus the rounding guard —
 identical results to exhaustive scoring (reference semantics,
 ``sparse_retriever.py:78-96``), without decoding cold blocks.
 
+No caller picks the algorithm: block-max pruning runs only where it can
+skip work (``top_k > 0`` and >= 2 live terms); every other query, and any
+untargeted batch of >= 64, takes the one exhaustive scorer, ``_taat_shared``.
+
 The same kernel serves boolean-AND retrieval (``mode="and"``,
 index/phrase.py): per shard it intersects the query terms' decoded lists
 instead of pruning, through the same routes (``shard_topk``).
@@ -62,7 +66,7 @@ def _score_shard(
     qplan: dict[int, list[tuple[int, float]]],
     top_k: int,
     threshold: float,
-    mode: str,
+    mode: str = "or",
     target_docs: np.ndarray | None = None,
     weight_bits: int = 32,
     block_size: int = 128,
@@ -76,9 +80,12 @@ def _score_shard(
     a full-corpus result. ``excluded_docs`` (sorted int64) removes docs at
     decode time — the tombstone-delete read path (index/tombstones.py).
 
-    ``mode="and"`` is boolean-AND retrieval (index/phrase.py): a query
-    matches only docs holding ALL its plan terms, minus docs holding any
-    ``banned_tids`` term (whose rows pdf must also carry)."""
+    ``mode="or"`` (default) is disjunctive BM25: ``_bmw`` for a query with
+    ``top_k > 0`` and >= 2 live terms, ``_taat_shared`` otherwise and for
+    batches of >= 64 queries without ``target_docs``. ``mode="and"`` is
+    boolean-AND retrieval (index/phrase.py): a query matches only docs
+    holding ALL its plan terms, minus docs holding any ``banned_tids`` term
+    (whose rows pdf must also carry)."""
     rows: dict[int, list] = {}
     for r in pdf.itertuples(index=False):
         rows.setdefault(int(r.term_id), []).append(r)
@@ -134,14 +141,14 @@ def _score_shard(
 
     def per_query():
         for qid, tlist in qplan.items():
-            terms = [(qtf, *decoded[tid]) for tid, qtf in tlist
-                     if tid in decoded]
-            if not terms:
-                continue
-            if mode == "taat" or len(terms) == 1:
-                yield (qid, *_taat(terms))
+            live = [(tid, qtf) for tid, qtf in tlist if tid in decoded]
+            if top_k and top_k > 0 and len(live) >= 2:
+                # a cut exists and more than one list: blocks can be pruned
+                yield (qid, *_bmw([(qtf, *decoded[tid]) for tid, qtf in live],
+                                  top_k))
             else:
-                yield (qid, *_bmw(terms, top_k))
+                yield from _taat_shared({tid: decoded[tid] for tid, _ in live},
+                                        {qid: live})
 
     return _cut_rounded_topk(per_query(), top_k, threshold)
 
@@ -174,16 +181,17 @@ def _cut_rounded_topk(scored, top_k: int, threshold: float) -> pd.DataFrame:
 
 
 def _taat_shared(decoded, qplan):
-    """Exact batch scorer with shared per-term structure (semantics
-    identical to _taat per query; exercised vs the per-query route in
-    tests/test_wand_kernel.py). Yields (qid, docs, scores).
+    """The exhaustive scorer: every doc holding a query term, exactly
+    scored (checked against ``_bmw`` in tests/test_wand_kernel.py).
+    Yields (qid, docs, scores). Scores are Σ qtf * w summed in plan-term
+    order from 0.0.
 
     Per shard: map every decoded posting's doc id to a local dense index
     ONCE per term (searchsorted against the union doc list), then each
     query is a scatter-add into a reusable accumulator + a gather of its
     touched slots — O(matched postings) per query with no per-query
     concat/unique over raw ids. This is what makes 10^3-10^4-query batches
-    CPU-cheap; the per-query block-max path remains for interactive use."""
+    CPU-cheap; a single query is the same call with a one-query plan."""
     if not decoded:
         return
     all_docs = np.unique(np.concatenate([d[0] for d in decoded.values()]))
@@ -214,8 +222,8 @@ def _and_scores(decoded, qplan, banned_tids):
     """Boolean-AND scorer. Yields (qid, docs, scores) for the docs of the
     shard that hold every plan term of the query and no banned term.
     Scores are Σ qtf * w summed in plan-term order from 0.0, the order
-    _taat's bincount adds in, so an AND score equals the disjunctive
-    routes' score for the same (query, doc) bit for bit."""
+    _taat_shared adds in, so an AND score equals the disjunctive routes'
+    score for the same (query, doc) bit for bit."""
     banned = [decoded[t][0] for t in banned_tids or () if t in decoded]
     banned = np.concatenate(banned) if banned else None
     for qid, tlist in qplan.items():
@@ -239,23 +247,13 @@ def _and_scores(decoded, qplan, banned_tids):
         yield qid, docs, scores
 
 
-def _taat(terms) -> tuple[np.ndarray, np.ndarray]:
-    """Exhaustive vectorized term-at-a-time scoring (parity baseline)."""
-    all_docs = np.concatenate([t[1] for t in terms])
-    all_w = np.concatenate([
-        t[2].astype(np.float64) * float(t[0]) for t in terms
-    ])
-    docs, inv = np.unique(all_docs, return_inverse=True)
-    scores = np.bincount(inv, weights=all_w)
-    return docs, scores
-
-
 def _bmw(terms, top_k: int) -> tuple[np.ndarray, np.ndarray]:
     """Block-max pruned document-at-a-time scoring over elementary intervals.
 
     Exact: intervals partition doc-id space; a doc's full score lives in one
     interval. Pruning skips intervals whose summed block-max bound cannot
-    reach the current k-th best score (minus the rounding guard)."""
+    reach the current k-th best score (minus the rounding guard), so it
+    needs ``top_k > 0``; ``_score_shard`` sends ``top_k=0`` elsewhere."""
     # elementary interval boundaries = union of all terms' block last-docs
     uppers = np.unique(np.concatenate([t[3] for t in terms]))  # sorted
     n_int = uppers.size
@@ -276,11 +274,9 @@ def _bmw(terms, top_k: int) -> tuple[np.ndarray, np.ndarray]:
     cand_scores: list[np.ndarray] = []
     heap: list[float] = []  # min-heap of top_k scores seen
     kth = -np.inf
-    if not top_k or top_k <= 0:
-        top_k = 0
     lowers = np.concatenate(([np.int64(-1)], uppers[:-1]))
     for ii in order:
-        if top_k and len(heap) >= top_k and ub[ii] < kth - _GUARD:
+        if len(heap) >= top_k and ub[ii] < kth - _GUARD:
             break
         lo, hi = int(lowers[ii]), int(uppers[ii])
         seg_docs = []
@@ -299,14 +295,13 @@ def _bmw(terms, top_k: int) -> tuple[np.ndarray, np.ndarray]:
         s = np.bincount(inv, weights=w)
         cand_docs.append(u)
         cand_scores.append(s)
-        if top_k:
-            for val in s:
-                if len(heap) < top_k:
-                    heapq.heappush(heap, float(val))
-                elif val > heap[0]:
-                    heapq.heapreplace(heap, float(val))
-            if len(heap) >= top_k:
-                kth = heap[0]
+        for val in s:
+            if len(heap) < top_k:
+                heapq.heappush(heap, float(val))
+            elif val > heap[0]:
+                heapq.heapreplace(heap, float(val))
+        if len(heap) >= top_k:
+            kth = heap[0]
     if not cand_docs:
         return np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64)
     return np.concatenate(cand_docs), np.concatenate(cand_scores)
@@ -383,7 +378,7 @@ def resolve_term_ids(
         man = IndexManifest.load(index_dir)
     # resolve the terms dir from the manifest directly (terms_path() would
     # re-read manifest.json on every call)
-    tdir = os.path.join(index_dir, getattr(man, "terms_dir", "terms"))
+    tdir = os.path.join(index_dir, man.terms_dir)
     key = (index_dir, os.path.getmtime(tdir))
     # evict keys of superseded terms-dir versions for this index: each
     # append/compaction changes the key, and a long-running server would
@@ -429,7 +424,7 @@ def score_local(
     *,
     top_k: int,
     threshold: float,
-    mode: str = "bmw",
+    mode: str = "or",
     target_docs: np.ndarray | None = None,
     excluded_docs: np.ndarray | None = None,
     banned_tids: list[int] | None = None,
@@ -450,7 +445,8 @@ def score_local(
     bytes, independent of corpus partitions — the same reason a serving
     layer reads an index directly instead of launching a job. No
     SparkSession is needed, so a serving process runs it without a JVM
-    (bench_extra.py serve)."""
+    (bench_extra.py serve). ``mode``: ``"or"``/``"and"``, as in
+    ``_score_shard``."""
     import pyarrow as pa
     import pyarrow.dataset as pds
 
@@ -516,7 +512,7 @@ def shard_topk(
     *,
     top_k: int,
     threshold: float = 0.0,
-    mode: str = "bmw",
+    mode: str = "or",
     local: str = "auto",
     target_docs: np.ndarray | None = None,
     banned_tids: list[int] | None = None,
@@ -555,7 +551,7 @@ def shard_hits(
     *,
     top_k: int,
     threshold: float = 0.0,
-    mode: str = "bmw",
+    mode: str = "or",
     target_docs: np.ndarray | None = None,
     banned_tids: list[int] | None = None,
 ) -> DataFrame:
@@ -606,13 +602,13 @@ def wand_topk(
     queries: list[tuple[int, str]] | None = None,
     top_k: int = 10,
     threshold: float = 0.0,
-    mode: str = "bmw",
     target_doc_ids: list[int] | None = None,
     query_weights: list[tuple[int, dict[str, float]]] | None = None,
     local: str = "auto",
 ) -> DataFrame:
     """-> DataFrame(qid, rank, doc_id, score) — rank-identical to the exact
-    SQL path (plans/bm25_sql.score_bm25) on the same corpus.
+    SQL path (plans/bm25_sql.score_bm25) on the same corpus. The kernel
+    chooses its own scorer (``_score_shard``); there is no algorithm option.
 
     Sizing note: the query plan (qid -> [(term_id, qtf)]) is shipped inside
     the kernel closure, so this path is for *interactive/batch* query sets up
@@ -631,5 +627,4 @@ def wand_topk(
     target = (np.unique(np.asarray(target_doc_ids, dtype=np.int64))
               if target_doc_ids is not None else None)
     return shard_topk(spark, index_dir, qplan, top_k=top_k,
-                      threshold=threshold, mode=mode, local=local,
-                      target_docs=target)
+                      threshold=threshold, local=local, target_docs=target)

@@ -34,13 +34,17 @@ def spread_input(df: DataFrame, min_parts: int | None = None) -> DataFrame:
     current plan yields fewer partitions; identity otherwise.
 
     The partition probe (``df.rdd.getNumPartitions()``) plans the query but
-    executes nothing — driver-side milliseconds for the scan-shaped inputs
-    this guards. Callers sit directly on top of a source scan; do not wrap
-    already-shuffled intermediates (their width is the shuffle's business).
+    executes nothing for the scan-shaped inputs this guards — driver-side
+    milliseconds. On a plan that already holds an exchange the probe would
+    run the stages below it (AQE materializes them to plan the rest), so
+    such an input is returned unchanged without probing: its width is the
+    shuffle's business.
     """
     sc = df.sparkSession.sparkContext
     target = int(min_parts or sc.defaultParallelism)
     if target <= 1:
+        return df
+    if "Exchange" in df._jdf.queryExecution().executedPlan().toString():
         return df
     try:
         n = df.rdd.getNumPartitions()

@@ -49,13 +49,6 @@ from light_splade_spark.index.build import (
 from light_splade_spark.index.manifest import IndexManifest
 from light_splade_spark.plans.bm25_sql import bm25_impact_col
 
-# Query batches above this size route to the distributed join scorer
-# instead of collecting to the driver for the WAND kernel (the join
-# route's advantage is flat driver memory — BENCH/BASELINE.md §0-r5).
-# Shared with jobs/query_job.py's --route auto so the two guards cannot
-# drift.
-JOIN_ROUTE_THRESHOLD = 50_000
-
 
 def append_batch(spark: SparkSession, index_dir: str, docs: DataFrame,
                  batch_id: str, id_col: str = "doc_id",
@@ -91,7 +84,7 @@ def append_batch(spark: SparkSession, index_dir: str, docs: DataFrame,
         raise ValueError(
             "cannot append text to an impact-scored index: rebuild it with "
             "build_index(weights_df=...) over the full corpus")
-    if f"append-{batch_id}" in getattr(man, "retired_groups", []):
+    if f"append-{batch_id}" in man.retired_groups:
         # this batch registered on a previous attempt and a compaction has
         # since folded it into the compact group — every doc is already
         # served from there. Re-running the append would double-count the
@@ -117,7 +110,7 @@ def append_batch(spark: SparkSession, index_dir: str, docs: DataFrame,
         resolve_analyzer(man.analyzer_version, index_dir)).cache()
     dt = _explode_expansion(per_doc)
 
-    start_terms_rel = getattr(man, "terms_dir", "terms")
+    start_terms_rel = man.terms_dir
     terms_path = os.path.join(index_dir, start_terms_rel)
     batch_terms = dt.groupBy("term").agg(F.count(F.lit(1)).alias("bdf"))
 
@@ -169,7 +162,7 @@ def append_batch(spark: SparkSession, index_dir: str, docs: DataFrame,
     man = IndexManifest.load(index_dir)
     if man.live_groups is not None:
         group = f"append-{batch_id}"
-        if group in getattr(man, "retired_groups", []):
+        if group in man.retired_groups:
             # a compaction absorbed a previous attempt's registration while
             # this retry was re-writing the group dir: the batch is already
             # live inside the compact group. Registering the rewrite would
@@ -183,7 +176,7 @@ def append_batch(spark: SparkSession, index_dir: str, docs: DataFrame,
     # written to the OLD dir at the top of this function) — re-append
     # whatever the current dim is missing. Idempotent: left-anti against
     # the live dim; a no-op in the single-writer case.
-    cur_terms_rel = getattr(man, "terms_dir", "terms")
+    cur_terms_rel = man.terms_dir
     if cur_terms_rel != start_terms_rel:
         cur_path = os.path.join(index_dir, cur_terms_rel)
         missing = _terms_missing_from(spark.read.parquet(cur_path))
@@ -200,8 +193,7 @@ def append_batch(spark: SparkSession, index_dir: str, docs: DataFrame,
 
 def stream_queries(spark: SparkSession, index_dir: str, stream: DataFrame,
                    output_dir: str, checkpoint_dir: str, top_k: int = 10,
-                   threshold: float = 0.0, mode: str = "bmw",
-                   join_route_threshold: int = JOIN_ROUTE_THRESHOLD):
+                   threshold: float = 0.0):
     """Streaming query evaluation: a stream of (qid, text) rows is evaluated
     against the index per micro-batch, results appended as parquet.
     ``Trigger.AvailableNow`` + checkpoint → each query batch is answered
@@ -209,31 +201,19 @@ def stream_queries(spark: SparkSession, index_dir: str, stream: DataFrame,
     a sink that needs arbitrary DataFrame plans (joins against static
     postings).
 
-    Route guard (ADVICE r4): batches up to ``join_route_threshold`` queries
-    take the WAND kernel (collects the query texts to the driver — the
-    documented <=10^5 sizing of that route); larger batches stay fully
-    distributed through ``score_index_join`` (query side shuffles on
-    term_id, never collected), which is rank-identical to WAND on the same
-    index. A huge streamed batch therefore degrades to a bigger join, not
-    a driver OOM."""
-    from light_splade_spark.index.join_scorer import score_index_join
-    from light_splade_spark.index.wand import wand_topk
+    Route guard (ADVICE r4): each micro-batch goes through
+    ``join_scorer.score_query_frame``, the same rule as ``jobs/query_job.py
+    --route auto``. Batches up to ``JOIN_ROUTE_THRESHOLD`` queries take the
+    WAND kernel (collects the query texts to the driver — the documented
+    <=10^5 sizing of that route); larger batches stay fully distributed
+    through ``score_index_join`` (query side shuffles on term_id, never
+    collected), which is rank-identical to WAND on the same index. A huge
+    streamed batch therefore degrades to a bigger join, not a driver OOM."""
+    from light_splade_spark.index.join_scorer import score_query_frame
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        # one action decides the route AND collects the small case: take()
-        # of threshold+1 rows either proves the batch is big (rows beyond
-        # the threshold exist) or IS the full batch the wand route needs
-        head = batch_df.take(join_route_threshold + 1)
-        if not head:
-            return
-        if len(head) > join_route_threshold:
-            out = score_index_join(spark, index_dir,
-                                   batch_df.select("qid", "text"),
-                                   top_k=top_k, threshold=threshold)
-        else:
-            qs = [(int(r["qid"]), r["text"]) for r in head]
-            out = wand_topk(spark, index_dir, qs, top_k=top_k,
-                            threshold=threshold, mode=mode)
+        _, out = score_query_frame(spark, index_dir, batch_df, top_k=top_k,
+                                   threshold=threshold)
         (out.withColumn("batch_id", F.lit(batch_id))
          .write.mode("append").parquet(output_dir))
 

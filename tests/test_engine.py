@@ -183,7 +183,7 @@ def test_stream_queries(spark, docs, tmp_path_factory):
 
 def test_stream_queries_big_batch_takes_join_route(spark, docs, monkeypatch,
                                                    tmp_path_factory):
-    """Batches above join_route_threshold must go through the fully
+    """Batches above JOIN_ROUTE_THRESHOLD must go through the fully
     distributed score_index_join (no driver collect of query texts) and
     still produce WAND-rank-identical results; small batches keep the WAND
     kernel (ADVICE r4 streaming guard)."""
@@ -209,10 +209,10 @@ def test_stream_queries_big_batch_takes_join_route(spark, docs, monkeypatch,
         '{"qid": 1, "text": "spark join"}\n{"qid": 2, "text": "merge"}\n'
         '{"qid": 3, "text": "shuffle"}')
     # threshold=2 < 3 queries -> join route
+    monkeypatch.setattr(join_scorer, "JOIN_ROUTE_THRESHOLD", 2)
     q = stream_queries(spark, d, spark.readStream
                        .schema("qid BIGINT, text STRING").json(str(src)),
-                       str(base / "out"), str(base / "ckpt"), top_k=5,
-                       join_route_threshold=2)
+                       str(base / "out"), str(base / "ckpt"), top_k=5)
     q.awaitTermination(120)
     assert calls == ["join"]
     got = spark.read.parquet(str(base / "out"))
@@ -221,9 +221,9 @@ def test_stream_queries_big_batch_takes_join_route(spark, docs, monkeypatch,
     assert [r["doc_id"] for r in stream_rows] == [r["doc_id"] for r in batch]
     # same batch below the threshold -> wand route
     calls.clear()
+    monkeypatch.setattr(join_scorer, "JOIN_ROUTE_THRESHOLD", 50)
     q2 = stream_queries(spark, d, spark.readStream
                         .schema("qid BIGINT, text STRING").json(str(src)),
-                        str(base / "out2"), str(base / "ckpt2"), top_k=5,
-                        join_route_threshold=50)
+                        str(base / "out2"), str(base / "ckpt2"), top_k=5)
     q2.awaitTermination(120)
     assert calls == ["wand"]

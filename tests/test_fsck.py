@@ -49,6 +49,15 @@ def test_lifecycle_index_ok(spark, idx):
     assert rep["ok"], rep["findings"]
 
 
+def test_missing_doc_stats_is_error(spark, idx):
+    # every build writes doc_stats before it commits "complete"
+    shutil.rmtree(os.path.join(idx, "doc_stats"))
+    rep = fsck_index(spark, idx, sample_terms=8)
+    assert not rep["ok"]
+    assert [f["severity"] for f in rep["findings"]
+            if f["check"] == "doc_stats"] == ["error"]
+
+
 def test_interrupted_build_flagged(spark, idx):
     man = IndexManifest.load(idx)
     man.status = "building"

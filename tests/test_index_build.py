@@ -64,6 +64,30 @@ def test_resume_after_crash_is_byte_identical(spark, docs, tmp_path):
         assert _index_fingerprint(spark, d1) == _index_fingerprint(spark, d2)
 
 
+def test_resume_rewrites_doc_stats(spark, docs, tmp_path):
+    """A resume writes doc_stats like a fresh build does: a hard kill can
+    leave it missing or partial, and the resumed manifest says
+    "complete"."""
+    import shutil
+
+    from light_splade_spark.index.fsck import fsck_index
+
+    def doc_stats(d):
+        return sorted(tuple(r) for r in spark.read.parquet(
+            os.path.join(d, "doc_stats")).select("doc_id", "dl").collect())
+
+    ref, d = str(tmp_path / "ref"), str(tmp_path / "killed")
+    kw = dict(n_shards=4, n_buckets=8, n_salts=4, n_shard_groups=4,
+              run_size=100)
+    build_index(spark, docs, ref, **kw)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        build_index(spark, docs, d, fail_after_group=0, **kw)
+    shutil.rmtree(os.path.join(d, "doc_stats"))
+    assert build_index(spark, docs, d, resume=True, **kw).status == "complete"
+    assert doc_stats(d) == doc_stats(ref)
+    assert fsck_index(spark, d, sample_terms=8)["ok"]
+
+
 def _posting_rows(spark, d):
     """Every posting row's content, without the shard_group it sits in."""
     rows = read_postings(spark, d).select(

@@ -41,6 +41,18 @@ def test_spread_identity_when_well_partitioned(spark):
     assert spread_input(wider) is wider
 
 
+def test_spread_runs_no_job_on_a_shuffled_input(spark, spark_jobs):
+    # probing the partition count of a plan with an exchange would run the
+    # stages below it; the guard leaves such an input alone, job-free
+    from pyspark.sql import functions as F
+
+    derived = spark.range(10000).groupBy(
+        (F.col("id") % 7).alias("k")).count()
+    out, jobs = spark_jobs(lambda: spread_input(derived))
+    assert jobs == []
+    assert out is derived
+
+
 def test_spread_results_identical_through_an_operator(spark, docs):
     from light_splade_spark.operators import dedup
 

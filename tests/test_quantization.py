@@ -62,11 +62,12 @@ def test_quantized_scores_close_and_ranking_faithful(spark, idx32, idx8):
 
 
 def test_quantized_bmw_equals_quantized_taat(spark, idx8):
-    """Pruning must stay exact relative to the quantized weights."""
-    a = (wand_topk(spark, idx8, DOCUMENTS_QUERY_SET, top_k=10, mode="bmw")
+    """Pruning must stay exact relative to the quantized weights: the
+    pruned top-10 equals the exhaustive (top_k=0) ranking cut at 10."""
+    a = (wand_topk(spark, idx8, DOCUMENTS_QUERY_SET, top_k=10)
          .orderBy("qid", "rank").collect())
-    b = (wand_topk(spark, idx8, DOCUMENTS_QUERY_SET, top_k=10, mode="taat")
-         .orderBy("qid", "rank").collect())
+    b = (wand_topk(spark, idx8, DOCUMENTS_QUERY_SET, top_k=0)
+         .where("rank <= 10").orderBy("qid", "rank").collect())
     assert [(r["qid"], r["rank"], r["doc_id"]) for r in a] == \
            [(r["qid"], r["rank"], r["doc_id"]) for r in b]
 

@@ -83,9 +83,9 @@ def test_exclude_cli_and_flag_rejections(spark, setup, monkeypatch, capsys):
         ["x", "--index-dir", idx, "--queries", qpath, "--output", "o",
          "--exclude", "spark"],                        # exclude w/o AND
         ["x", "--index-dir", idx, "--queries", qpath, "--output", "o",
-         "--require-all-terms", "--mode", "taat"],     # AND + mode
+         "--require-all-terms", "--route", "wand"],    # AND + route
         ["x", "--index-dir", idx, "--queries", qpath, "--output", "o",
-         "--route", "join", "--mode", "bmw"],          # join + mode
+         "--require-all-terms", "--threshold", "1"],   # AND + threshold
     ):
         monkeypatch.setattr(sys, "argv", argv)
         with pytest.raises(SystemExit) as e:

@@ -48,11 +48,13 @@ def test_sql_path_matches_numpy_oracle(sql_result, corpus):
     assert (got["score"] - exp["score"]).abs().max() < 1e-9
 
 
-@pytest.mark.parametrize("mode", ["taat", "bmw"])
-def test_wand_rank_identical_to_sql(spark, index_dir, sql_result, mode):
+# top_k=0 (every hit) takes the exhaustive scorer, cut here at rank TOP_K;
+# top_k=TOP_K takes block-max pruning
+@pytest.mark.parametrize("top_k", [0, TOP_K], ids=["taat", "bmw"])
+def test_wand_rank_identical_to_sql(spark, index_dir, sql_result, top_k):
     got = (
-        wand_topk(spark, index_dir, DOCUMENTS_QUERY_SET, top_k=TOP_K, mode=mode)
-        .orderBy("qid", "rank").toPandas()
+        wand_topk(spark, index_dir, DOCUMENTS_QUERY_SET, top_k=top_k)
+        .where(f"rank <= {TOP_K}").orderBy("qid", "rank").toPandas()
     )
     exp = sql_result.reset_index(drop=True)
     assert got["qid"].tolist() == exp["qid"].tolist()

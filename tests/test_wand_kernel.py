@@ -1,14 +1,22 @@
 """Pure-numpy property tests: BMW interval pruning is EXACT — identical
-results to exhaustive TAAT on randomized posting structures (no Spark)."""
+results to the exhaustive scorer on randomized posting structures (no
+Spark)."""
 
 import string
 
 import numpy as np
+import pandas as pd
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
-from light_splade_spark.index.wand import _TERMS_CACHE, _bmw, _taat
+from light_splade_spark.index.build import _encode_groups, _merge_groups
+from light_splade_spark.index.wand import (
+    _TERMS_CACHE,
+    _bmw,
+    _score_shard,
+    _taat_shared,
+)
 
 
 def _mk_term(rng, n_docs_universe: int, df: int, block: int = 16):
@@ -21,12 +29,21 @@ def _mk_term(rng, n_docs_universe: int, df: int, block: int = 16):
     return (qtf, docs, ws, bm_last, bm_max)
 
 
+def _exhaustive(terms):
+    """``_taat_shared`` on a one-query plan over ``terms`` (term id = list
+    position) -> (docs, scores)."""
+    decoded = {tid: t[1:] for tid, t in enumerate(terms)}
+    plan = {0: [(tid, t[0]) for tid, t in enumerate(terms)]}
+    (_, docs, scores), = _taat_shared(decoded, plan)
+    return docs, scores
+
+
 @given(st.integers(0, 10_000), st.integers(1, 6), st.integers(1, 20))
 @settings(max_examples=60, deadline=None)
 def test_bmw_equals_taat_topk(seed, n_terms, top_k):
     rng = np.random.default_rng(seed)
     terms = [_mk_term(rng, 2000, int(rng.integers(1, 400))) for _ in range(n_terms)]
-    d_t, s_t = _taat(terms)
+    d_t, s_t = _exhaustive(terms)
     d_b, s_b = _bmw(terms, top_k)
     # exhaustive maps for comparison
     full = dict(zip(d_t.tolist(), s_t.tolist()))
@@ -46,11 +63,22 @@ def test_bmw_equals_taat_topk(seed, n_terms, top_k):
 
 
 def test_bmw_topk_zero_means_exhaustive():
+    """``top_k=0`` asks for every hit, which block-max pruning cannot cut:
+    the kernel scores such a query exhaustively, every doc of the union
+    with the exhaustive scorer's exact score."""
     rng = np.random.default_rng(1)
     terms = [_mk_term(rng, 500, 120), _mk_term(rng, 500, 60)]
-    d_t, s_t = _taat(terms)
-    d_b, s_b = _bmw(terms, 0)
-    assert dict(zip(d_b.tolist(), s_b.tolist())) == dict(zip(d_t.tolist(), s_t.tolist()))
+    pdf = _merge_groups(pd.concat([_encode_groups(pd.DataFrame({
+        "shard": 0, "bucket": 0, "salt": 0, "term_id": tid,
+        "doc_id": t[1], "w": t[2]}), block_size=16)
+        for tid, t in enumerate(terms)], ignore_index=True))
+    plan = {0: [(tid, t[0]) for tid, t in enumerate(terms)]}
+    out = _score_shard(pdf, qplan=plan, top_k=0, threshold=0.0,
+                       block_size=16)
+    d_t, s_t = _exhaustive(terms)
+    assert dict(zip(out.doc_id.tolist(), out.score.tolist())) == \
+        dict(zip(d_t.tolist(), s_t.tolist()))
+    assert set(d_t.tolist()) == set(terms[0][1]) | set(terms[1][1])
 
 
 def test_batch_shared_scorer_matches_per_query_route(spark, tmp_path):
@@ -81,8 +109,9 @@ def test_local_point_path_identical_to_distributed(spark, spark_jobs,
     """The driver-local point-query path (pyarrow filtered read + the same
     shard kernel, index/wand.py:score_local) must return byte-identical
     (qid, rank, doc_id, score) to the distributed plan — including the
-    HALF_UP rounding F.round applies — across k, thresholds, modes, and an
-    appended shard group (multi-row-per-term merge)."""
+    HALF_UP rounding F.round applies — across k (0 included, the
+    exhaustive scorer), thresholds, and an appended shard group
+    (multi-row-per-term merge)."""
     from light_splade_spark.index.build import build_index
     from light_splade_spark.index.wand import wand_topk
     from light_splade_spark.streaming.incremental import append_batch
@@ -97,14 +126,15 @@ def test_local_point_path_identical_to_distributed(spark, spark_jobs,
     append_batch(spark, idx, extra, "p1")
     qs = [(0, "data search quality"), (1, "the index model"),
           (2, "zzznonexistent"), (3, "train text web learn")]
-    for k, thr, mode in ((5, 0.0, "bmw"), (3, 1.0, "bmw"), (7, 0.0, "taat")):
+    # top_k=0 scores every query exhaustively; the others prune
+    for k, thr in ((5, 0.0), (3, 1.0), (0, 1.0)):
         dist = [(r.qid, r.rank, r.doc_id, r.score) for r in
-                wand_topk(spark, idx, qs, top_k=k, threshold=thr, mode=mode,
+                wand_topk(spark, idx, qs, top_k=k, threshold=thr,
                           local="never").orderBy("qid", "rank").collect()]
         loc = [(r.qid, r.rank, r.doc_id, r.score) for r in
-               wand_topk(spark, idx, qs, top_k=k, threshold=thr, mode=mode,
+               wand_topk(spark, idx, qs, top_k=k, threshold=thr,
                          local="force").orderBy("qid", "rank").collect()]
-        assert dist == loc and len(loc) > 0, (k, thr, mode)
+        assert dist == loc and len(loc) > 0, (k, thr)
     # auto: 4 queries with finite k -> local, on a cold term cache: no
     # Spark job runs (planning and scoring are both driver-side)
     _TERMS_CACHE.clear()

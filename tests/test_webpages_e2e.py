@@ -29,7 +29,7 @@ def test_webpages_extract_index_query_parity(spark, tmp_path, seed):
 
     queries = make_queries(spark, corpus_vocab_size=800, n_queries=30,
                            seed=seed + 1)
-    got = (wand_topk(spark, d, queries, top_k=10, mode="bmw")
+    got = (wand_topk(spark, d, queries, top_k=10)
            .orderBy("qid", "rank").toPandas())
     corpus = {r["doc_id"]: r["text"] for r in docs.collect()}
     exp = pd.DataFrame(oracle_topk(corpus, queries, top_k=10),

@@ -199,7 +199,7 @@ def run_query(cores: str) -> dict:
                f"t{(7 * i) % 30000:05d} t{(13 * i) % 30000:05d} "
                f"t{(29 * i) % 30000:05d} t{(41 * i) % 30000:05d}")
               for i in range(nq)]
-        wand_topk(spark, idx, qs, top_k=10, mode="bmw") \
+        wand_topk(spark, idx, qs, top_k=10) \
             .write.format("noop").mode("overwrite").save()
 
     batch(0, warm_q)
