@@ -52,7 +52,7 @@ def _serve_worker(idx: str, n_queries: int) -> None:
                                      (29 * i) % 30000)) for i in range(200)]
 
     def run(qid, text):
-        qplan, _, _ = build_query_plan(None, idx, [(qid, text)])
+        qplan = build_query_plan(None, idx, [(qid, text)])
         return score_local(idx, qplan, man, top_k=10, threshold=0.0,
                            excluded_docs=excluded)
 

@@ -135,7 +135,7 @@ def main() -> None:
     )
     print(json.dumps({"status": man.status, "n_docs": man.n_docs,
                       "avgdl": man.avgdl, "n_shards": man.n_shards,
-                      "completed_groups": man.completed_groups}))
+                      "live_groups": man.live_groups}))
     spark.stop()
 
 

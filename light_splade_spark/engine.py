@@ -23,7 +23,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from light_splade_spark.index.build import build_index, read_postings, read_terms
-from light_splade_spark.index.manifest import IndexManifest, read_lineage
+from light_splade_spark.index.manifest import (
+    IndexManifest,
+    physical_groups,
+    read_lineage,
+)
 from light_splade_spark.index.wand import wand_topk
 from light_splade_spark.operators.metrics import ranking_metrics
 
@@ -59,27 +63,18 @@ class Engine:
         """Operational snapshot of the index's LSM state: manifest scalars,
         live posting groups (and any orphan dirs awaiting GC), terms-dim
         pointer, pending tombstone count. Valid on an incomplete index too
-        (status says so; groups may be empty)."""
-        import os
-
-        from light_splade_spark.index.compact import live_group_names
+        (status says so; live groups are the committed ones)."""
         from light_splade_spark.index.tombstones import load_tombstone_ids
 
         man = IndexManifest.load(self.index_dir)
-        pdir = os.path.join(self.index_dir, "postings")
-        on_disk = (sorted(d.split("=", 1)[1] for d in os.listdir(pdir)
-                          if d.startswith("shard_group="))
-                   if os.path.isdir(pdir) else [])
-        live = (live_group_names(self.index_dir, man)
-                if os.path.isdir(pdir) or man.live_groups is not None
-                else [])
         tombs = load_tombstone_ids(self.index_dir)
         return {
             "status": man.status, "n_docs": man.n_docs,
             "analyzer_version": man.analyzer_version,
             "scoring": man.scoring, "weight_bits": man.weight_bits,
-            "live_groups": list(live),
-            "orphan_groups": [g for g in on_disk if g not in set(live)],
+            "live_groups": man.live_groups,
+            "orphan_groups": [g for g in physical_groups(self.index_dir)
+                              if g not in man.live_groups],
             "terms_dir": man.terms_dir,
             "compact_epoch": man.compact_epoch,
             "pending_tombstones": int(tombs.size) if tombs is not None else 0,
@@ -177,8 +172,6 @@ class Engine:
         every result row survives; an id absent from the map (never
         possible for a map written by the build that produced the ids)
         would surface as url NULL rather than a dropped hit."""
-        import os
-
         mp_dir = os.path.join(self.index_dir, "docid_map")
         if not os.path.isdir(mp_dir):
             raise FileNotFoundError(

@@ -57,7 +57,11 @@ from light_splade_spark.functions.vbyte import (
     decode_run,
     vbyte_encode,
 )
-from light_splade_spark.index.manifest import IndexManifest, write_lineage
+from light_splade_spark.index.manifest import (
+    IndexManifest,
+    group_dir,
+    write_lineage,
+)
 from light_splade_spark.partitioning import spread_input
 from light_splade_spark.plans.bm25_sql import B, K1, bm25_impact_col, idf_col
 
@@ -558,19 +562,18 @@ def build_index(
         shard = _shard_col(n_shards)
         shards_per_group = (n_shards + n_groups - 1) // n_groups
         for group in range(n_groups):
-            if group in man.completed_groups:
-                continue
+            if str(group) in man.live_groups:
+                continue  # committed before a crash: a resume skips it
             lo = group * shards_per_group
             hi = min((group + 1) * shards_per_group, n_shards)
+            # a group past the last shard holds nothing and is never listed
             if lo < hi:
                 write_posting_group(
                     posts.where((shard >= lo) & (shard < hi)),
-                    os.path.join(index_dir, "postings",
-                                 f"shard_group={group}"),
-                    man, n_docs=scalars["n_docs"],
+                    index_dir, str(group), man, n_docs=scalars["n_docs"],
                     max_doc=scalars["max_doc"], t0=time.time())
-            man.completed_groups.append(group)
-            man.save(index_dir)
+                man.live_groups.append(str(group))
+                man.save(index_dir)
             if fail_after_group is not None and group >= fail_after_group:
                 raise RuntimeError(
                     f"simulated crash after shard group {group}")
@@ -587,10 +590,6 @@ def build_index(
         # failure as a build failure exactly as the serial form did
         doc_stats_future.result()
     man.status = "complete"
-    # initial live set = the groups this build wrote (LSM liveness;
-    # index/compact.py). Empty groups never wrote a dir — harmless either
-    # way, the liveness filter is an allow-list over partition values.
-    man.live_groups = [str(g) for g in sorted(man.completed_groups)]
     man.save(index_dir)
     if weights_df is None:
         # the expansion parquet was a build-time intermediate only
@@ -607,11 +606,11 @@ def _shard_col(n_shards: int):
     return F.pmod(F.xxhash64("doc_id"), F.lit(n_shards)).cast("int")
 
 
-def write_posting_group(posts: DataFrame, out_dir: str, man: IndexManifest,
-                        *, n_docs: int, max_doc: int, t0: float,
-                        **lineage_extra) -> None:
-    """Encode ``posts`` (doc_id, term_id, w, df) into the posting group at
-    ``out_dir`` (``<index>/postings/shard_group=<name>``) and record its
+def write_posting_group(posts: DataFrame, index_dir: str, group: str,
+                        man: IndexManifest, *, n_docs: int, max_doc: int,
+                        t0: float, **lineage_extra) -> None:
+    """Encode ``posts`` (doc_id, term_id, w, df) into posting group
+    ``group`` of the index at ``index_dir`` and record its
     per-(shard, bucket) lineage — the one posting writer that build, append
     and compact share, under the manifest's layout knobs.
 
@@ -664,6 +663,7 @@ def write_posting_group(posts: DataFrame, out_dir: str, man: IndexManifest,
     # must LEAD with the partitionBy column: the write requires an ordering
     # on bucket, and a local sort that does not start with it is replaced
     # by a plain sort on bucket, losing the term order
+    out_dir = group_dir(index_dir, group)
     (final.repartition(man.n_buckets, "bucket")
      .sortWithinPartitions("bucket", "term_id", "shard")
      .write.mode("overwrite").partitionBy("bucket").parquet(out_dir))
@@ -673,8 +673,7 @@ def write_posting_group(posts: DataFrame, out_dir: str, man: IndexManifest,
     written = posts.sparkSession.read.schema(POSTING_SCHEMA).parquet(out_dir)
     lineage = collect_partition_lineage(written, t0, man.analyzer_version,
                                         **lineage_extra)
-    write_lineage(os.path.dirname(os.path.dirname(out_dir)),
-                  os.path.basename(out_dir).split("=", 1)[1], lineage)
+    write_lineage(index_dir, group, lineage)
 
 
 def collect_partition_lineage(written: DataFrame, t0: float,
@@ -710,21 +709,18 @@ def read_postings(spark: SparkSession, index_dir: str,
           .schema(POSTING_SCHEMA + ", shard_group STRING")
           .option("basePath", os.path.join(index_dir, "postings"))
           .parquet(os.path.join(index_dir, "postings")))
-    # LSM liveness (index/compact.py): a manifest carrying live_groups
-    # restricts readers to those shard_group partitions, which is what
-    # makes the compactor's manifest write an atomic commit (orphan dirs
-    # from a crashed GC are invisible). Partition pruning still applies:
+    # LSM liveness (index/compact.py): readers see only the manifest's
+    # live_groups partitions, which is what makes a group commit and the
+    # compactor's manifest write atomic (a half-written group or an orphan
+    # dir from a crashed GC is invisible). Partition pruning still applies:
     # shard_group is a partition column, so the isin is a directory filter.
-    # ``live_groups`` overrides the manifest's set — the compactor passes
-    # its decode snapshot here so the groups it folds and the groups it
-    # later subtracts from the commit are THE SAME list by construction.
-    if live_groups is None:
-        man = IndexManifest.load(index_dir)
-        live_groups = man.live_groups
-    if live_groups is not None:
-        df = df.where(F.col("shard_group").cast("string")
-                      .isin([str(g) for g in live_groups]))
-    return df
+    # A given ``live_groups`` overrides the manifest's set — the compactor
+    # passes its decode snapshot here so the groups it folds and the groups
+    # it later subtracts from the commit are THE SAME list by construction.
+    # (An empty override reads the manifest's set, which a snapshot without
+    # groups also held: a complete index always has a live group.)
+    live = live_groups or IndexManifest.load(index_dir).live_groups
+    return df.where(F.col("shard_group").isin(live))
 
 
 def scan_term_postings(spark: SparkSession, index_dir: str,

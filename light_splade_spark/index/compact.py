@@ -2,7 +2,7 @@
 posting row per (shard, bucket, term), with a crash-safe atomic commit.
 
 Why it exists at 100 TB: every streaming append (streaming/incremental.py)
-adds an immutable ``shard_group=append-*`` directory — the design that
+adds an immutable ``append-*`` posting group — the design that
 makes ingest idempotent and resumable — but each append adds one more
 posting row per touched (shard, term) that the query kernel must
 merge-sort at read time, and one more small-file layer per bucket. After
@@ -17,7 +17,7 @@ decoded rows):
    to (term_id, doc_id, w) — distributed, Arrow-batched;
 2. ``write_posting_group`` (index/build.py), the one posting writer build
    and append also use, re-encodes them under the manifest's own layout
-   into ``postings/shard_group=compact-<epoch>`` and records its lineage;
+   into the posting group ``compact-<epoch>`` and records its lineage;
 3. **commit = one atomic manifest write**: ``live_groups`` flips to the
    new group (IndexManifest.save is tmp+os.replace). Readers
    (read_postings and the wand local path) filter partitions to
@@ -48,18 +48,11 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from light_splade_spark.index.build import read_terms, write_posting_group
-from light_splade_spark.index.manifest import IndexManifest
-
-
-def live_group_names(index_dir: str, man: IndexManifest) -> list[str]:
-    """The effective live set: the manifest's list when present, else every
-    physical ``shard_group=*`` directory (legacy indexes)."""
-    if man.live_groups is not None:
-        return list(man.live_groups)
-    pdir = os.path.join(index_dir, "postings")
-    return sorted(
-        d.split("=", 1)[1] for d in os.listdir(pdir)
-        if d.startswith("shard_group="))
+from light_splade_spark.index.manifest import (
+    IndexManifest,
+    group_dir,
+    physical_groups,
+)
 
 
 def compact_index(spark: SparkSession, index_dir: str, gc: bool = True,
@@ -103,7 +96,7 @@ def compact_index(spark: SparkSession, index_dir: str, gc: bool = True,
     # the decode snapshot: the EXACT group list the decode reads (passed
     # explicitly so decode cannot re-load a fresher manifest and fold in
     # a group this commit would then double-count as a survivor)
-    decoded_groups = live_group_names(index_dir, man)
+    decoded_groups = man.live_groups
 
     from light_splade_spark.index.join_scorer import decode_postings
     decoded = decode_postings(spark, index_dir, live_groups=decoded_groups)
@@ -121,10 +114,8 @@ def compact_index(spark: SparkSession, index_dir: str, gc: bool = True,
     tdf = F.broadcast(read_terms(spark, index_dir).select("term_id", "df"))
     posts = decoded.join(tdf, "term_id", "left").select(
         "doc_id", "term_id", "w", F.coalesce("df", F.lit(1)).alias("df"))
-    write_posting_group(
-        posts, os.path.join(index_dir, "postings", f"shard_group={group}"),
-        man, n_docs=n_docs, max_doc=max_doc, t0=t0,
-        compacted_from=decoded_groups)
+    write_posting_group(posts, index_dir, group, man, n_docs=n_docs,
+                        max_doc=max_doc, t0=t0, compacted_from=decoded_groups)
 
     # terms-dim rewrite: appends accumulate one small parquet file per
     # batch on the terms dir; fold them into one coalesced dir (content
@@ -150,7 +141,7 @@ def compact_index(spark: SparkSession, index_dir: str, gc: bool = True,
     # terms coalesce so its appended term rows reach the new terms dir.
     man = IndexManifest.load(index_dir)
     decoded_set = set(decoded_groups)
-    survivors = [g for g in live_group_names(index_dir, man)
+    survivors = [g for g in man.live_groups
                  if g not in decoded_set and g != group]
     if survivors:
         (spark.read.parquet(os.path.join(index_dir, old_terms))
@@ -193,27 +184,25 @@ def gc_postings(index_dir: str, man: IndexManifest | None = None,
     an append's group dir in the write→register gap (it exists on disk
     before it appears in live_groups; an ungraced sweep racing that gap
     would delete postings the append is about to commit). Crashed-append
-    orphans — never registered — are swept once they age past the grace."""
+    orphans — never registered — are swept once they age past the grace.
+    An unfinished build is left alone: its group being written is not yet
+    live, and a resume overwrites it."""
     if man is None:
         man = IndexManifest.load(index_dir)
-    if man.live_groups is None:
-        return []  # legacy index: everything is live
+    if man.status != "complete":
+        return []
     live = set(man.live_groups)
     dead = dead or set()
     now = time.time()
-    pdir = os.path.join(index_dir, "postings")
     removed = []
     def _rm(path: str, name: str) -> None:
         shutil.rmtree(path, ignore_errors=True)
         if not os.path.exists(path):  # only report deletions that happened
             removed.append(name)
-    for d in sorted(os.listdir(pdir)):
-        if not d.startswith("shard_group="):
-            continue
-        name = d.split("=", 1)[1]
+    for name in physical_groups(index_dir):
         if name in live:
             continue
-        path = os.path.join(pdir, d)
+        path = group_dir(index_dir, name)
         try:
             fresh = (now - os.path.getmtime(path)) < grace_sec
         except OSError:

@@ -54,7 +54,11 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from light_splade_spark.index.build import read_postings
-from light_splade_spark.index.manifest import CorruptIndexError, IndexManifest
+from light_splade_spark.index.manifest import (
+    CorruptIndexError,
+    IndexManifest,
+    physical_groups,
+)
 
 
 def _finding(sev: str, check: str, detail: str) -> dict:
@@ -85,12 +89,8 @@ def fsck_index(spark: SparkSession, index_dir: str,
             f"resume it or rebuild)"))
 
     # -- liveness bookkeeping ------------------------------------------------
-    pdir = os.path.join(index_dir, "postings")
-    physical = sorted(
-        d.split("=", 1)[1] for d in os.listdir(pdir)
-        if d.startswith("shard_group=")) if os.path.isdir(pdir) else []
-    live = ([str(g) for g in man.live_groups]
-            if man.live_groups is not None else physical)
+    physical = physical_groups(index_dir)
+    live = man.live_groups
     stats["live_groups"] = len(live)
     stats["physical_groups"] = len(physical)
     for g in live:
@@ -99,7 +99,7 @@ def fsck_index(spark: SparkSession, index_dir: str,
                 "error", "liveness",
                 f"live group {g!r} has no partition dir under postings/ "
                 f"(lost data or a foreign manifest)"))
-    both = sorted(set(live) & {str(g) for g in man.retired_groups})
+    both = sorted(set(live) & set(man.retired_groups))
     if both:
         findings.append(_finding(
             "error", "liveness",

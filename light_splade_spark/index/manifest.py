@@ -12,10 +12,12 @@ and checkpoint resume. Design: the index lives in a directory
       postings/shard_group=G/...    # bucket-partitioned parquet per group
       _lineage/group=G.json         # per-shard-group lineage + metrics rows
 
-Shard groups are the resume unit: a group's postings write is atomic from the
-manifest's point of view (lineage JSON written only after the parquet commit).
-``resume=True`` skips completed groups, so a killed build continues where it
-stopped and produces a byte-identical index (tested in tests/test_index_build).
+Shard groups are the resume unit and the read unit: a group becomes visible
+only when its name is appended to ``live_groups``, after its parquet and
+lineage are written. ``resume=True`` skips the live groups, so a killed build
+continues where it stopped and produces a byte-identical index (tested in
+tests/test_index_build), and until then readers see exactly the committed
+groups, never a half-written one.
 """
 
 from __future__ import annotations
@@ -52,14 +54,12 @@ class IndexManifest:
     # "bm25": impacts = idf * saturated tf; "impact": impacts are encoder
     # weights passed via build_index(weights_df=...) (SPLADE-style scoring)
     scoring: str = "bm25"
-    completed_groups: list[int] = field(default_factory=list)
     status: str = "building"
     created_unix: float = 0.0
     # LSM liveness (index/compact.py): the shard_group partition values
-    # readers may see. None = legacy index, every physical dir is live.
-    # Maintained by build completion, append_batch, and compact_index;
-    # flipping it is the compactor's atomic commit.
-    live_groups: list[str] | None = None
+    # readers may see. Appended to as each build group commits and by
+    # append_batch; replacing it is the compactor's atomic commit.
+    live_groups: list[str] = field(default_factory=list)
     compact_epoch: int = 0
     # groups a compaction has folded into its compact group (cumulative,
     # capped). A foreachBatch RETRY of an append that registered and then
@@ -103,7 +103,21 @@ class IndexManifest:
                 f"manifest schema ({e}); rebuild the index") from e
 
 
-def write_lineage(index_dir: str, group: int, rows: list[dict]) -> None:
+def group_dir(index_dir: str, name: str) -> str:
+    """Directory of the posting group ``name`` (a shard_group partition)."""
+    return os.path.join(index_dir, "postings", f"shard_group={name}")
+
+
+def physical_groups(index_dir: str) -> list[str]:
+    """Names of every posting group directory on disk, live or not."""
+    pdir = os.path.join(index_dir, "postings")
+    if not os.path.isdir(pdir):
+        return []
+    return sorted(d.split("=", 1)[1] for d in os.listdir(pdir)
+                  if d.startswith("shard_group="))
+
+
+def write_lineage(index_dir: str, group: str, rows: list[dict]) -> None:
     """One lineage/metrics record per (shard, bucket) partition in the group:
     posting rows, postings bytes, docs covered, max df, wall seconds."""
     d = os.path.join(index_dir, "_lineage")

@@ -67,7 +67,7 @@ def _and_plan(spark: SparkSession, index_dir: str,
     the index makes a full match impossible, so its query has no
     candidates (build_query_plan drops absent terms, so compare against
     the analyzer's distinct-term count)."""
-    qplan, _, _ = build_query_plan(spark, index_dir, queries)
+    qplan = build_query_plan(spark, index_dir, queries)
     need = {qid: len(set(ana.py_tokenize(text))) for qid, text in queries}
     return {qid: lst for qid, lst in qplan.items()
             if len(lst) == need.get(qid)}

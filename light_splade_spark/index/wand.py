@@ -317,9 +317,9 @@ def build_query_plan(
     spark: SparkSession | None, index_dir: str,
     queries: list[tuple[int, str]] | None = None,
     query_weights: list[tuple[int, dict[str, float]]] | None = None,
-) -> tuple[dict[int, list[tuple[int, float]]], list[int], list[int]]:
-    """-> (qid -> [(term_id, qweight)], term_ids, buckets). Runs no Spark
-    job (``spark`` is unused, kept for API compatibility).
+) -> dict[int, list[tuple[int, float]]]:
+    """-> qid -> [(term_id, qweight)]. Runs no Spark job (``spark`` is
+    unused, kept for API compatibility).
 
     ``queries`` = (qid, text) pairs tokenized with the index's pinned
     analyzer, weight = term frequency (BM25 scoring). ``query_weights`` =
@@ -355,9 +355,7 @@ def build_query_plan(
         lst = [(tmap[t], c) for t, c in sorted(counts.items()) if t in tmap]
         if lst:
             qplan[qid] = lst
-    tids = sorted({tid for lst in qplan.values() for tid, _ in lst})
-    buckets = sorted({tid % man.n_buckets for tid in tids})
-    return qplan, tids, buckets
+    return qplan
 
 
 def resolve_term_ids(
@@ -463,13 +461,11 @@ def score_local(
     # a fully-tombstoned index compacted to an empty group has no parquet
     # fragments at all -> empty result, not a schema error
     if data.files:
-        flt = (pds.field("bucket").isin(buckets)
+        # LSM liveness (index/compact.py) — same allow-list the
+        # distributed read_postings applies
+        flt = (pds.field("shard_group").isin(man.live_groups)
+               & pds.field("bucket").isin(buckets)
                & pds.field("term_id").isin(tids))
-        if man.live_groups is not None:
-            # LSM liveness (index/compact.py) — same allow-list the
-            # distributed read_postings applies
-            flt = flt & pds.field("shard_group").isin(
-                [str(g) for g in man.live_groups])
         pdf = data.to_table(
             filter=flt,
             columns=["shard", "term_id", "postings", "bm_last", "bm_max"],
@@ -623,7 +619,7 @@ def wand_topk(
     same kernel — no Spark job, ~10x lower latency; "never" forces the
     distributed plan; "force" demands the local path (raises if the index
     dir is not a local filesystem path)."""
-    qplan, _, _ = build_query_plan(spark, index_dir, queries, query_weights)
+    qplan = build_query_plan(spark, index_dir, queries, query_weights)
     target = (np.unique(np.asarray(target_doc_ids, dtype=np.int64))
               if target_doc_ids is not None else None)
     return shard_topk(spark, index_dir, qplan, top_k=top_k,

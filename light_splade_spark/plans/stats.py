@@ -75,16 +75,6 @@ def term_stats(doc_terms_df: DataFrame) -> DataFrame:
     return with_dense_id(ts, [F.desc("df"), F.asc("term")], "term_id")
 
 
-def corpus_scalars(doc_terms_df: DataFrame) -> tuple[int, float]:
-    """(N, avgdl) — corpus size and average document length."""
-    row = (
-        doc_terms_df.groupBy("doc_id").agg(F.first("dl").alias("dl"))
-        .agg(F.count(F.lit(1)).alias("n"), F.avg("dl").alias("avgdl"))
-        .collect()[0]
-    )
-    return int(row["n"]), float(row["avgdl"])
-
-
 def index_stats(doc_terms_df: DataFrame, sample_docs: int = 20000,
                 top_n: int = 20) -> dict:
     """Reference index statistics (``sparse_indexer.py:173-198``):

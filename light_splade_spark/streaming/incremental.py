@@ -6,7 +6,7 @@ old row in place as a "zombie" (``sparse_indexer.py:99-101``). We mirror that
 contract exactly:
 
 * ``append_batch`` builds postings for the new docs only and writes them as a
-  NEW ``shard_group=append-...`` directory — existing groups are immutable
+  NEW ``append-<batch_id>`` posting group — existing groups are immutable
   (idempotent partition writes, the checkpoint-resume property holds). It
   runs the build's own steps (index/build.py) on the batch: the analyzer
   comes from ``resolve_analyzer``, tokens from ``per_doc_expansion`` (whose
@@ -46,7 +46,7 @@ from light_splade_spark.index.build import (
     terms_dim,
     write_posting_group,
 )
-from light_splade_spark.index.manifest import IndexManifest
+from light_splade_spark.index.manifest import IndexManifest, group_dir
 from light_splade_spark.plans.bm25_sql import bm25_impact_col
 
 
@@ -84,7 +84,8 @@ def append_batch(spark: SparkSession, index_dir: str, docs: DataFrame,
         raise ValueError(
             "cannot append text to an impact-scored index: rebuild it with "
             "build_index(weights_df=...) over the full corpus")
-    if f"append-{batch_id}" in man.retired_groups:
+    group = f"append-{batch_id}"
+    if group in man.retired_groups:
         # this batch registered on a previous attempt and a compaction has
         # since folded it into the compact group — every doc is already
         # served from there. Re-running the append would double-count the
@@ -142,8 +143,7 @@ def append_batch(spark: SparkSession, index_dir: str, docs: DataFrame,
         .select("doc_id", "term_id", bm25_impact_col(man.avgdl).alias("w"),
                 F.col("bdf").alias("df"))
     )
-    out_dir = os.path.join(index_dir, "postings", f"shard_group=append-{batch_id}")
-    write_posting_group(posts, out_dir, man, n_docs=batch_n,
+    write_posting_group(posts, index_dir, group, man, n_docs=batch_n,
                         max_doc=max_doc_b, t0=t0, append_batch=batch_id)
     per_doc.select("doc_id", "dl").write.mode("append") \
         .parquet(os.path.join(index_dir, "doc_stats"))
@@ -152,25 +152,22 @@ def append_batch(spark: SparkSession, index_dir: str, docs: DataFrame,
         # as live — where a racing compaction's commit + GC would land
         _pre_register_hook()
     # register the new group as live (LSM liveness, index/compact.py);
-    # set-union keeps foreachBatch retries idempotent. Legacy indexes
-    # (live_groups=None) stay legacy: all physical dirs remain live.
+    # set-union keeps foreachBatch retries idempotent.
     # RE-LOAD the manifest first: a compaction that committed while this
     # append ran flipped live_groups/terms_dir, and saving the stale copy
     # loaded at function start would resurrect GC'd groups and drop the
     # compact pointer (the single-writer contract makes this impossible
     # when followed; the reload makes the accidental overlap non-fatal).
     man = IndexManifest.load(index_dir)
-    if man.live_groups is not None:
-        group = f"append-{batch_id}"
-        if group in man.retired_groups:
-            # a compaction absorbed a previous attempt's registration while
-            # this retry was re-writing the group dir: the batch is already
-            # live inside the compact group. Registering the rewrite would
-            # double-count it — drop the dir instead.
-            shutil.rmtree(out_dir, ignore_errors=True)
-        elif group not in man.live_groups:
-            man.live_groups = [*man.live_groups, group]
-            man.save(index_dir)
+    if group in man.retired_groups:
+        # a compaction absorbed a previous attempt's registration while
+        # this retry was re-writing the group dir: the batch is already
+        # live inside the compact group. Registering the rewrite would
+        # double-count it — drop the dir instead.
+        shutil.rmtree(group_dir(index_dir, group), ignore_errors=True)
+    elif group not in man.live_groups:
+        man.live_groups.append(group)
+        man.save(index_dir)
     # if a compaction flipped the terms-dim pointer while this append ran,
     # its terms_v<epoch> coalesce may predate our new-term rows (they were
     # written to the OLD dir at the top of this function) — re-append
@@ -234,8 +231,6 @@ def stream_append(spark: SparkSession, index_dir: str, stream: DataFrame,
     drains what exists, then stops — rerun to pick up new files)."""
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
         append_batch(spark, index_dir, batch_df, str(batch_id),
                      id_col=id_col, text_col=text_col)
 

@@ -1,11 +1,13 @@
 from __future__ import annotations
 
+import os
 import sys
 import uuid
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+# the checkout this conftest sits in, so each checkout tests its own library
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from light_splade_spark.session import get_spark  # noqa: E402
 

@@ -10,11 +10,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from light_splade_spark.index.build import build_index, read_postings
-from light_splade_spark.index.compact import (
-    compact_index,
-    gc_postings,
-    live_group_names,
-)
+from light_splade_spark.index.compact import compact_index, gc_postings
 from light_splade_spark.index.manifest import IndexManifest
 from light_splade_spark.index.wand import wand_topk
 from light_splade_spark.streaming.incremental import append_batch

@@ -30,7 +30,7 @@ def test_build_completes_with_lineage(spark, docs, tmp_path):
     man = build_index(spark, docs, d, n_shards=4, n_buckets=8, n_salts=4,
                       n_shard_groups=2, run_size=100)
     assert man.status == "complete"
-    assert sorted(man.completed_groups) == [0, 1]
+    assert man.live_groups == ["0", "1"]
     lineage = read_lineage(d)
     assert len(lineage) == 2
     parts = [p for g in lineage for p in g["partitions"]]
@@ -55,7 +55,7 @@ def test_resume_after_crash_is_byte_identical(spark, docs, tmp_path):
                         n_shard_groups=4, run_size=100, fail_after_group=1)
         man = IndexManifest.load(d2)
         assert man.status == "building"
-        assert sorted(man.completed_groups) == [0, 1]
+        assert man.live_groups == ["0", "1"]
         man2 = build_index(spark, docs, d2, n_shards=4, n_buckets=8,
                            n_salts=4, n_shard_groups=resume_groups,
                            run_size=100, resume=True)
@@ -86,6 +86,56 @@ def test_resume_rewrites_doc_stats(spark, docs, tmp_path):
     assert build_index(spark, docs, d, resume=True, **kw).status == "complete"
     assert doc_stats(d) == doc_stats(ref)
     assert fsck_index(spark, d, sample_terms=8)["ok"]
+
+
+def test_killed_build_serves_only_committed_groups(spark, docs, tmp_path):
+    """A build killed after group 0 serves exactly group 0. Group 1's dir,
+    planted half-written (one bucket of a finished build's group 1), is
+    invisible to both read routes, is an orphan in ``Engine.info()``,
+    survives ``gc_postings``, and a resume still ends byte-identical to an
+    uninterrupted build."""
+    import shutil
+
+    from light_splade_spark.engine import Engine
+    from light_splade_spark.index.build import _shard_col, read_terms
+    from light_splade_spark.index.compact import gc_postings
+    from light_splade_spark.index.manifest import group_dir
+    from light_splade_spark.index.wand import wand_topk
+
+    def rows(d, groups=None):
+        return sorted(tuple(r) for r in read_postings(spark, d, groups)
+                      .select("shard", "term_id", "df", F.hex("postings"))
+                      .collect())
+
+    ref, d = str(tmp_path / "ref"), str(tmp_path / "killed")
+    kw = dict(n_shards=4, n_buckets=8, n_salts=4, n_shard_groups=4,
+              run_size=100)
+    build_index(spark, docs, ref, **kw)
+    with pytest.raises(RuntimeError, match="simulated crash"):
+        build_index(spark, docs, d, fail_after_group=0, **kw)
+    shutil.copytree(os.path.join(group_dir(ref, "1"), "bucket=0"),
+                    os.path.join(group_dir(d, "1"), "bucket=0"))
+
+    assert rows(d) == rows(ref, ["0"])
+    # query the planted bucket's terms: every hit is a group-0 (shard 0) doc
+    planted = {r.term_id for r in read_postings(spark, ref, ["1"])
+               .where("bucket = 0").select("term_id").collect()}
+    terms = sorted(r.term for r in read_terms(spark, ref)
+                   .where(F.col("term_id").isin(sorted(planted)))
+                   .select("term").collect())[:20]
+    hits = {r.doc_id for r in wand_topk(
+        spark, d, [(i, t) for i, t in enumerate(terms)], top_k=1000,
+        local="force").collect()}
+    shard0 = {r.doc_id for r in docs.where(_shard_col(4) == 0)
+              .select("doc_id").collect()}
+    assert hits and hits <= shard0
+    info = Engine(spark, d).info()
+    assert info["live_groups"] == ["0"] and info["orphan_groups"] == ["1"]
+    assert gc_postings(d, grace_sec=0.0) == []
+    assert os.path.isdir(group_dir(d, "1"))
+
+    build_index(spark, docs, d, resume=True, **kw)
+    assert _index_fingerprint(spark, d) == _index_fingerprint(spark, ref)
 
 
 def _posting_rows(spark, d):
@@ -154,7 +204,7 @@ def test_crash_leaves_no_doc_stats_writer_running(spark, docs, tmp_path,
 
     def group0_committed():
         try:
-            return 0 in IndexManifest.load(d).completed_groups
+            return "0" in IndexManifest.load(d).live_groups
         except FileNotFoundError:  # writer starts before the manifest
             return False
 

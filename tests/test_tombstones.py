@@ -7,6 +7,7 @@ from __future__ import annotations
 import os
 
 import pyarrow.dataset as pds
+import pytest
 
 from pyspark.sql import functions as F
 
@@ -223,6 +224,52 @@ def test_compact_mid_append_gc_grace_protects_group(spark, tmp_path):
              wand_topk(spark, idx, [(9, "qqgraceterm")], top_k=0,
                        local="never").collect()}
     assert novel == set(range(150, 170))
+
+
+def test_append_killed_before_registration_is_invisible_until_rerun(
+        spark, tmp_path):
+    """An append killed between its group write and its registration
+    leaves the group unlisted: both routes keep the pre-append results,
+    fsck passes and reports the dir only as GC backlog, and re-running the
+    batch id registers the group, matching an uninterrupted append."""
+    from light_splade_spark.index.fsck import fsck_index
+    from light_splade_spark.index.manifest import IndexManifest, group_dir
+    from light_splade_spark.streaming.incremental import append_batch
+
+    alldocs = spark.read.parquet("/root/testdata/sf0.01/documents.parquet")
+    docs = alldocs.where(F.col("doc_id") < 150)
+    app = alldocs.where((F.col("doc_id") >= 150) & (F.col("doc_id") < 170))
+    ref, idx = str(tmp_path / "ref"), str(tmp_path / "killed")
+    for d in (ref, idx):
+        Engine.build(spark, docs, d, n_shards=2, n_buckets=4,
+                     n_salts=2, n_shard_groups=1)
+    routes = ("never", "force")
+
+    def results(d):
+        return [_hits(spark, d, local=r, k=1000) for r in routes]
+
+    before = results(idx)
+
+    def kill():
+        raise RuntimeError("killed before registration")
+
+    with pytest.raises(RuntimeError, match="killed before registration"):
+        append_batch(spark, idx, app, "k1", _pre_register_hook=kill)
+    assert os.path.isdir(group_dir(idx, "append-k1"))
+    assert IndexManifest.load(idx).live_groups == ["0"]
+    assert results(idx) == before
+    report = fsck_index(spark, idx, sample_terms=8)
+    assert report["ok"]
+    assert [(f["severity"], f["check"]) for f in report["findings"]] \
+        == [("warn", "liveness")]
+    assert "append-k1" in report["findings"][0]["detail"]
+
+    append_batch(spark, idx, app, "k1")
+    append_batch(spark, ref, app, "k1")
+    assert IndexManifest.load(idx).live_groups == ["0", "append-k1"]
+    after = results(ref)
+    assert after != before
+    assert results(idx) == after
 
 
 def test_empty_append_batch_is_noop(spark, tmp_path):

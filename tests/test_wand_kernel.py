@@ -296,9 +296,9 @@ def test_build_query_plan_runs_no_spark_job(spark, spark_jobs, tmp_path,
     queries = [(i, " ".join([vocab[i % len(vocab)]] + _ABSENT[i::30]))
                for i in range(30)]
     _TERMS_CACHE.clear()
-    (qplan, tids, _), jobs = spark_jobs(
-        lambda: build_query_plan(spark, idx, queries))
+    qplan, jobs = spark_jobs(lambda: build_query_plan(spark, idx, queries))
     assert jobs == []
+    tids = {tid for lst in qplan.values() for tid, _ in lst}
     assert len(qplan) == 30 and len(tids) == min(30, len(vocab))
     assert sum(len(c) for c in _TERMS_CACHE.values()) > 256
     _, jobs = spark_jobs(lambda: spark.range(3).collect())

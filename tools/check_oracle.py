@@ -4,12 +4,14 @@ width, and order-insensitive values. Usage: python tools/check_oracle.py
 [sf_dir] [only_query ...]
 """
 
+import os
 import sys
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+# the checkout this tool sits in, so each checkout checks its own library
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import __spark_entry__ as entrymod  # noqa: E402
 from light_splade_spark.session import get_spark  # noqa: E402
 
