@@ -35,6 +35,17 @@ def test_clean_index_ok(spark, idx):
     assert rep["stats"]["doc_stats_rows"] == len(CORPUS)
 
 
+def test_groups_past_the_last_shard_are_not_listed(spark, tmp_path):
+    """More groups than shards: the trailing groups hold no shard, write no
+    dir and are not listed live, so fsck finds nothing."""
+    docs = spark.createDataFrame(CORPUS, "doc_id BIGINT, text STRING")
+    d = str(tmp_path / "few_shards")
+    Engine.build(spark, docs, d, n_shards=2, n_buckets=4, n_shard_groups=4)
+    assert IndexManifest.load(d).live_groups == ["0", "1"]
+    rep = fsck_index(spark, d, sample_terms=8)
+    assert rep["ok"] and rep["findings"] == [], rep["findings"]
+
+
 def test_lifecycle_index_ok(spark, idx):
     """fsck stays green across append + delete + compact."""
     eng = Engine.open(spark, idx)
